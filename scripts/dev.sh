@@ -1,5 +1,11 @@
 #!/bin/bash
-# Ad-hoc runner for graft.Dev (schema/explain/run). Usage: scripts/dev.sh run v_knn /root/testdata/sf0.001
+# Runner for graft.Dev, whose five verbs take SparkEntry.queries keys:
+#   scripts/dev.sh schema <sfDir>
+#   scripts/dev.sh explain <key> <sfDir>
+#   scripts/dev.sh run <key> <sfDir>
+#   scripts/dev.sh prof <key[,key...]> <sfDir> [iters]
+#   scripts/dev.sh scaleprobe <sfDir> [factors] [key...]
+# e.g. scripts/dev.sh prof q1_pricing,v_knn <sfDir> 3
 set -e
 cd /root/repo
 sbt -batch compile -error >/dev/null

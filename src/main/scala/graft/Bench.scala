@@ -14,28 +14,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = Local.cpus
+    val spark = Local.session("ERROR")
 
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
 
-    // Evaluate the query AS DECLARED: df.count() plans a NEW aggregate
-    // over the logical plan, letting Catalyst prune every computed column
-    // a narrow query doesn't need for counting — projection-only queries
-    // then "benchmark" an empty scan (discovered when a query that
-    // count()-timed at 0.4 s took minutes under the correctness gate's
-    // full materialization). toRdd executes the declared physical plan,
-    // all columns, no driver-side collect.
     def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
             dir: String): Unit =
-      fn(spark, dir).queryExecution.toRdd.foreach(_ => ())
+      Local.evaluate(fn(spark, dir))
 
     // Untimed warmup at the smallest SF (JIT, codegen cache, IO paths).
     ordered.foreach { case (name, fn) =>

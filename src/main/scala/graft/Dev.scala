@@ -2,933 +2,229 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Ad-hoc dev REPL-substitute: `Dev <what> [args...]`.
-  *   schema <sfDir>            — print schema+sample of every fixture table
-  *   explain <queryName> <sfDir> — formatted physical plan of a declared query
-  *   run <queryName> <sfDir>   — run + show a declared query
+/** Dev tooling over the query registry: `Dev <verb> [args...]`, where
+  * every `<key>` is a `SparkEntry.queries` key.
+  *   schema <sfDir>                      — schema + 3 rows of every fixture table
+  *   explain <key> <sfDir>               — formatted physical plan of a key
+  *   run <key> <sfDir>                   — evaluate a key and show 50 rows
+  *   prof <key[,key...]> <sfDir> [iters] — per-iteration `Profile` of each key
+  *   scaleprobe <sfDir> [factors] [key...] — cold + warm `Profile` of each
+  *                                         key on 1×/10×/100× blow-ups
   */
 object Dev {
-  /** The dedup_embed pipeline with pluggable LSH geometry + super-bucket
-    * cap — the §8.5b probe's scaled-geometry twin. */
-  private def embedNearDupProbe(s: SparkSession, d: String,
-                                planes: Seq[Seq[Double]], bands: Int,
-                                cap: Int): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    val emb = Tables.load(s, d, "embeddings")
-    val banded = emb.select(col("vec_id"),
-      posexplode(graft.operators.Ann.lshBandBuckets(
-        col("embedding"), planes, bands)).as(Seq("band", "bits")))
-    graft.operators.Dedup.bandedPairs(banded, Seq("band", "bits"),
-        "vec_id", Some(cap))
-      .join(emb.select(col("vec_id").as("doc_a"),
-        col("embedding").as("va")), "doc_a")
-      .join(emb.select(col("vec_id").as("doc_b"),
-        col("embedding").as("vb")), "doc_b")
-      .withColumn("score",
-        graft.functions.VectorOps.cosine(col("va"), col("vb")))
-      .orderBy(desc("score"), col("doc_a"), col("doc_b"))
-      .limit(20)
+  private val Usage =
+    """usage: graft.Dev <verb> [args...]   (<key>: a SparkEntry.queries key)
+      |  schema <sfDir>
+      |  explain <key> <sfDir>
+      |  run <key> <sfDir>
+      |  prof <key[,key...]> <sfDir> [iters]       (iters default 2)
+      |  scaleprobe <sfDir> [factors] [key...]     (factors default 1,10,100)""".stripMargin
+
+  /** Keys `scaleprobe` times when none are named: serving, ANN, dedup,
+    * text and kNN-join paths (SURVEY §8.5b). */
+  private val ScaleKeys = Seq(
+    "v_cosine", "v_knn", "v_knn_filtered", "v_prefetch", "v_pq_search",
+    "ann_ivf", "ann_ivf_indexed", "ann_lsh", "ann_graph_search",
+    "dedup_exact", "dedup_minhash", "dedup_simhash", "dedup_embed",
+    "dedup_cluster", "txt_quality", "txt_decontam",
+    "v_knn_join", "v_knn_join_refined")
+
+  def main(args: Array[String]): Unit = {
+    def keys(csv: String): Option[Seq[String]] = {
+      val ks = csv.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
+      Option.when(ks.nonEmpty && ks.forall(Queries.queries.contains))(ks)
+    }
+    def ints(csv: String): Option[Seq[Int]] = {
+      val ns = csv.split(',').toSeq.map(_.trim.toIntOption)
+      Option.when(ns.nonEmpty && ns.forall(_.exists(_ > 0)))(ns.flatten)
+    }
+    // parsed before a session exists, so bad args exit nonzero without
+    // starting Spark
+    val verb: Option[SparkSession => Unit] = args.toList match {
+      case "schema" :: dir :: Nil => Some(schema(_, dir))
+      case "explain" :: key :: dir :: Nil if Queries.queries.contains(key) =>
+        Some(s => Queries.queries(key)(s, dir).explain("formatted"))
+      case "run" :: key :: dir :: Nil if Queries.queries.contains(key) =>
+        Some(s => Queries.queries(key)(s, dir).show(50, truncate = 60))
+      case "prof" :: ks :: dir :: n if n.size <= 1 =>
+        for (k <- keys(ks);
+             i <- n.headOption.fold(Option(2))(_.toIntOption.filter(_ > 0)))
+          yield prof(_, k, dir, i)
+      case "scaleprobe" :: dir :: rest =>
+        for {
+          fs <- rest.headOption.fold(Option(Seq(1, 10, 100)))(ints)
+          k <- if (rest.size > 1) keys(rest.tail.mkString(",")) else Some(ScaleKeys)
+        } yield scaleprobe(_, dir, fs, k)
+      case _ => None
+    }
+    verb match {
+      case None =>
+        System.err.println(Usage)
+        sys.exit(2)
+      case Some(f) =>
+        val spark = Local.session("ERROR")
+        try f(spark) finally spark.stop()
+    }
   }
 
+  private def schema(spark: SparkSession, dir: String): Unit =
+    Tables.all.foreach { t =>
+      println(s"=== $t")
+      val df = Tables.load(spark, dir, t)
+      df.printSchema(); df.show(3, truncate = 60)
+    }
 
-  /** Materialize the deterministic blow-up corpus for `scaleprobe` /
-    * `georouteprobe` at `factor`× of `dir` (shared dir convention —
-    * see the scaleprobe case for the generator-version rules). */
+  private def profile(spark: SparkSession, key: String,
+                      dir: String): Profile.Result =
+    Profile(spark)(Local.evaluate(Queries.queries(key)(spark, dir)))
+
+  private def secs(ms: Long): String = f"${ms / 1e3}%.3f s"
+
+  private def summary(p: Profile.Result): String =
+    s"wall ${secs(p.wallMs)}  jobs ${p.jobs.size}  stages ${p.stages}  " +
+      s"tasks ${p.tasks}  job wall ${secs(p.jobWallMs)}  " +
+      s"driver gap ${secs(p.gapMs)}"
+
+  /** Profile each key `iters` times in one session, in the given order —
+    * the Bench context for a subset. An untimed pass over all keys at
+    * `dir` first pays JIT, codegen and memoized builds; each timed
+    * iteration starts with cold one-slot caches, as in Bench. */
+  private def prof(spark: SparkSession, keys: Seq[String], dir: String,
+                   iters: Int): Unit = {
+    keys.foreach(k => Local.evaluate(Queries.queries(k)(spark, dir)))
+    keys.foreach { k =>
+      val walls = (1 to iters).map { i =>
+        graft.operators.Dedup.releaseCaches()
+        val p = profile(spark, k, dir)
+        println(s"[$k] iter $i  ${summary(p)}")
+        p.jobs.foreach { j =>
+          println(f"    job ${j.id}%4d  ${secs(j.wallMs)}%9s  " +
+            f"stages ${j.stages}%2d  tasks ${j.tasks}%4d")
+        }
+        p.wallMs
+      }
+      println(s"[$k] min ${secs(walls.min)}")
+    }
+  }
+
+  /** 10×/100× blow-up probe (SURVEY §8.5b): materialize `factor`× copies
+    * of `dir` (`blowUpDir`), then profile each key cold (memoized index
+    * builds included) and warm. Factors share one JVM; the closing table
+    * gives the warm-time exponent per decade between the first and last
+    * factor. */
+  private def scaleprobe(spark: SparkSession, dir: String,
+                         factors: Seq[Int], keys: Seq[String]): Unit = {
+    val warm = factors.map { f =>
+      val fdir = blowUpDir(spark, dir, f)
+      println(s"== factor $f: $fdir")
+      f -> keys.map { k =>
+        val cold = profile(spark, k, fdir)
+        val hot = profile(spark, k, fdir)
+        println(s"  [$k] cold ${summary(cold)}")
+        println(s"  [$k] warm ${summary(hot)}")
+        k -> hot.wallMs
+      }.toMap
+    }.toMap
+    println("\nkey, " + factors.map(f => s"warm${f}x").mkString(", ") +
+      ", warm-exp/decade")
+    keys.foreach { k =>
+      val (fa, fb) = (factors.head, factors.last)
+      val exp =
+        if (fa == fb) "n/a"
+        else f"${math.log10(warm(fb)(k).toDouble / warm(fa)(k)) /
+          math.log10(fb.toDouble / fa)}%.2f"
+      println(s"$k, ${factors.map(f => secs(warm(f)(k))).mkString(", ")}, $exp")
+    }
+  }
+
+  /** Materialize the deterministic blow-up corpus for `scaleprobe` at
+    * `factor`× of `dir`, reused across runs (see the generator-version
+    * rule below). */
   private def blowUpDir(spark: SparkSession, dir: String,
                         factor: Int): String = {
     import org.apache.spark.sql.functions._
-        val hash = java.lang.Integer.toHexString(dir.hashCode)
-        // NOT under the `graft_` prefix: Tables.memoTempDir's orphan
-        // sweep reclaims those by pid suffix, and this dir is meant to
-        // be reused across probe runs. The GENERATOR VERSION is part of
-        // the name: reuse is keyed on what produced the data, so a
-        // formula change can never silently serve stale blow-ups (the
-        // period-7 artifact survived one fix exactly this way) — bump
-        // it whenever the perturbation/rotation logic changes
-        val genVersion = "v3"
-        val out = s"${System.getProperty("java.io.tmpdir")}/graft-scale-$genVersion-${factor}x-$hash"
-        val marker = java.nio.file.Paths.get(s"$out/embeddings.parquet/_SUCCESS")
-        if (!java.nio.file.Files.exists(marker)) {
-          // copies must be DISTINCT documents/points, not near-dups of
-          // each other: a blow-up of near-identical copies multiplies
-          // dedup candidate PAIRS quadratically in the copy count (a
-          // duplication-density artifact, measured: dedup_simhash 0.65 s
-          // → 10 s at 10×), drowning the n-scaling signal the probe
-          // exists to read. Copy 0 is byte-identical to the source.
-          val emb = Tables.load(spark, dir, "embeddings")
-          val eOff = emb.agg(max("vec_id")).head().getLong(0) + 1
-          val embBlown = emb
-            .withColumn("c", explode(sequence(lit(0), lit(factor - 1))))
-            .select((col("vec_id") + col("c") * eOff).as("vec_id"),
-              // element-wise multiplier in [0.1, 1.9] pseudo-random per
-              // (copy, dim): copies point in substantially different
-              // directions (cross-copy cosine ~0.8, below near-dup).
-              // The pmod argument mixes c AND c/7 so the pattern does
-              // NOT repeat with period 7 in the copy index (a plain
-              // c·(i+3) term made copies c and c+7 bit-identical —
-              // ~15-point exact-dup vector clusters at 100×, exactly
-              // the duplicate-density artifact this blow-up exists to
-              // avoid; residual collisions at period 49 leave clusters
-              // ≤ 3, matching the text side's rotation classes). Copy 0
-              // stays byte-identical to the source.
-              when(col("c") === 0, col("embedding")).otherwise(
-                transform(col("embedding"),
-                  (x, i) => x * (lit(1.0f) + lit(0.3f) *
-                    (pmod(col("c") * (i + lit(3)) +
-                        floor(col("c") / 7).cast("int") *
-                        (i * 3 + lit(5)), lit(7)) - lit(3))
-                      .cast("float")))
-                  .cast("array<float>")).as("embedding"),
-              col("label"))
-          val docs = Tables.load(spark, dir, "documents")
-          val dOff = docs.agg(max("doc_id")).head().getLong(0) + 1
-          // per-copy ALPHABET ROTATION (translate): most words change,
-          // so shingle/gram/fingerprint features are disjoint across
-          // rotation classes — distinct docs, constant collision
-          // density. (A repeated per-copy filler token was measured to
-          // CORRELATE simhash fingerprints — the filler dominates the
-          // weight vector and every same-copy pair becomes a band
-          // collision: dedup_simhash 0.8 s → 73 s at 10×.) Copies ≥ 26
-          // reuse a rotation and differ only by the tail token —
-          // bounded near-dup clusters (≤ factor/26), realistic and
-          // linear in n.
-          val abc = ('a' to 'z').mkString + ('A' to 'Z').mkString
-          (0 until factor).map { c =>
-            if (c == 0)
-              docs.select(col("doc_id"), col("text"), col("lang"),
-                col("source"))
-            else {
-              val r = c % 26
-              val lower = ('a' to 'z').mkString
-              val upper = ('A' to 'Z').mkString
-              val mapped = lower.drop(r) + lower.take(r) +
-                upper.drop(r) + upper.take(r)
-              docs.select((col("doc_id") + c * dOff).as("doc_id"),
-                concat(translate(col("text"), abc, mapped),
-                  lit(s" x$c")).as("text"),
-                col("lang"), col("source"))
-            }
-          }.reduce(_ unionByName _)
-            .withColumn("n_chars", length(col("text")).cast("long"))
-            .repartition(32)
-            .write.mode("overwrite").parquet(s"$out/documents.parquet")
-          // embeddings LAST: its _SUCCESS is the completion marker, so
-          // it must imply the documents write finished too (a crash
-          // between the two would otherwise leave a half-built dir
-          // every later run trusts)
-          embBlown.repartition(32)
-            .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
+    val hash = java.lang.Integer.toHexString(dir.hashCode)
+    // NOT under the `graft_` prefix: Tables.memoTempDir's orphan
+    // sweep reclaims those by pid suffix, and this dir is meant to
+    // be reused across probe runs. The GENERATOR VERSION is part of
+    // the name: reuse is keyed on what produced the data, so a
+    // formula change can never silently serve stale blow-ups (the
+    // period-7 artifact survived one fix exactly this way) — bump
+    // it whenever the perturbation/rotation logic changes
+    val genVersion = "v3"
+    val out = s"${System.getProperty("java.io.tmpdir")}/graft-scale-$genVersion-${factor}x-$hash"
+    val marker = java.nio.file.Paths.get(s"$out/embeddings.parquet/_SUCCESS")
+    if (!java.nio.file.Files.exists(marker)) {
+      // copies must be DISTINCT documents/points, not near-dups of
+      // each other: a blow-up of near-identical copies multiplies
+      // dedup candidate PAIRS quadratically in the copy count (a
+      // duplication-density artifact, measured: dedup_simhash 0.65 s
+      // → 10 s at 10×), drowning the n-scaling signal the probe
+      // exists to read. Copy 0 is byte-identical to the source.
+      val emb = Tables.load(spark, dir, "embeddings")
+      val eOff = emb.agg(max("vec_id")).head().getLong(0) + 1
+      val embBlown = emb
+        .withColumn("c", explode(sequence(lit(0), lit(factor - 1))))
+        .select((col("vec_id") + col("c") * eOff).as("vec_id"),
+          // element-wise multiplier in [0.1, 1.9] pseudo-random per
+          // (copy, dim): copies point in substantially different
+          // directions (cross-copy cosine ~0.8, below near-dup).
+          // The pmod argument mixes c AND c/7 so the pattern does
+          // NOT repeat with period 7 in the copy index (a plain
+          // c·(i+3) term made copies c and c+7 bit-identical —
+          // ~15-point exact-dup vector clusters at 100×, exactly
+          // the duplicate-density artifact this blow-up exists to
+          // avoid; residual collisions at period 49 leave clusters
+          // ≤ 3, matching the text side's rotation classes). Copy 0
+          // stays byte-identical to the source.
+          when(col("c") === 0, col("embedding")).otherwise(
+            transform(col("embedding"),
+              (x, i) => x * (lit(1.0f) + lit(0.3f) *
+                (pmod(col("c") * (i + lit(3)) +
+                    floor(col("c") / 7).cast("int") *
+                    (i * 3 + lit(5)), lit(7)) - lit(3))
+                  .cast("float")))
+              .cast("array<float>")).as("embedding"),
+          col("label"))
+      val docs = Tables.load(spark, dir, "documents")
+      val dOff = docs.agg(max("doc_id")).head().getLong(0) + 1
+      // per-copy ALPHABET ROTATION (translate): most words change,
+      // so shingle/gram/fingerprint features are disjoint across
+      // rotation classes — distinct docs, constant collision
+      // density. (A repeated per-copy filler token was measured to
+      // CORRELATE simhash fingerprints — the filler dominates the
+      // weight vector and every same-copy pair becomes a band
+      // collision: dedup_simhash 0.8 s → 73 s at 10×.) Copies ≥ 26
+      // reuse a rotation and differ only by the tail token —
+      // bounded near-dup clusters (≤ factor/26), realistic and
+      // linear in n.
+      val abc = ('a' to 'z').mkString + ('A' to 'Z').mkString
+      (0 until factor).map { c =>
+        if (c == 0)
+          docs.select(col("doc_id"), col("text"), col("lang"),
+            col("source"))
+        else {
+          val r = c % 26
+          val lower = ('a' to 'z').mkString
+          val upper = ('A' to 'Z').mkString
+          val mapped = lower.drop(r) + lower.take(r) +
+            upper.drop(r) + upper.take(r)
+          docs.select((col("doc_id") + c * dOff).as("doc_id"),
+            concat(translate(col("text"), abc, mapped),
+              lit(s" x$c")).as("text"),
+            col("lang"), col("source"))
         }
-    out
-  }
-
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    args.toList match {
-      case "schema" :: dir :: Nil =>
-        Tables.all.foreach { t =>
-          println(s"=== $t")
-          val df = Tables.load(spark, dir, t)
-          df.printSchema(); df.show(3, truncate = 60)
-        }
-      case "explain" :: name :: dir :: Nil =>
-        Queries.queries(name)(spark, dir).explain("formatted")
-      case "run" :: name :: dir :: Nil =>
-        Queries.queries(name)(spark, dir).show(50, truncate = 60)
-      case "dump" :: name :: dir :: out :: Nil =>
-        // single-query slice of Verify: result parquet + its oracle SQL,
-        // for scripts/compare_oracle.py without a full-registry run
-        Queries.queries(name)(spark, dir).coalesce(1)
-          .write.mode("overwrite").parquet(s"$out/$name")
-        val sql = Queries.all.find(_.name == name).flatMap(_.oracle)
-        sql.foreach { s0 =>
-          def q(s: String): String = "\"" + s.flatMap {
-            case '"'  => "\\\""
-            case '\\' => "\\\\"
-            case '\n' => "\\n"
-            case '\r' => "\\r"
-            case '\t' => "\\t"
-            case c if c < ' ' => f"\\u${c.toInt}%04x"
-            case c => c.toString
-          } + "\""
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$out/oracle_sql.json"),
-            s"{${q(name)}: ${q(s0)}}")
-        }
-      case "time" :: name :: dir :: n =>
-        val iters = n.headOption.map(_.toInt).getOrElse(3)
-        val fn = Queries.queries(name)
-        // full-plan evaluation, same as Bench: count() plans a fresh
-        // aggregate and Catalyst prunes computed columns — narrow queries
-        // would "time" an empty scan (the exact bug the r4 bench fixed)
-        def eval(dir: String): Unit =
-          fn(spark, dir).queryExecution.toRdd.foreach(_ => ())
-        eval("/root/testdata/sf0.001") // warmup
-        (1 to iters).foreach { i =>
-          // mirror Bench: cold one-slot caches per timed iteration
-          graft.operators.Dedup.releaseCaches()
-          val t0 = System.nanoTime()
-          eval(dir)
-          println(f"[$name] iter $i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        }
-      case "prof" :: name :: dir :: n =>
-        // Job/stage accounting for ONE query (guide §1/§7 without the
-        // UI): warm first, then run `iters` timed passes with a listener
-        // recording per-job wall time, stage count and task count — the
-        // gap between Σ(job wall) and the query wall is driver-side
-        // (planning, AQE re-optimization, collects between jobs).
-        val iters = n.headOption.map(_.toInt).getOrElse(1)
-        val fn = Queries.queries(name)
-        def evalp(d: String): Unit =
-          fn(spark, d).queryExecution.toRdd.foreach(_ => ())
-        evalp("/root/testdata/sf0.001")
-        evalp(dir) // warm at the measured SF too (memo builds)
-        import org.apache.spark.scheduler._
-        val jobs = new java.util.concurrent.ConcurrentHashMap[
-          Int, (Long, Long, Int, Int)]() // id -> (t0, t1, stages, tasks)
-        val tasks = new java.util.concurrent.atomic.AtomicInteger
-        val stageToJob = new java.util.concurrent.ConcurrentHashMap[
-          Int, Int]()
-        val listener = new SparkListener {
-          override def onJobStart(j: SparkListenerJobStart): Unit = {
-            jobs.put(j.jobId, (j.time, 0L, j.stageIds.length, 0))
-            j.stageIds.foreach(s => stageToJob.put(s, j.jobId))
-          }
-          override def onJobEnd(j: SparkListenerJobEnd): Unit = {
-            val v = jobs.get(j.jobId)
-            if (v != null) jobs.put(j.jobId, (v._1, j.time, v._3, v._4))
-          }
-          override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-            tasks.incrementAndGet()
-            // an untracked stage must be skipped, not null-unboxed to job
-            // 0 (entries are only ever added, so the check-then-get is
-            // safe); computeIfPresent keeps concurrent increments atomic
-            if (stageToJob.containsKey(t.stageId)) {
-              jobs.computeIfPresent(stageToJob.get(t.stageId),
-                (_, v) => (v._1, v._2, v._3, v._4 + 1))
-            }
-          }
-        }
-        (1 to iters).foreach { i =>
-          jobs.clear(); tasks.set(0)
-          // mirror Bench: cold one-slot caches per timed iteration
-          graft.operators.Dedup.releaseCaches()
-          spark.sparkContext.addSparkListener(listener)
-          val t0 = System.nanoTime()
-          evalp(dir)
-          val wall = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(200) // drain the async bus BEFORE detaching, or
-          spark.sparkContext.removeSparkListener(listener) // late events drop
-          val js = scala.jdk.CollectionConverters
-            .MapHasAsScala(jobs).asScala.toSeq.sortBy(_._1)
-          val jobWall = js.map { case (_, (a, b, _, _)) =>
-            math.max(0L, b - a) }.sum / 1e3
-          println(f"[$name] iter $i wall $wall%.2f s  jobs ${js.size}  " +
-            f"stages ${js.map(_._2._3).sum}  tasks ${tasks.get}  " +
-            f"sum(job wall) $jobWall%.2f s  driver gap ${wall - jobWall}%.2f s")
-          js.foreach { case (id, (a, b, st, tk)) =>
-            println(f"    job $id%3d  ${math.max(0L, b - a) / 1e3}%6.2f s  stages $st%2d  tasks $tk%4d")
-          }
-        }
-      case "timeseq" :: names :: dir :: n =>
-        // Bench-context replica for a SUBSET: time a comma-separated
-        // query list in one session, in order, min-of-2 like the bench —
-        // isolates which neighbor (or accumulated session state) inflates
-        // a key that times differently under `time` vs the full bench.
-        val iters = n.headOption.map(_.toInt).getOrElse(2)
-        val list = names.split(",").toSeq
-        def evalq(name: String, d: String): Unit =
-          Queries.queries(name)(spark, d).queryExecution.toRdd.foreach(_ => ())
-        list.foreach(evalq(_, "/root/testdata/sf0.001")) // warmup pass
-        list.foreach { name =>
-          val times = (1 to iters).map { _ =>
-            // mirror Bench: cold one-slot caches per timed iteration
-            graft.operators.Dedup.releaseCaches()
-            val t0 = System.nanoTime()
-            evalq(name, dir)
-            (System.nanoTime() - t0) / 1e9
-          }
-          println(f"[$name] min ${times.min}%.3f  all ${times.map(t => f"$t%.2f").mkString(",")}")
-        }
-      case "ccprof" :: dir :: Nil =>
-        import org.apache.spark.sql.functions._
-        def t[A](what: String)(f: => A): A = {
-          val t0 = System.nanoTime()
-          val r = f
-          println(f"[$what] ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          r
-        }
-        // warmup
-        Queries.queries("dedup_cluster")(spark, "/root/testdata/sf0.001").count()
-        (1 to 2).foreach { _ =>
-          val d = Tables.load(spark, dir, "documents").select("doc_id", "text")
-          val planted = d.unionAll(d.filter(col("doc_id") % 100 === 0)
-              .select((col("doc_id") + 100000).as("doc_id"), col("text")))
-            .repartition(spark.sparkContext.defaultParallelism)
-          val cands = graft.operators.Dedup.lshCandidates(
-            graft.operators.Dedup.lshBandsFused(planted, "doc_id", "text",
-              16, 3, 4), "doc_id")
-          t("candidates")(cands.count())
-          val cc = t("cc-build")(
-            graft.operators.Dedup.connectedComponents(cands, rounds = 3))
-          t("cc-count")(cc.count())
-          val sizes = cc.groupBy("lbl").agg(count(lit(1)).as("csize"))
-          t("sizes-join")(cc.join(sizes, "lbl").count())
-        }
-      case "hybridcand" :: dir :: rest =>
-        // candidate-set size of the EXACT-bound dense stage
-        // (QuantIndex.cosineCandidates) vs corpus size: the bound's
-        // ±err band is data-independent (quantization width), so the
-        // overshoot should track the score density at the top-100
-        // boundary, not the corpus — this prints the measured counts
-        // the SURVEY claim cites. args: <sfDir> [factorsCsv]
-        val factors = rest.headOption.map(_.split(',').toSeq.map(_.toInt))
-          .getOrElse(Seq(1, 10, 100))
-        factors.foreach { f =>
-          val fdir = blowUpDir(spark, dir, f)
-          val qd = VectorQueries.quantIndexDir(spark, fdir)
-          val total = Tables.load(spark, fdir, "embeddings").count()
-          Seq(0L, 3L, 7L).foreach { q =>
-            val qv = VectorQueries.queryVec(spark, fdir, q)
-            val t0 = System.nanoTime()
-            val n = graft.sources.QuantIndex
-              .cosineCandidates(spark, qd, qv, 100).count()
-            println(f"factor $f%4d  query $q: $n%6d candidates of " +
-              f"$total%8d (${(System.nanoTime() - t0) / 1e9}%.2f s)")
-          }
-        }
-      case "curateprof" :: dir :: Nil =>
-        // stage decomposition of pipe_curate_indexed, replicating the
-        // PRODUCTION pinned-stage chain exactly (Tables.pinned is
-        // eager, so each stage's time is its own work, not nested
-        // upstream lineage — the r15 verdict's §8-style split). Two
-        // rounds: round 1 includes the memoized index/model builds
-        // (cold), round 2 is the warm serving split.
-        def t[A](what: String)(f: => A): A = {
-          val t0 = System.nanoTime()
-          val r = f
-          println(f"[$what] ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          r
-        }
-        (1 to 2).foreach { round =>
-          println(s"== round $round")
-          val delivery = t("delivery_pin")(
-            Tables.pinned(DedupQueries.curateDelivery(spark, dir)))
-          val kept1 = t("lexical_gate_pin")(
-            Tables.pinned(graft.sources.DedupIndex.gateKept(
-              spark, DedupQueries.dedupIndexDir(spark, dir),
-              delivery.select("item_id", "text", "v"), "item_id",
-              "text")))
-          val kept2 = t("semantic_gate_pin")(Tables.pinned(kept1.join(
-            graft.sources.SemanticDedupIndex.gateKept(
-                spark, DedupQueries.semanticIndexDir(spark, dir),
-                kept1.select("item_id", "v"), "item_id", "v", 900000L)
-              .select("item_id"), "item_id")))
-          val score = org.apache.spark.sql.GraftSqlBridge.column(
-            graft.functions.TokensNgramScoreExpr(
-              org.apache.spark.sql.GraftSqlBridge.expression(
-                graft.operators.Dedup.tokens(org.apache.spark.sql.functions
-                  .col("text"))),
-              TextQueries.trainedWeights(spark, dir)))
-          t("classifier_gate")(kept2.filter(score > 0).count())
-          t("counts")(Seq(delivery, kept1, kept2).map(_.count()))
-          Tables.releasePins()
-        }
-      case "hybridprof" :: dir :: Nil =>
-        // stage decomposition of v_hybrid_rrf_indexed (verdict r14 #5):
-        // which leg dominates at scale — the keyword leg's ranked list
-        // (incl. the zero-tail test), the dense exact-bound leg, or the
-        // fusion barrier. Twice per stage (cold then warm).
-        def th[A](what: String)(f: => A): A = {
-          val t0 = System.nanoTime()
-          val r = f
-          println(f"[$what] ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          r
-        }
-        val lexD = VectorQueries.lexIndexDir(spark, dir)
-        val quantD = VectorQueries.quantIndexDir(spark, dir)
-        (1 to 2).foreach { _ =>
-          val t = VectorQueries.kwsTop100Indexed(spark, dir, lexD)
-          th("kws_leg")(t.count())
-          val v = VectorQueries.vectorTop100Indexed(spark, dir, quantD)
-            .select("doc_id", "r_v")
-          th("vec_leg")(v.count())
-          th("fuse")(graft.operators.Fusion.rrfFuse(t, v).count())
-        }
-      case "scaleprobe" :: dir :: rest =>
-        // 10×/100× blow-up probe (SURVEY §8.5): materialize synthetic
-        // embeddings/documents at 1×, 10×, 100× of `dir` (deterministic
-        // perturbed copies — ids offset, vectors slightly rotated, text
-        // suffixed so near-dup structure stays realistic), then time each
-        // probe query cold (incl. memoized index builds) and warm
-        // (min of 2). Factors share one JVM; exponents = log10 ratios.
-        import org.apache.spark.sql.functions._
-        // args: <sfDir> [factorsCsv] [query...] — e.g. `scaleprobe d 1,10`
-        // or `scaleprobe d 100 ann_graph_search` (split long 100× runs)
-        val factors = rest.headOption.map(_.split(',').toSeq.map(_.toInt))
-          .getOrElse(Seq(1, 10, 100))
-        val probeQueries = if (rest.length > 1) rest.tail else Seq(
-          "v_cosine", "v_knn", "v_knn_filtered", "v_prefetch", "v_pq_search",
-          "ann_ivf", "ann_ivf_indexed", "ann_lsh", "ann_graph_search",
-          "dedup_exact", "dedup_minhash", "dedup_simhash", "dedup_embed",
-          "dedup_cluster", "txt_quality", "txt_decontam",
-          "v_knn_join", "v_knn_join_refined")
-        def blowUp(factor: Int): String = blowUpDir(spark, dir, factor)
-        // probe-only SCALED-GEOMETRY twins of the two §8.5b cliff queries:
-        // identical pipelines with the super-bucket cap engaged — the
-        // production knob the probe's diagnosis (94% of pairs from
-        // buckets >64) calls for. Declared queries stay uncapped (oracle
-        // semantics untouched).
-        import graft.operators.Dedup
-        val scaled: Map[String, (SparkSession, String) =>
-            org.apache.spark.sql.DataFrame] = Map(
-          "dedup_simhash_capped" -> ((s, d) => {
-            val sig = Dedup.simhashCached(DedupQueries.planted(s, d),
-              "doc_id", "text")
-            Dedup.simhashCandidates(
-                Dedup.simhashBands(sig, "doc_id", bits = 60, bands = 4),
-                "doc_id", maxBucket = Some(64))
-              .join(sig.select(col("doc_id").as("doc_a"),
-                col("simhash").as("sa")), "doc_a")
-              .join(sig.select(col("doc_id").as("doc_b"),
-                col("simhash").as("sb")), "doc_b")
-              .withColumn("hamming",
-                bit_count(col("sa").bitwiseXOR(col("sb"))))
-              .filter(col("hamming") <= 8)
-              .select("doc_a", "doc_b", "hamming")
-          }),
-          "dedup_embed_capped" -> ((s, d) =>
-            embedNearDupProbe(s, d, DedupQueries.embPlanes,
-              DedupQueries.embBands, cap = 64)),
-          // geometry grown with n: 12 bands × 14 planes → 16k-bucket
-          // bands (≈30 vectors/bucket at 500k), recall ≈ 0.77 for
-          // cos≈0.9 pairs — the planes ∝ log n remedy itself, measured
-          "dedup_embed_scaledgeo" -> ((s, d) =>
-            embedNearDupProbe(s, d,
-              graft.operators.Ann.hyperplanes(12 * 14, 64), 12,
-              cap = 256)))
-        val results = factors.map { f =>
-          val fdir = blowUp(f)
-          println(s"== factor $f → $fdir")
-          f -> probeQueries.map { name =>
-            def eval(): Double = {
-              val t0 = System.nanoTime()
-              scaled.getOrElse(name, Queries.queries(name))(spark, fdir)
-                .queryExecution.toRdd.foreach(_ => ())
-              (System.nanoTime() - t0) / 1e9
-            }
-            val cold = eval()
-            val warm = eval()
-            println(f"  [$name%-18s] cold $cold%8.2f s   warm $warm%8.2f s")
-            name -> (cold, warm)
-          }.toMap
-        }.toMap
-        println("\nquery, " + factors.map(f => s"cold${f}x, warm${f}x")
-          .mkString(", ") + ", warm-exp/decade")
-        probeQueries.foreach { name =>
-          val cells = factors.flatMap { f =>
-            val (c, w) = results(f)(name); Seq(f"$c%.2f", f"$w%.2f")
-          }
-          val exp =
-            if (factors.size >= 2) {
-              val (fa, fb) = (factors.head, factors.last)
-              val (wa, wb) = (results(fa)(name)._2, results(fb)(name)._2)
-              f"${math.log10(wb / wa) / math.log10(fb.toDouble / fa)}%.2f"
-            } else "n/a"
-          println(s"$name, ${cells.mkString(", ")}, $exp")
-        }
-      case "georouteprobe" :: dir :: rest =>
-        // the r13 geo-route cost decision's measurement: routed (cell
-        // index) vs direct (corpus scan) serving of geo_bounding_box
-        // windows of increasing extent fraction, plus the declared
-        // polygon key's bbox, on the blow-up corpus — the crossover this
-        // table shows is what IndexRouter.GeoRouteMaxFraction pins
-        import org.apache.spark.sql.functions._
-        // `georouteprobe <dir> big <rows>` probes a STORED-location
-        // corpus of the given row count instead of the blow-up fixtures:
-        // the regime where corpus scan bytes dwarf the index listing —
-        // the rows floor of the route decision is read off this probe
-        val (pts, idx) = rest match {
-          case "big" :: n :: Nil =>
-            val rows = n.toLong
-            val out = s"${System.getProperty("java.io.tmpdir")}" +
-              s"/graft-geobig-v1-$rows"
-            val marker =
-              java.nio.file.Paths.get(s"$out/points.parquet/_SUCCESS")
-            if (!java.nio.file.Files.exists(marker))
-              VectorQueries.geoLocated(
-                  spark.range(rows).select(col("id").as("vec_id")))
-                .withColumn("label", (col("vec_id") % 11).cast("int"))
-                // filler payload so the corpus scan reads real bytes
-                .withColumn("payload", sha2(col("vec_id").cast("string"), 256))
-                .repartition(32)
-                .write.mode("overwrite").parquet(s"$out/points.parquet")
-            val p = spark.read.parquet(s"$out/points.parquet")
-            val ix = Tables.memoTempDir("geobig", out) { target =>
-              graft.sources.PayloadIndex.buildGeo(p, "location", "vec_id",
-                target)
-            }
-            (p, ix)
-          case _ =>
-            val factor = rest.headOption.map(_.toInt).getOrElse(100)
-            val fdir = blowUpDir(spark, dir, factor)
-            (VectorQueries.geoLocated(
-              Tables.load(spark, fdir, "embeddings")),
-              VectorQueries.geoIdxDir(spark, fdir))
-        }
-        println(s"geo index: $idx  stats=" +
-          graft.sources.PayloadIndex.geoStatsOf(idx))
-        def boxDsl(latHalf: Double, lonHalf: Double): String = s"""
-          {"must": [{"key": "location", "geo_bounding_box": {
-            "top_left": {"lat": $latHalf, "lon": ${-lonHalf}},
-            "bottom_right": {"lat": ${-latHalf}, "lon": $lonHalf}}}]}"""
-        val windows: Seq[(String, String)] =
-          Seq(0.005, 0.02, 0.06, 0.125, 0.25).map { f =>
-            val s = math.sqrt(f)
-            (f"box f=$f%.3f", boxDsl(90 * s, 180 * s))
-          } :+ ("poly (0.41 bbox)", VectorQueries.geoPolyDsl)
-        def timed(dsl: String, frac: String): Double = {
-          spark.conf.set("graft.geo.routeMaxFraction", frac)
-          try {
-            def once(): Double = {
-              val t0 = System.nanoTime()
-              graft.sources.IndexRouter.filtered(spark, pts,
-                  Seq("location" -> idx), dsl, idCol = "vec_id")
-                .queryExecution.toRdd.foreach(_ => ())
-              (System.nanoTime() - t0) / 1e9
-            }
-            once(); once() // warm: min-of-2 discipline → second run
-          } finally spark.conf.unset("graft.geo.routeMaxFraction")
-        }
-        windows.foreach { case (tag, dsl) =>
-          val routed = timed(dsl, "1.0")  // force the index route
-          val direct = timed(dsl, "0.0")  // force the corpus scan
-          println(f"$tag%-18s routed $routed%7.2f s   direct " +
-            f"$direct%7.2f s   ratio ${routed / direct}%5.2f")
-        }
-      case "geodiag" :: dir :: rest =>
-        // where does the routed geo read's fixed cost sit? file counts,
-        // listing/planning time vs execution time, repeated reads
-        import org.apache.spark.sql.functions._
-        val factor = rest.headOption.map(_.toInt).getOrElse(100)
-        val fdir = blowUpDir(spark, dir, factor)
-        val idx = VectorQueries.geoIdxDir(spark, fdir)
-        val files = java.nio.file.Files.walk(java.nio.file.Paths.get(idx))
-          .filter(p => p.toString.endsWith(".parquet")).count()
-        val dirs = java.nio.file.Files.walk(java.nio.file.Paths.get(idx))
-          .filter(p => java.nio.file.Files.isDirectory(p)).count()
-        println(s"idx=$idx files=$files dirs=$dirs cpd=" +
-          graft.sources.PayloadIndex.cellsPerDegOf(idx))
-        def t(tag: String)(f: => Any): Unit = {
-          val t0 = System.nanoTime()
-          val r = f
-          println(f"[$tag] ${(System.nanoTime() - t0) / 1e9}%6.2f s ($r)")
-        }
-        (1 to 3).foreach { i =>
-          t(s"plan-only #$i") {
-            graft.sources.PayloadIndex.forGeoBox(spark, idx,
-              10.0, -10.0, -10.0, 10.0).queryExecution.executedPlan
-            "planned"
-          }
-          t(s"plan+exec #$i") {
-            graft.sources.PayloadIndex.forGeoBox(spark, idx,
-                10.0, -10.0, -10.0, 10.0)
-              .queryExecution.toRdd.count()
-          }
-        }
-      case "batchprobe" :: dir :: rest =>
-        // measure where the batched stage-1 CASE-chain/LUT growth crosses
-        // per-query serving (the r12 handful-per-batch contract, made a
-        // checked precondition in r13): per-batch-size wall time of the
-        // batched path vs size × single-query serving
-        import org.apache.spark.sql.functions._
-        val sizes = rest.headOption.map(_.split(',').toSeq.map(_.toInt))
-          .getOrElse(Seq(4, 16, 64, 128, 256))
-        val emb = Tables.load(spark, dir, "embeddings")
-        val decls = Seq(VectorQueries.quantIndexDir(spark, dir))
-        val n = emb.count()
-        def qv(i: Long): Seq[Double] = VectorQueries.queryVec(spark, dir, i)
-        val vecs = (0L until sizes.max.toLong)
-          .map(i => i -> qv(i % n)).toMap
-        def time(f: => Unit): Double = {
-          val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-        }
-        // warmup
-        graft.sources.VectorRouter.queryPointsMulti(spark, emb, "vec_id",
-          "embedding", decls, Seq(0L -> vecs(0L), 1L -> vecs(1L)), 10)
-          .queryExecution.toRdd.foreach(_ => ())
-        val dslOnly = rest.drop(1).headOption.contains("dslonly")
-        sizes.foreach { sz =>
-          val qs = (0L until sz.toLong).map(i => i -> vecs(i))
-          if (dslOnly) {
-            val dsl = time {
-              graft.operators.Knn.knnBatchDsl(emb,
-                  qs.map { case (i, q) => (i, q, col("label") >= 0) },
-                  "embedding", 10)
-                .queryExecution.toRdd.foreach(_ => ())
-            }
-            println(f"batch=$sz%5d  knnBatchDsl $dsl%7.2f s " +
-              f"(per-q ${dsl / sz}%6.3f)")
-          } else {
-          val batched = time {
-            graft.sources.VectorRouter.queryPointsMulti(spark, emb,
-                "vec_id", "embedding", decls, qs, 10)
-              .queryExecution.toRdd.foreach(_ => ())
-          }
-          val single = time {
-            qs.foreach { case (_, q) =>
-              graft.sources.VectorRouter.queryPoints(spark, emb, "vec_id",
-                  "embedding", decls, Nil, q, 10)
-                .queryExecution.toRdd.foreach(_ => ())
-            }
-          }
-          val dsl = time {
-            graft.operators.Knn.knnBatchDsl(emb,
-                qs.map { case (i, q) => (i, q, col("label") >= 0) },
-                "embedding", 10)
-              .queryExecution.toRdd.foreach(_ => ())
-          }
-          println(f"batch=$sz%4d  routed-quant batched $batched%7.2f s " +
-            f"(per-q ${batched / sz}%6.3f)  single total $single%7.2f s " +
-            f"(per-q ${single / sz}%6.3f)  knnBatchDsl $dsl%7.2f s " +
-            f"(per-q ${dsl / sz}%6.3f)")
-          }
-        }
-      case "classifyprobe" :: dir :: rest =>
-        // same-session A/B of txt_classify's inference kernels on one
-        // blown-up corpus: fused TokensNgramScoreExpr vs the HOF twin
-        // it replaced (transform+aggregate with interpreted lambdas)
-        import org.apache.spark.sql.functions._
-        val factor = rest.headOption.map(_.toInt).getOrElse(100)
-        val fdir = blowUpDir(spark, dir, factor)
-        val weights = (0 until 4096).map(b =>
-          (graft.operators.Dedup.h32("w|" + b) % 2001L) - 1000L)
-        val toks = graft.operators.Dedup.tokens(col("text"))
-        val fusedCol = org.apache.spark.sql.GraftSqlBridge.column(
-          graft.functions.TokensNgramScoreExpr(
-            org.apache.spark.sql.GraftSqlBridge.expression(toks), weights))
-        val wLut = lit(weights.toArray)
-        val bgs = when(size(toks) >= 2,
-          transform(sequence(lit(1), size(toks) - 1),
-            i => concat(element_at(toks, i), lit(" "),
-              element_at(toks, i + 1))))
-          .otherwise(array().cast("array<string>"))
-        val hofCol = aggregate(bgs, lit(0L), (acc, g) =>
-          acc + element_at(wLut,
-            pmod(graft.operators.Dedup.h32(g), lit(4096L)).cast("int") + 1))
-        def run(c: org.apache.spark.sql.Column): Double = {
-          val df = Tables.load(spark, fdir, "documents")
-            .select(col("lang"), c.as("score"))
-            .groupBy("lang").agg(count(lit(1)).as("n"),
-              sum("score").as("s"))
-          val t0 = System.nanoTime()
-          df.queryExecution.toRdd.foreach(_ => ())
-          (System.nanoTime() - t0) / 1e9
-        }
-        (1 to 3).foreach { i =>
-          println(f"[fused] iter $i: ${run(fusedCol)}%.2f s   " +
-            f"[hof] ${run(hofCol)}%.2f s")
-        }
-      case "semprobe" :: dir :: rest =>
-        // stage decomposition of dedup_semantic_incremental's serving
-        // cost on one blown-up corpus: which piece of pairsAgainst
-        // dominates (delivery assignment / index scan / cell join+score /
-        // hits distinct / final verdict agg)?
-        import org.apache.spark.sql.functions._
-        import graft.sources.{SemanticDedupIndex, ServedReads}
-        val factor = rest.headOption.map(_.toInt).getOrElse(1000)
-        val fdir = blowUpDir(spark, dir, factor)
-        val idx = DedupQueries.semanticIndexDir(spark, fdir)
-        val delivery = DedupQueries.semanticDelivery(spark, fdir)
-        val local = SemanticDedupIndex.pinnedCentroids(spark, idx)
-          .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
-          .sortBy(_._1)
-        println(s"cells: ${local.length}")
-        def t(tag: String)(f: => Long): Unit = {
-          val t0 = System.nanoTime()
-          val n = f
-          println(f"  $tag%-34s ${(System.nanoTime() - t0) / 1e9}%8.2f s" +
-            f"   rows $n%,d")
-        }
-        val del = delivery
-          .select(col("vec_id").as("delivery_id"),
-            col("v").cast("array<double>").as("dv"))
-          .withColumn("cluster", org.apache.spark.sql.GraftSqlBridge.column(
-            graft.functions.ArgminCellExpr(
-              org.apache.spark.sql.GraftSqlBridge.expression(col("dv")),
-              local.map(_._2.toSeq).toSeq, local.map(_._1).toSeq)))
-        val scored = ServedReads.of(spark, idx)
-          .join(broadcast(del), Seq("cluster"))
-          .withColumn("score_micro",
-            floor(graft.functions.VectorOps.cosine(col("v"), col("dv"))
-              * 1e6 + lit(0.5)).cast("long"))
-        (1 to 2).foreach { it =>
-          println(s"== iter $it")
-          t("delivery assign (fused)")(del.count())
-          t("index scan alone")(ServedReads.of(spark, idx).count())
-          t("join+score (no filter)")(scored.count())
-          t("join+score+filter hits")(
-            scored.filter(col("score_micro") >= 900000).count())
-          t("pairsAgainst (full, distinct)")(
-            SemanticDedupIndex.pairsAgainst(spark, idx, delivery,
-              "vec_id", "v", 900000L).count())
-          t("declared query")(
-            Queries.queries("dedup_semantic_incremental")(spark, fdir)
-              .count())
-        }
-      case "semcold" :: dir :: rest =>
-        // cold-path decomposition of the 1000× semantic-index build:
-        // which piece costs what in a fresh JVM
-        val factor = rest.headOption.map(_.toInt).getOrElse(1000)
-        val fdir = blowUpDir(spark, dir, factor)
-        def t[A](tag: String)(f: => A): A = {
-          val t0 = System.nanoTime()
-          val a = f
-          println(f"  $tag%-24s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-          a
-        }
-        val est = t("corpusEstimate")(
-          DedupQueries.corpusEstimate(spark, fdir, "embeddings", "vec_id"))
-        val k = graft.operators.Ann.semanticClusterCount(est)
-        println(s"  k = $k")
-        t("kmeansFit (2 rounds)")(
-          AnnQueries.trainedCentroids(spark, fdir, k, 2).count())
-        t("index build+pin")(DedupQueries.semanticIndexDir(spark, fdir))
-        t("query (first run)")(
-          Queries.queries("dedup_semantic_incremental")(spark, fdir)
-            .queryExecution.toRdd.foreach(_ => ()))
-        t("query (warm)")(
-          Queries.queries("dedup_semantic_incremental")(spark, fdir)
-            .queryExecution.toRdd.foreach(_ => ()))
-      case "kmprobe" :: dir :: rest =>
-        // same-session A/B of kmeansFit's per-round assignment forms on
-        // one blown-up corpus: fused ArgminCellExpr map vs the
-        // broadcast-crossjoin argminAssign + join-back it replaced.
-        // Both compute ONE Lloyd round's (cluster, dim) decimal means.
-        import org.apache.spark.sql.functions._
-        import graft.operators.Ann
-        val factor = rest.headOption.map(_.toInt).getOrElse(1000)
-        val fdir = blowUpDir(spark, dir, factor)
-        val emb = Tables.load(spark, fdir, "embeddings")
-        val k = Ann.semanticClusterCount(
-          emb.count().toDouble) // exact n is fine for a probe
-        println(s"k = $k")
-        val cents = emb.orderBy("vec_id").limit(k)
-          .select(col("embedding").cast("array<double>"))
-          .collect().zipWithIndex
-          .map { case (r, i) => (i.toLong, r.getSeq[Double](0)) }
-        def round(assigned: org.apache.spark.sql.DataFrame): Long = {
-          val t0 = System.nanoTime()
-          assigned
-            .select(col("cluster"),
-              posexplode(col("v")).as(Seq("i", "x")))
-            .groupBy("cluster", "i")
-            .agg((floor(
-              (sum(col("x").cast("decimal(25,12)")).cast("double") /
-                count(lit(1))) * 1e6 + lit(0.5)) / 1e6).as("c"))
-            .queryExecution.toRdd.foreach(_ => ())
-          (System.nanoTime() - t0) / 1000000L
-        }
-        import spark.implicits._
-        def fused() = round(emb
-          .select(col("vec_id"),
-            col("embedding").cast("array<double>").as("v"))
-          .withColumn("cluster", org.apache.spark.sql.GraftSqlBridge.column(
-            graft.functions.ArgminCellExpr(
-              org.apache.spark.sql.GraftSqlBridge.expression(col("v")),
-              cents.map(_._2).toSeq, cents.map(_._1).toSeq))))
-        def crossjoin() = round(emb
-          .select(col("vec_id"),
-            col("embedding").cast("array<double>").as("v"))
-          .join(Ann.argminAssign(
-            emb.select(col("vec_id"),
-              col("embedding").cast("array<double>").as("v")),
-            "vec_id", "v", cents.toSeq.toDF("cid", "cv"), "cid", "cv"),
-            "vec_id"))
-        (1 to 3).foreach { i =>
-          println(s"[fused] iter $i: ${fused()} ms   " +
-            s"[crossjoin] ${crossjoin()} ms")
-        }
-        // kmeansFit's EXACT frame shape: argmin + posexplode in ONE
-        // select over the raw float column (vs the probe's two-step
-        // cast-then-explode) — explain + time to localize the gap
-        val oneSelect = emb.select(
-          org.apache.spark.sql.GraftSqlBridge.column(
-            graft.functions.ArgminCellExpr(
-              org.apache.spark.sql.GraftSqlBridge.expression(
-                col("embedding").cast("array<double>")),
-              cents.map(_._2).toSeq, cents.map(_._1).toSeq)).as("cluster"),
-          posexplode(col("embedding").cast("array<double>"))
-            .as(Seq("i", "x")))
-          .groupBy("cluster", "i")
-          .agg((floor(
-            (sum(col("x").cast("decimal(25,12)")).cast("double") /
-              count(lit(1))) * 1e6 + lit(0.5)) / 1e6).as("c"))
-        oneSelect.explain("formatted")
-        val t1 = System.nanoTime()
-        oneSelect.queryExecution.toRdd.foreach(_ => ())
-        println(f"[one-select kmeans round] ${(System.nanoTime() - t1) / 1e9}%.1f s")
-      case "simhashbuckets" :: dir :: Nil =>
-        // diagnostic for the §8.5b simhash cliff: is candidate blowup
-        // uniform band saturation or super-bucket skew?
-        import org.apache.spark.sql.functions._
-        val docs = Tables.load(spark, dir, "documents")
-          .select("doc_id", "text")
-        val sig = graft.operators.Dedup.simhash(docs, "doc_id", "text")
-        val bands = graft.operators.Dedup.simhashBands(sig, "doc_id",
-          bits = 60, bands = 4)
-        val sizes = bands.groupBy("band", "band_bits").count()
-          .persist()
-        println("docs=" + docs.count())
-        sizes.agg(count(lit(1)).as("buckets"), max("count").as("max_sz"),
-            sum(col("count") * (col("count") - 1) / 2).as("pairs"))
-          .show(false)
-        println("top-10 buckets:")
-        sizes.orderBy(desc("count")).show(10, false)
-        println("pairs from buckets > 64: ")
-        sizes.filter(col("count") > 64)
-          .agg(sum(col("count") * (col("count") - 1) / 2)).show(false)
-      case "graphquality" :: dir :: Nil =>
-        // build quality: per-node overlap of graph neighbors vs exact
-        // top-M, averaged over a 100-node sample
-        import org.apache.spark.sql.functions._
-        val emb = Tables.load(spark, dir, "embeddings").persist()
-        val adj = spark.read.parquet(GraphAnnQueries.graphIndexDir(spark, dir))
-        val sample = emb.filter(col("vec_id") % 20 === 0)
-          .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-        val m = adj.groupBy("src").count().agg(max("count")).head().getLong(0).toInt
-        val exactNbr = emb.crossJoin(broadcast(sample))
-          .filter(col("vec_id") =!= col("qid"))
-          .withColumn("__s", graft.functions.VectorOps.cosine(
-            col("embedding"), col("qv")))
-          .groupBy("qid")
-          .agg(graft.plans.TopKByScore.topK(col("__s"), col("vec_id"), m)
-            .as("__tk"))
-          .select(col("qid"), explode(col("__tk.id")).as("nbr"))
-        // LEFT join from the sample so zero-overlap nodes count as 0 —
-        // an inner join would drop them from avg AND make min unable to
-        // report 0, the exact failure this diagnostic exists to catch
-        val hits = sample.select("qid").join(
-            exactNbr.join(adj.select(col("src").as("qid"),
-                col("dst").as("nbr")), Seq("qid", "nbr"))
-              .groupBy("qid").count(),
-            Seq("qid"), "left")
-          .select(col("qid"), coalesce(col("count"), lit(0L)).as("count"))
-        val stats = hits.agg(avg("count"), min("count")).head()
-        println(f"graph quality: avg exact-neighbor overlap " +
-          f"${stats.getDouble(0)}%.2f / $m, min ${stats.getLong(1)}")
-      case "knncand" :: dir :: Nil =>
-        // candidate-volume probe for the kNN-join family: band rows,
-        // distinct collision pairs, bucket-occupancy distribution —
-        // what the scoring stage actually pays for
-        import org.apache.spark.sql.functions._
-        val emb = Tables.load(spark, dir, "embeddings")
-          .select("vec_id", "embedding")
-        val (bands, ps) = DedupQueries.embGeometry(spark, dir)
-        val banded = graft.operators.Par.spread(emb).select(col("vec_id"),
-          posexplode(graft.operators.Ann.lshBandBuckets(
-            col("embedding"), ps, bands)).as(Seq("band", "bits")))
-        println(s"band rows: ${banded.count()}")
-        val raw = banded.select(col("band"), col("bits"),
-            col("vec_id").as("doc_a"))
-          .join(banded.select(col("band"), col("bits"),
-            col("vec_id").as("doc_b")), Seq("band", "bits"))
-          .filter(col("doc_a") < col("doc_b"))
-        println(s"raw collisions: ${raw.count()}")
-        println(s"distinct pairs: ${raw.select("doc_a", "doc_b").distinct().count()}")
-        banded.groupBy("band", "bits").count()
-          .agg(count(lit(1)).as("buckets"), avg("count"), max("count"))
-          .show()
-      case "knnquality" :: dir :: Nil =>
-        // bulk-kNN-join quality: recall@3 of the LSH-banded base graph
-        // and of successive NN-descent rounds, against the exact top-3
-        // of EVERY point (all-pairs is fine for a diagnostic corpus)
-        import org.apache.spark.sql.functions._
-        val emb = Tables.load(spark, dir, "embeddings")
-          .select("vec_id", "embedding").persist()
-        val (bands, ps) = DedupQueries.embGeometry(spark, dir)
-        val k = 3
-        val n = emb.count()
-        val exact = emb.select(col("vec_id").as("qid"),
-            col("embedding").as("qv"))
-          .crossJoin(emb.select(col("vec_id").as("nid"),
-            col("embedding").as("nv")))
-          .filter(col("qid") =!= col("nid"))
-          .withColumn("__s", floor(graft.functions.VectorOps.cosine(
-            col("qv"), col("nv")) * 1e6 + lit(0.5)).cast("double"))
-          .groupBy("qid")
-          .agg(graft.plans.TopKByScore.topK(col("__s"), col("nid"), k)
-            .as("tk"))
-          .select(col("qid"), explode(col("tk.id")).as("nbr"))
-          .persist()
-        def recall(g: org.apache.spark.sql.DataFrame, label: String)
-            : Unit = {
-          val hit = exact.join(g.select(col("src_id").as("qid"),
-              col("nbr_id").as("nbr")), Seq("qid", "nbr"))
-            .count()
-          println(f"  $label%-24s recall@$k = ${hit.toDouble / (n * k)}%.3f" +
-            f"  ($hit/${n * k})")
-        }
-        val base = graft.operators.Ann.knnJoin(
-          emb, "vec_id", "embedding", ps, bands, k).persist()
-        recall(base, "base LSH graph")
-        val r1 = graft.operators.Ann.knnRefine(
-          emb, "vec_id", "embedding", base, k).persist()
-        recall(r1, "NN-descent round 1")
-        recall(graft.operators.Ann.knnRefine(
-          emb, "vec_id", "embedding", r1, k), "NN-descent round 2")
-      case "graphrecall" :: dir :: Nil =>
-        // recall@10 + candidate budget: beam search vs IVF, per query id
-        import org.apache.spark.sql.functions._
-        val emb = Tables.load(spark, dir, "embeddings").persist()
-        val adj = spark.read.parquet(GraphAnnQueries.graphIndexDir(spark, dir))
-          .persist()
-        val cents = AnnQueries.trainedCentroids(spark, dir, 8, 2)
-        val assigned = emb.join(graft.operators.Ann.argminAssign(
-          emb, "vec_id", "embedding", cents, "cid", "cv"), "vec_id").persist()
-        val nVec = emb.count()
-        Seq(0L, 101L, 202L, 303L, 404L, 777L, 1234L)
-          .filter(_ < nVec).foreach { qid =>
-          val q = emb.filter(col("vec_id") === qid)
-            .select(col("embedding").cast("array<double>"))
-            .head().getSeq[Double](0)
-          val exact = graft.operators.Knn.knn(emb, "embedding", q, 10)
-            .select("vec_id").collect().map(_.getLong(0)).toSet
-          val sweep = Seq((10, 5), (20, 8), (40, 10)).map { case (b, r) =>
-            val (g, c) = graft.operators.GraphAnn.beamSearchProbe(
-              emb, "vec_id", "embedding", adj, q, b, r, 10)
-            val h = g.select("id").collect().map(_.getLong(0)).toSet
-            f"b=$b r=$r: ${(h & exact).size}/10 ($c)"
-          }
-          val (g, gCands) = graft.operators.GraphAnn.beamSearchProbe(
-            emb, "vec_id", "embedding", adj, q, 10, 5, 10)
-          val gHits = g.select("id").collect().map(_.getLong(0)).toSet
-          println(s"  sweep qid=$qid  " + sweep.mkString("  "))
-          val ivfRes = Seq(1, 2).map { np =>
-            val probes = graft.operators.Ann.probeClusters(
-              cents, "cid", "cv", q, np).collect().map(_.getLong(0))
-            val cand = assigned.filter(col("cluster").isin(probes: _*))
-            val n = cand.count()
-            val hits = cand.withColumn("score", graft.functions.VectorOps
-                .cosine(col("embedding"), typedLit(q)))
-              .orderBy(desc("score"), col("vec_id")).limit(10)
-              .select("vec_id").collect().map(_.getLong(0)).toSet
-            (np, (hits & exact).size, n)
-          }
-          println(f"qid=$qid%5d graph: ${(gHits & exact).size}/10 " +
-            f"($gCands cands)  " + ivfRes.map { case (np, r, n) =>
-              f"ivf np=$np: $r/10 ($n cands)" }.mkString("  "))
-        }
-      case other => sys.error(s"unknown args: $other")
+      }.reduce(_ unionByName _)
+        .withColumn("n_chars", length(col("text")).cast("long"))
+        .repartition(32)
+        .write.mode("overwrite").parquet(s"$out/documents.parquet")
+      // embeddings LAST: its _SUCCESS is the completion marker, so
+      // it must imply the documents write finished too (a crash
+      // between the two would otherwise leave a half-built dir
+      // every later run trusts)
+      embBlown.repartition(32)
+        .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
     }
-    spark.stop()
+    out
   }
 }

@@ -45,9 +45,6 @@ object TextAnalysis {
     }
   }
 
-  /** Whitespace token count. */
-  def wsTokenCount(text: Column): Column = size(tokens(text))
-
   /** BPE-ish subword count: runs of letters, runs of digits, or single
     * other non-space chars. */
   def subwordCount(text: Column): Column =

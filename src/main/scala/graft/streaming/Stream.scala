@@ -96,13 +96,6 @@ object Stream {
         col("n"))
   }
 
-  /** Within-watermark streaming dedup on point id — the unbounded-stream
-    * form of upsert (state bounded by the watermark horizon). */
-  def dedupStream(points: DataFrame, tsCol: String): DataFrame =
-    points
-      .withWatermark(tsCol, "1 hour")
-      .dropDuplicatesWithinWatermark("id")
-
   /** STREAM-STATIC search — the online-serving form of V2 kNN (the
     * reference's "query the DB" flow with queries arriving as a stream):
     * each micro-batch of query vectors is answered against the STATIC

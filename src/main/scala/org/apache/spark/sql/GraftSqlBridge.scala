@@ -1,15 +1,20 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Minimal bridge to the `private[sql]` Expression ↔ Column converters —
   * the one place the engine steps inside Spark's package, needed to
   * expose the custom codegen vector expressions
-  * (graft.functions.VectorExpressions) as plain `Column` functions.
+  * (graft.functions.VectorExpressions) as plain `Column` functions — and
+  * to the listener bus's `private[spark]` drain, which `graft.Profile`
+  * needs before it detaches its listener.
   * Everything else in graft.* uses only public API. */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+  /** Block until every event posted so far has reached every listener. */
+  def waitUntilEmpty(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
 
 /** Mixin for graft's vector expressions: float and double arrays pass
