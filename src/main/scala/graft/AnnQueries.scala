@@ -55,25 +55,21 @@ object AnnQueries {
     init + steps
   }
 
-  /** Trained-centroid memo keyed by (sfDir, k, iters): ann_kmeans and
-    * ann_ivf share one training run per fixture instead of each
-    * re-training. Values are plain driver-side arrays (session-safe; a
-    * DataFrame is rebuilt per call) and deterministic by construction
+  /** Trained centroids, memoized per (k, iters, embeddings file):
+    * ann_kmeans and ann_ivf share one training run per fixture instead of
+    * each re-training. Values are plain driver-side arrays (session-safe;
+    * a DataFrame is rebuilt per call) and deterministic by construction
     * (kmeansFit's determinism is spec-asserted), so memoization cannot
     * change any result. */
-  private val kmCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(String, Int, Int), Array[(Long, Seq[Double])]]
-
   private[graft] def trainedCentroids(s: org.apache.spark.sql.SparkSession,
                                dir: String, k: Int, iters: Int)
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    kmCache.getOrElseUpdate((dir, k, iters),
+    Memo("trainedCentroids", (k, iters), Tables.path(dir, "embeddings")) {
       Ann.kmeansFit(Tables.load(s, dir, "embeddings"), "vec_id", "embedding",
           k, iters)
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1))))
-      .toSeq.toDF("cid", "cv")
+        .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
+    }.toSeq.toDF("cid", "cv")
   }
 
   /** Deterministic k-means centroid table (k=8, 2 Lloyd rounds) as a

@@ -21,24 +21,20 @@ object DedupQueries {
     * larger corpora (the §8.5b probe's 100× blow-up reaches doc_id
     * 500000, where a fixed +100000 would alias planted copies onto REAL
     * documents and corrupt every dedup measurement). */
-  // one narrow max-scan per (table, fixture dir) per JVM — a memoized
-  // driver literal keeps every plant plan free of the 1-row cross join a
-  // scalar subquery would repeat per union branch (measured: 12
+  // one narrow max-scan per table file per JVM — a memoized driver
+  // literal keeps every plant plan free of the 1-row cross join a scalar
+  // subquery would repeat per union branch (measured: 12
   // BroadcastNestedLoopJoins in the dedup_simhash plan)
-  // Memo assumes fixture dirs are immutable for the JVM's lifetime (true
-  // for the driver's testdata; a regenerated dir in the same session
-  // would serve a stale offset — restart the JVM after regenerating).
-  private val offCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Long]()
   private[graft] def plantOffset(s: SparkSession, dir: String,
                                  table: String, idCol: String): Long =
-    offCache.computeIfAbsent((table, dir), _ =>
+    Memo("plantOffset", idCol, Tables.path(dir, table)) {
       math.max(100000L,
         // via Option+toString.toLong: max() is NULL on an empty table and
         // the id column may arrive as INT rather than BIGINT — getLong(0)
         // would NPE / ClassCastException respectively
         Option(Tables.load(s, dir, table).agg(max(col(idCol))).head().get(0))
-          .map(_.toString.toLong).getOrElse(0L) + 1L))
+          .map(_.toString.toLong).getOrElse(0L) + 1L)
+    }
 
   /** [[planted]] WITHOUT the trailing spread exchange — for consumers
     * that only need a narrow per-row projection of the planted corpus
@@ -256,23 +252,21 @@ object DedupQueries {
       WHERE inter * 1000000 // (sa.n_sh + sb.n_sh - inter) >= 300000
       ORDER BY doc_a, doc_b"""))
 
-  /** Driver-side memoized KMV corpus-cardinality estimate per
-    * (table, dir) — the n̂ that feeds the auto-sized LSH geometry. One
-    * narrow sketch aggregation per JVM per fixture (same 60-bit md5
-    * hashing as sketch_distinct, k = 1024 → ±3% — the sizing functions'
-    * floor rungs leave far wider margins than that). Deterministic, so
-    * the memo is gate-safe like [[plantOffset]]. */
-  private val estCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Double]()
+  /** Driver-side memoized KMV corpus-cardinality estimate per table
+    * file — the n̂ that feeds the auto-sized LSH geometry. One narrow
+    * sketch aggregation per JVM per fixture (same 60-bit md5 hashing as
+    * sketch_distinct, k = 1024 → ±3% — the sizing functions' floor rungs
+    * leave far wider margins than that). */
   private[graft] def corpusEstimate(s: SparkSession, dir: String,
                                     table: String, idCol: String): Double =
-    estCache.computeIfAbsent((table, dir), _ =>
+    Memo("corpusEstimate", idCol, Tables.path(dir, table)) {
       Tables.load(s, dir, table)
         .select(conv(substring(md5(concat(lit("kmv|"), col(idCol))), 1, 15),
           16, 10).cast("long").as("h"))
         .agg(graft.plans.KmvSketch.estimate(
           graft.plans.KmvSketch.kmv(col("h"), 1024), 1024).as("est"))
-        .head().getDouble(0))
+        .head().getDouble(0)
+    }
 
   /** V6 — embedding-cosine near-dup, the 100 TB form: hyperplane-LSH band
     * buckets propose candidate pairs (6 bands × 6 planes at fixture
@@ -294,13 +288,10 @@ object DedupQueries {
   private[graft] lazy val embPlanes =
     graft.operators.Ann.hyperplanes(embBands * 6, 64)
 
-  private val geoCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), (Int, Int)]()
   private[graft] def embGeometry(s: SparkSession, dir: String)
       : (Int, Seq[Seq[Double]]) = {
-    val (b, p) = geoCache.computeIfAbsent(("embeddings", dir), _ =>
-      graft.operators.Ann.lshGeometryFor(
-        corpusEstimate(s, dir, "embeddings", "vec_id")))
+    val (b, p) = graft.operators.Ann.lshGeometryFor(
+      corpusEstimate(s, dir, "embeddings", "vec_id"))
     (b, graft.operators.Ann.hyperplanes(b * p, 64))
   }
 
@@ -888,7 +879,7 @@ object DedupQueries {
         FROM hs$sfx GROUP BY doc_id, seed // 4)"""
 
   /** The corpus band index (DedupIndex layout over `documents`), built
-    * once per fixture dir per JVM — the persisted form both incremental
+    * once per fixture listing per JVM — the persisted form both incremental
     * verbs serve from. Contents are deterministic (md5-derived bands),
     * so the memo is gate-safe. */
   private[graft] def dedupIndexDir(s: SparkSession, dir: String): String =
@@ -1021,7 +1012,7 @@ object DedupQueries {
       GROUP BY 1, 2 ORDER BY 1, 2"""))
 
   /** The persisted SemDeDup cell index (SemanticDedupIndex layout over
-    * `embeddings`), built once per fixture dir per JVM — the semantic
+    * `embeddings`), built once per fixture listing per JVM — the semantic
     * twin of [[dedupIndexDir]]. Cluster count auto-sizes from the KMV n̂
     * (the dedup_semantic law — k = 8 at the gate SFs, so the pinned
     * centroids are exactly the kmeansSql(8,2) table the oracles replay);

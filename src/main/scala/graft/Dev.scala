@@ -83,7 +83,8 @@ object Dev {
   private def summary(p: Profile.Result): String =
     s"wall ${secs(p.wallMs)}  jobs ${p.jobs.size}  stages ${p.stages}  " +
       s"tasks ${p.tasks}  job wall ${secs(p.jobWallMs)}  " +
-      s"driver gap ${secs(p.gapMs)}"
+      s"driver gap ${secs(p.gapMs)}  " +
+      s"memo hits/misses ${p.memoHits}/${p.memoMisses}"
 
   /** Profile each key `iters` times in one session, in the given order —
     * the Bench context for a subset. An untimed pass over all keys at

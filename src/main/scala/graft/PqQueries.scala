@@ -18,18 +18,15 @@ object PqQueries {
   private val K = 8
   private val Iters = 1
 
-  /** Codebook memo keyed by fixture dir (training is deterministic, so
-    * memoization is gate-safe; v_pq_codebooks and v_pq_search share one
-    * training run). */
-  private val cbCache =
-    scala.collection.concurrent.TrieMap
-      .empty[String, Array[Array[(Long, Array[Long])]]]
-
+  /** Codebooks, memoized per embeddings file (training is
+    * deterministic; v_pq_codebooks and v_pq_search share one training
+    * run). */
   private def codebooks(s: org.apache.spark.sql.SparkSession, dir: String)
       : Array[Array[(Long, Array[Long])]] =
-    cbCache.getOrElseUpdate(dir,
+    Memo("pqCodebooks", (M, SubDim, K, Iters), Tables.path(dir, "embeddings")) {
       Pq.trainCodebooks(Tables.load(s, dir, "embeddings"),
-        "vec_id", "embedding", M, SubDim, K, Iters))
+        "vec_id", "embedding", M, SubDim, K, Iters)
+    }
 
   /** DuckDB replay of one subspace's Lloyd training (mirror of
     * AnnQueries.kmeansSql over the micro slice [off+1, off+subDim]):

@@ -5,7 +5,7 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 
-/** Job/stage/task accounting of one body without the UI: a
+/** Job/stage/task and memo accounting of one body without the UI: a
   * `SparkListener` is attached around the body, the listener bus is
   * drained (so a job or task event that arrives late is counted, not
   * lost), and the listener is detached. Times are the wall clock Spark
@@ -19,7 +19,9 @@ object Profile {
     def wallMs: Long = endMs - startMs
   }
 
-  final case class Result(wallMs: Long, jobs: Seq[Job]) {
+  /** `memoHits`/`memoMisses`: the [[Memo]] calls the body made. */
+  final case class Result(wallMs: Long, jobs: Seq[Job], memoHits: Long,
+                          memoMisses: Long) {
     def stages: Int = jobs.map(_.stages).sum
     def tasks: Int = jobs.map(_.tasks).sum
 
@@ -58,6 +60,7 @@ object Profile {
         update(e.stageId)(j => j.copy(tasks = j.tasks + 1))
     }
     sc.addSparkListener(listener)
+    val (hits0, misses0) = (Memo.hits.get, Memo.misses.get)
     val t0 = System.currentTimeMillis()
     val t1 =
       try { body; System.currentTimeMillis() }
@@ -71,6 +74,7 @@ object Profile {
       j.copy(startMs = math.max(j.startMs, t0),
         endMs = if (j.endMs < 0) t1 else math.min(j.endMs, t1))
     }
-    Result(t1 - t0, clamped)
+    Result(t1 - t0, clamped, Memo.hits.get - hits0,
+      Memo.misses.get - misses0)
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** Relational analytics over the star schema (SURVEY.md §2.3 audit: the
   * reference has no joins/aggs/windows — these are the engine-native
@@ -765,7 +766,7 @@ object Relational {
           col("max_sk") >= skLo && col("min_sk") <= skHi)
         .select(col("zbucket").cast("int")).collect().map(_.get(0))
       s.read.parquet(layoutDir)
-        .filter(col("zbucket").isin(buckets: _*))
+        .filter(col("zbucket").isin(ArraySeq.unsafeWrapArray(buckets): _*))
         .filter(col("pk") >= pkLo && col("pk") <= pkHi &&
           col("sk") >= skLo && col("sk") <= skHi)
         .groupBy("pk")

@@ -22,9 +22,12 @@ object Tables {
       //    timestamp; normalize to epoch-ns via unix_micros * 1000
       //    (session tz is pinned UTC, so NTZ→TZ cast is identity).
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      canonicalTsNs(spark.read.parquet(s"$dir/$name.parquet"))
-    } else spark.read.parquet(s"$dir/$name.parquet")
+      canonicalTsNs(spark.read.parquet(path(dir, name)))
+    } else spark.read.parquet(path(dir, name))
   }
+
+  /** The file [[load]] reads: the input path of a memo over the table. */
+  def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
   /** Normalize an events-style `ts` column to the canonical epoch-ns
     * BIGINT whatever its physical type: BIGINT (ns-as-LONG fixtures)
@@ -41,17 +44,6 @@ object Tables {
         df.withColumn(tsCol,
           unix_micros(col(tsCol).cast("timestamp")) * 1000L)
     }
-
-  // The memo must run each build thunk at most once per key, but a build
-  // is a whole Spark write job — far too long (and potentially re-entrant
-  // into another memoized dir) to run inside computeIfAbsent, which holds
-  // the map bin lock for the duration (an unrelated key hashing to the
-  // same bin would block, and CHM forbids re-entrant compute functions).
-  // So the map holds a FutureTask per key: putIfAbsent decides the single
-  // winner atomically, the build runs OUTSIDE any map lock, and losers
-  // (or re-entrant builds of a DIFFERENT key) just await the task.
-  private val memoCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), java.util.concurrent.FutureTask[String]]()
 
   /** Live pin dirs, oldest-first — ONE static shutdown hook reaps
     * whatever is left at exit (r15 ADVICE: the previous per-call
@@ -71,10 +63,15 @@ object Tables {
     * dir that could still be live. */
   val MaxLivePins: Int = 64
 
-  private lazy val pinReaperHook: Unit = {
+  /** Memoized layout dirs ([[memoTempDir]]), reaped by the same exit
+    * hook as pins but never recycled while the JVM lives. */
+  private val memoDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  private lazy val exitHook: Unit = {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      var d = livePins.pollFirst()
-      while (d != null) { rmTree(d.toFile); d = livePins.pollFirst() }
+      releasePins()
+      memoDirs.forEach(d => rmTree(d.toFile))
     }))
     ()
   }
@@ -106,7 +103,7 @@ object Tables {
     * deterministic (the memoTempDir gate-safety rule) — a declared
     * query stays a pure function of the fixture. */
   def pinned(df: DataFrame): DataFrame = {
-    pinReaperHook
+    exitHook
     while (livePins.size() >= MaxLivePins) {
       val old = livePins.pollFirst()
       if (old != null) rmTree(old.toFile)
@@ -119,25 +116,27 @@ object Tables {
     // pin files). With the pid suffix the sweep sees the owner alive,
     // and a SIGKILLed owner's pins are reclaimed like every other memo
     // dir.
-    val dir = {
-      val d = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_pin_${java.util.UUID.randomUUID().toString
-          .replace("-", "")}_${ProcessHandle.current().pid()}")
-      require(d.mkdirs(), s"could not create pin dir $d")
-      d.toPath
-    }
-    livePins.addLast(dir)
-    val target = dir.resolve("p").toString
+    val dir = tempDir(
+      s"pin_${java.util.UUID.randomUUID().toString.replace("-", "")}")
+    require(dir.mkdirs(), s"could not create pin dir $dir")
+    livePins.addLast(dir.toPath)
+    val target = s"$dir/p"
     df.write.mode("overwrite").parquet(target)
     df.sparkSession.read.parquet(target)
   }
+
+  /** `graft_<tag>_<pid>` under java.io.tmpdir: the name [[sweepOrphans]]
+    * reads its owner from. */
+  private def tempDir(tag: String): java.io.File =
+    new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft_${tag}_${ProcessHandle.current().pid()}")
 
   private def rmTree(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
   }
 
-  /** One-shot startup sweep of ORPHANED layout dirs: the shutdown hook
-    * below is in-process only, so a SIGKILLed JVM leaves its pid-keyed
+  /** One-shot startup sweep of ORPHANED layout dirs: the exit hook is
+    * in-process only, so a SIGKILLed JVM leaves its pid-keyed
     * `graft_<prefix>_<hash>_<pid>` dirs behind in /tmp. Any such dir
     * whose pid is no longer alive is dead by construction (the pid key
     * exists precisely so only its owner touches it) and is removed the
@@ -164,41 +163,25 @@ object Tables {
 
   /** Memoized per-fixture/per-pid temp materialization (the derived-
     * layout discipline shared by the IVF-index and tenant-layout
-    * queries): `build` runs ONCE per (prefix, fixture dir) per JVM into a
-    * temp dir keyed by the md5 of the fixture path (hashCode could
-    * collide across paths) + the JVM's pid (two concurrent processes on
-    * one fixture must not overwrite each other's live layout); the dir is
-    * removed on JVM exit so per-pid dirs don't accumulate across runs.
-    * The exit hook registers BEFORE the build runs, so a failed or
-    * interrupted build's partial dir is still cleaned; dirs orphaned by
-    * SIGKILL are reaped by [[sweepOrphans]] on the next process's first
-    * memoization. Contents must be deterministic — the memo is gate-safe
-    * only because rebuilding would produce identical bytes. */
+    * queries): `build` runs ONCE per (prefix, listing of the fixture dir)
+    * per JVM into a temp dir named by the [[Memo]] key's digest (a
+    * rewritten fixture builds into a fresh dir, never over a live one) +
+    * the JVM's pid (two concurrent processes on one fixture must not
+    * overwrite each other's live layout). The dir is registered with the
+    * one exit hook BEFORE the build runs, so a failed or interrupted
+    * build's partial dir is still cleaned; dirs orphaned by SIGKILL are
+    * reaped by [[sweepOrphans]] on the next process's first memoization.
+    * Contents must be deterministic — the memo is gate-safe only because
+    * rebuilding would produce identical bytes. */
   def memoTempDir(prefix: String, dir: String)(build: String => Unit)
       : String = {
     sweepOrphans
-    val task = new java.util.concurrent.FutureTask[String](() => {
-      val pathHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).take(8)
-        .map("%02x".format(_)).mkString
-      val target = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_${prefix}_${pathHash}_${ProcessHandle.current().pid()}")
-        .toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        rmTree(new java.io.File(target))
-      }))
-      build(target)
-      target
-    })
-    val winner =
-      Option(memoCache.putIfAbsent((prefix, dir), task)).getOrElse(task)
-    if (winner eq task) task.run() // single winner builds, outside the map
-    try winner.get()
-    catch { // unwrap so callers see the build's own failure, and a failed
-      // build doesn't poison the key forever
-      case e: java.util.concurrent.ExecutionException =>
-        memoCache.remove((prefix, dir), winner)
-        throw e.getCause
+    Memo.named("memoTempDir", prefix, dir) { digest =>
+      val target = tempDir(s"${prefix}_$digest")
+      exitHook
+      memoDirs.add(target.toPath)
+      build(target.toString)
+      target.toString
     }
   }
 }

@@ -1309,21 +1309,14 @@ object TextQueries {
     * before the last round stops early with a partial merge table — the
     * oracle's empty-round cross joins produce exactly the same partial
     * table, so the two engines share the degenerate-input contract.
-    * `use` receives the merges and the final-round word table and is
-    * evaluated INSIDE the persist scope (try/finally — no caller can
-    * leak the cached word table, even on a failing round).
     *
-    * The learned MERGES are memoized per fixture dir (r17): the merge
+    * The learned MERGES are memoized per documents file (r17): the merge
     * table is a trained model artifact — exactly the trainedCentroids /
-    * trainedWeights class (deterministic per corpus, so the memo is
-    * gate-safe) — and each un-memoized execution re-ran BpeRounds ×
-    * (pair-count aggregate + 1-row argmax collect) jobs. With the memo
-    * the final word table rebuilds as a pure replace-fold over the
-    * distinct-word table (no per-round jobs, no persist needed — the
-    * lineage has a single consumer per caller). */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, IndexedSeq[(Long, String, String, Long)]]()
-
+    * trainedWeights class — and each un-memoized execution re-ran
+    * BpeRounds × (pair-count aggregate + 1-row argmax collect) jobs.
+    * `use` receives the merges and the final word table, rebuilt as a
+    * pure replace-fold over the distinct-word table (no per-round jobs,
+    * no persist needed — the lineage has a single consumer per caller). */
   private def bpeBase(s: SparkSession, dir: String): DataFrame =
     // spread: the tokenize + explode fold is per-row compute over a
     // single-split fixture scan (cluster no-op by Par's gate)
@@ -1334,54 +1327,54 @@ object TextQueries {
       .select(col("freq"),
         regexp_replace(col("w"), "(.)", "|$1|").as("sym"))
 
+  private def merged(df: DataFrame, a: String, b: String): DataFrame =
+    df.withColumn("sym",
+      replace(col("sym"), lit(s"|$a||$b|"), lit(s"|$a$b|")))
+
   private def withBpe[A](s: SparkSession, dir: String)(
       use: (IndexedSeq[(Long, String, String, Long)], DataFrame) => A)
       : A = {
-    val memo = bpeCache.get(dir)
-    if (memo != null) {
-      val cur = memo.foldLeft(bpeBase(s, dir)) {
-        case (df, (_, a, b, _)) => df.withColumn("sym",
-          replace(col("sym"), lit(s"|$a||$b|"), lit(s"|$a$b|")))
-      }
-      return use(memo, cur)
-    }
-    val base = bpeBase(s, dir).persist()
-    try {
-      var cur = base
-      val merges =
-        IndexedSeq.newBuilder[(Long, String, String, Long)]
-      var r = 0
-      var dry = false
-      while (r < BpeRounds && !dry) {
-        val best = cur
-          .select(col("freq"),
-            split(trim(col("sym"), "|"), "\\|\\|").as("syms"))
-          .filter(size(col("syms")) >= 2)
-          .select(col("freq"), explode(transform(
-            sequence(lit(0), size(col("syms")) - 2),
-            i => struct(element_at(col("syms"), i + 1).as("a"),
-              element_at(col("syms"), i + 2).as("b")))).as("pr"))
-          .groupBy(col("pr.a").as("a"), col("pr.b").as("b"))
-          .agg(sum("freq").as("n"))
-          .orderBy(desc("n"), col("a"), col("b"))
-          .limit(1).collect()
-        if (best.isEmpty) dry = true
-        else {
-          val (a, b, n) = (best(0).getString(0), best(0).getString(1),
-            best(0).getLong(2))
-          cur = cur.withColumn("sym",
-            replace(col("sym"), lit(s"|$a||$b|"), lit(s"|$a$b|")))
-          merges += ((r.toLong, a, b, n))
+    val learned = Memo("bpeMerges", BpeRounds, Tables.path(dir, "documents")) {
+      // the word table is persisted for the rounds only (try/finally — a
+      // failing round cannot leak it)
+      val base = bpeBase(s, dir).persist()
+      try {
+        var cur = base
+        val merges =
+          IndexedSeq.newBuilder[(Long, String, String, Long)]
+        var r = 0
+        var dry = false
+        while (r < BpeRounds && !dry) {
+          val best = cur
+            .select(col("freq"),
+              split(trim(col("sym"), "|"), "\\|\\|").as("syms"))
+            .filter(size(col("syms")) >= 2)
+            .select(col("freq"), explode(transform(
+              sequence(lit(0), size(col("syms")) - 2),
+              i => struct(element_at(col("syms"), i + 1).as("a"),
+                element_at(col("syms"), i + 2).as("b")))).as("pr"))
+            .groupBy(col("pr.a").as("a"), col("pr.b").as("b"))
+            .agg(sum("freq").as("n"))
+            .orderBy(desc("n"), col("a"), col("b"))
+            .limit(1).collect()
+          if (best.isEmpty) dry = true
+          else {
+            val (a, b, n) = (best(0).getString(0), best(0).getString(1),
+              best(0).getLong(2))
+            cur = merged(cur, a, b)
+            merges += ((r.toLong, a, b, n))
+          }
+          r += 1
         }
-        r += 1
+        merges.result()
+      } finally {
+        base.unpersist()
+        ()
       }
-      val learned = merges.result()
-      bpeCache.put(dir, learned)
-      use(learned, cur)
-    } finally {
-      base.unpersist()
-      ()
     }
+    use(learned, learned.foldLeft(bpeBase(s, dir)) {
+      case (df, (_, a, b, _)) => merged(df, a, b)
+    })
   }
 
   /** BPE merge TRAINING — tokenizer training at corpus scale (the
@@ -2135,13 +2128,12 @@ object TextQueries {
       fitDsirModel(Tables.load(s, dir, "documents"), target)
     }
 
-  /** The served DSIR LUT (per-JVM memo of the persisted layout's
-    * bounded weight read — deterministic, gate-safe). */
-  private val dsirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Long]]()
+  /** The served DSIR LUT (memo of the persisted layout's bounded weight
+    * read, per documents file — the layout's only input). */
   private def dsirRatios(s: SparkSession, dir: String): Seq[Long] =
-    dsirCache.computeIfAbsent(dir, _ =>
-      graft.sources.ModelIndex.lut(s, dsirModelDir(s, dir)))
+    Memo("dsirLut", (), Tables.path(dir, "documents")) {
+      graft.sources.ModelIndex.lut(s, dsirModelDir(s, dir))
+    }
 
   /** Importance-resampling data selection (the DSIR shape, Xie et al.
     * 2023 — hashed n-gram importance weights of a TARGET domain against
@@ -2264,19 +2256,18 @@ object TextQueries {
       fitClassifierModel(Tables.load(s, dir, "documents"), target)
     }
 
-  /** The served classifier LUT (per-JVM memo of the persisted layout's
-    * bounded weight read — deterministic, gate-safe), ROUTED: the
-    * memoized layout is the declaration, and
+  /** The served classifier LUT (memo of the persisted layout's bounded
+    * weight read, per documents file — the layout's only input), ROUTED:
+    * the memoized layout is the declaration, and
     * [[graft.sources.ModelRouter.lutOr]]'s in-plan fallback is the
     * same deterministic fit — so `pipe_curate_indexed`'s quality gate
     * and `txt_classify_trained` follow the declare-once law
     * (spec-pinned identical in both declaration states). */
-  private val nbCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Long]]()
   private[graft] def trainedWeights(s: SparkSession, dir: String): Seq[Long] =
-    nbCache.computeIfAbsent(dir, _ =>
+    Memo("classifierLut", (), Tables.path(dir, "documents")) {
       routedClassifierWeights(s, Tables.load(s, dir, "documents"),
-        Seq(classifierModelDir(s, dir))))
+        Seq(classifierModelDir(s, dir)))
+    }
 
   /** Classifier weight LUT by declaration with the in-plan fit as the
     * fallback (the [[graft.sources.ModelRouter]] law;

@@ -3,6 +3,7 @@ package graft.operators
 import java.security.MessageDigest
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 import graft.functions.VectorOps
 
 /** Approximate nearest-neighbor search over an embedding column — the
@@ -324,7 +325,7 @@ object Ann {
       .collect().map(_.get(0))
     topKByCosine(
       graft.sources.ServedReads.of(spark, indexDir)
-        .filter(col("cluster").isin(probed: _*))
+        .filter(col("cluster").isin(ArraySeq.unsafeWrapArray(probed): _*))
         .filter(filter),
       idCol, vecCol, query, k)
   }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** Distributed AS-OF JOIN — the time-series operator Spark lacks
   * natively (SURVEY.md §4 custom-operator ladder, rung (a): composed
@@ -36,7 +37,7 @@ object AsOf {
                    tsCol: String, asofCol: String,
                    frame: org.apache.spark.sql.expressions.WindowSpec => org.apache.spark.sql.expressions.WindowSpec,
                    agg: Column => Column): DataFrame = {
-    val pCols = probe.columns
+    val pCols = ArraySeq.unsafeWrapArray(probe.columns)
     val pu = probe
       .withColumn("__side", lit(1))
       .withColumn("__qts", lit(null).cast("long"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** Product quantization (Jégou, Douze, Schmid: "Product Quantization for
   * Nearest Neighbor Search", TPAMI 2011) — the memory-side ANN companion
@@ -70,7 +71,7 @@ object Pq {
   def codeCol(vm: Column, codebook: Array[(Long, Array[Long])],
               sub: Int, subDim: Int): Column = {
     val sl = slice(vm, sub * subDim + 1, subDim)
-    array_min(array(codebook.map { case (cid, cm) =>
+    array_min(array(ArraySeq.unsafeWrapArray(codebook).map { case (cid, cm) =>
       struct(
         aggregate(
           zip_with(sl, typedLit(cm.toSeq), (x, y) => (x - y) * (x - y)),

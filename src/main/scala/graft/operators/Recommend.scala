@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** The remaining public Qdrant query APIs served by the collections the
   * reference creates (`bob_vector_db/qdrant_embedder.py:92-103` pins the
@@ -286,12 +287,12 @@ object Recommend {
     * and passed to [[matrixPairs]], so the pairs and the offsets form
     * can never be built from two different samples. */
   private def sampleIdsOf(coll: DataFrame, idCol: String, n: Int)
-      : Array[Long] =
-    coll.select(col(idCol)).orderBy(col(idCol)).limit(n)
-      .collect().map(_.getLong(0))
+      : Seq[Long] =
+    ArraySeq.unsafeWrapArray(coll.select(col(idCol)).orderBy(col(idCol))
+      .limit(n).collect()).map(_.getLong(0))
 
   private def matrixPairs(coll: DataFrame, vecCol: String, idCol: String,
-                          sampleIds: Array[Long], k: Int): DataFrame = {
+                          sampleIds: Seq[Long], k: Int): DataFrame = {
     val sample = coll.filter(col(idCol).isin(sampleIds: _*))
       .select(col(idCol).as("id_a"), col(vecCol).as("__va"))
     val other = coll.filter(col(idCol).isin(sampleIds: _*))
@@ -326,7 +327,7 @@ object Recommend {
     val spark = coll.sparkSession
     import spark.implicits._
     val off = sampleIds.zipWithIndex
-      .map { case (id, i) => (id, i.toLong) }.toSeq
+      .map { case (id, i) => (id, i.toLong) }
       .toDF("__id", "__off")
     pairs
       .join(broadcast(off.select(col("__id").as("id_a"),

@@ -454,19 +454,13 @@ object IndexRouter {
     GeoWindow(latLo, latHi, lonArms)
   }
 
-  /** ZERO-SCAN row count of a parquet read: the sum of the footer
-    * (row-group metadata) row counts over the scan's PRUNED file
-    * listing — `selectedPartitions` is the post-PartitionFilters
-    * listing, computed at planning time, so a routed index read costs
-    * one driver-side footer pass over its pruned files and NO Spark
-    * job. None when the plan is not a single parquet file scan (the
-    * caller falls back to whatever it did before). Used by
-    * [[VectorRouter]]'s filtered-search cardinality estimate: the count
-    * is the pruned listing's TOTAL rows — an upper bound of the routed
-    * condition's matches (bucket/cell co-residents included), which is
-    * exactly what a planner threshold wants (Qdrant's planner likewise
-    * consults index cardinality estimates, not exact predicate
-    * counts). */
+  /** The plan's scan when it is exactly one parquet file scan. */
+  private[graft] def singleScan(df: DataFrame)
+      : Option[org.apache.spark.sql.execution.FileSourceScanExec] =
+    df.queryExecution.executedPlan.collectLeaves().collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    } match { case Seq(f) => Some(f); case _ => None }
+
   /** (files, bytes) of a single-parquet-scan plan's PRUNED listing —
     * driver-side metadata already materialized at planning, zero IO.
     * None when the plan is not one parquet file scan. Lets
@@ -474,45 +468,51 @@ object IndexRouter {
     * not just file count: a tiny collection fragmented across many
     * files is still metadata to read (r12 ADVICE — the >64-file
     * fragmented small collection silently flipped plans). */
-  private[graft] def listingStats(df: DataFrame): Option[(Long, Long)] = {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    val scans = df.queryExecution.executedPlan.collectLeaves().collect {
-      case f: FileSourceScanExec => f
+  private[graft] def listingStats(df: DataFrame): Option[(Long, Long)] =
+    singleScan(df).map(_.selectedPartitions).map { listing =>
+      (listing.totalNumberOfFiles,
+        listing.filePartitionIterator.flatMap(_.files).map(_.getLen).sum)
     }
-    if (scans.length != 1) None
-    else {
-      val listing = scans.head.selectedPartitions
-      Some((listing.totalNumberOfFiles,
-        listing.filePartitionIterator.flatMap(_.files)
-          .map(_.getLen).sum))
-    }
-  }
 
+  /** ZERO-SCAN row count of a parquet read: the sum of the footer
+    * (row-group metadata) row counts over the scan's PRUNED file
+    * listing — `selectedPartitions` is the post-PartitionFilters
+    * listing, computed at planning time, so a routed index read costs
+    * one driver-side footer pass over its pruned files and NO Spark
+    * job. None when the plan is not a single parquet file scan (the
+    * caller falls back to whatever it did before), or when the listing
+    * has more than `maxFiles` files (a caller-set bound that keeps the
+    * footer pass an actual metadata read). Used by [[VectorRouter]]'s
+    * filtered-search cardinality estimate: the count is the pruned
+    * listing's TOTAL rows — an upper bound of the routed condition's
+    * matches (bucket/cell co-residents included), which is exactly what
+    * a planner threshold wants (Qdrant's planner likewise consults index
+    * cardinality estimates, not exact predicate counts). */
   private[graft] def metadataRowCount(df: DataFrame,
                                       maxFiles: Long = Long.MaxValue)
-      : Option[Long] = {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val scans = df.queryExecution.executedPlan.collectLeaves().collect {
-      case f: FileSourceScanExec => f
-    }
-    if (scans.length != 1) None
-    else {
-      val listing = scans.head.selectedPartitions
-      // a caller-set file bound keeps the driver-side footer pass an
-      // actual metadata read — past it, None (the caller falls back)
-      if (listing.totalNumberOfFiles > maxFiles) None
-      else {
+      : Option[Long] =
+    singleScan(df).map(_.selectedPartitions)
+      .filter(_.totalNumberOfFiles <= maxFiles).map { listing =>
         val conf = df.sparkSession.sessionState.newHadoopConf()
-        Some(listing.filePartitionIterator
-          .flatMap(_.files)
-          .map { st =>
-            val rd = ParquetFileReader.open(
-              HadoopInputFile.fromPath(st.getPath, conf))
-            try rd.getRecordCount finally rd.close()
-          }.sum)
+        listing.filePartitionIterator.flatMap(_.files)
+          .map(footerRows(_, conf)).sum
       }
+
+  /** One parquet file's row count from its footer, memoized per (path,
+    * mtime, length) — layout files are immutable once written (append
+    * adds files, compact swaps directories), so a footer read never goes
+    * stale; on a long-gated index (one file per cell per micro-batch)
+    * over remote storage this turns the per-call footer walk into one
+    * round-trip per NEW file instead of thousands per serve. Bounded: one
+    * Long per distinct file ever probed in the session. */
+  private[graft] def footerRows(
+      st: org.apache.spark.sql.execution.datasources.FileStatusWithMetadata,
+      conf: org.apache.hadoop.conf.Configuration): Long =
+    graft.Memo("footerRows",
+        (st.getPath.toString, st.getModificationTime, st.getLen)) {
+      import org.apache.parquet.hadoop.util.HadoopInputFile
+      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+        HadoopInputFile.fromPath(st.getPath, conf))
+      try rd.getRecordCount finally rd.close()
     }
-  }
 }

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** Materialized EXACT-TOKEN postings over a collection's text column —
   * the textbook BM25 serving layout (inverted index + document lengths
@@ -475,7 +476,7 @@ object LexIndex {
             "left_anti")
           .orderBy(col(idCol)).limit(n - rows.length)
           .withColumn(scoreCol, lit(0L))
-          .select(local.columns.map(col): _*)
+          .select(ArraySeq.unsafeWrapArray(local.columns).map(col): _*)
         local.unionAll(fill)
       }
     ranked.withColumn(rankCol,

@@ -94,17 +94,6 @@ object PayloadIndex {
 
   private def metaPath(dir: String) = Paths.get(dir, "_payload_index.json")
 
-  /** Serving reads go through the layout-read memo ([[ServedReads]] —
-    * the "hold the index open" discipline; measured ~45 s/query of
-    * re-listing on a 17.6k-dir geo grid without it). Every mutating
-    * verb here evicts before and after the mutation. */
-  private[sources] def servedRead(spark: SparkSession,
-                                  dir: String): DataFrame =
-    ServedReads.of(spark, dir)
-
-  private[sources] def evictServedRead(dir: String): Unit =
-    ServedReads.evict(dir)
-
   /** The value-bucket routing expression — shared by build (assignment)
     * and serving (constant-folded literal comparison), so the two can
     * never disagree. */
@@ -208,7 +197,7 @@ object PayloadIndex {
     // AFTER the data write: overwrite mode deletes the target dir first,
     // and a metadata record present without data would claim a live index
     writeMeta(dir, key, keyType, valueBuckets)
-    evictServedRead(dir)
+    ServedReads.evict(dir)
   }
 
   /** Materialize FROM a collection; returns the manifest cursor for
@@ -279,7 +268,7 @@ object PayloadIndex {
       .write.mode("overwrite")
       .partitionBy("src_bucket", "pbucket")
       .parquet(dir)
-    evictServedRead(dir)
+    ServedReads.evict(dir)
     writeMeta(dir, key, keyType, 0, kind = "range", origin = origin,
       width = width)
   }
@@ -326,7 +315,7 @@ object PayloadIndex {
         ++ lt.map(v => col(key) < lit(v)).toSeq
         ++ lte.map(v => col(key) <= lit(v)).toSeq)
       .reduce(_ && _)
-    servedRead(spark, dir)
+    ServedReads.of(spark, dir)
       .filter(prune && residual)
       .drop("pbucket", "src_bucket")
   }
@@ -350,7 +339,7 @@ object PayloadIndex {
         ++ hi.map(v => col("pbucket") <=
           lit(bucketOfValue(v, origin, width))).toSeq)
       .reduce(_ && _)
-    servedRead(spark, dir).filter(prune).drop("pbucket", "src_bucket")
+    ServedReads.of(spark, dir).filter(prune).drop("pbucket", "src_bucket")
   }
 
   /** Ordered scroll served from a RANGE index — Qdrant's `scroll` with
@@ -410,14 +399,14 @@ object PayloadIndex {
           (col(key) === lit(afterOrder) && col(idCol) < lit(afterId))
     def window(n: Int): DataFrame = {
       val w = ahead.take(n)
-      servedRead(spark, dir)
+      ServedReads.of(spark, dir)
         .filter(col("pbucket") >= lit(w.min) &&
           col("pbucket") <= lit(w.max) && residual)
     }
     if (ahead.isEmpty)
       // cursor past the last (first, desc) present bucket: empty page,
       // original schema
-      return servedRead(spark, dir).filter(lit(false))
+      return ServedReads.of(spark, dir).filter(lit(false))
         .drop("pbucket", "src_bucket")
     var n = 1
     while (n < ahead.length &&
@@ -579,7 +568,7 @@ object PayloadIndex {
       .write.mode("overwrite")
       .partitionBy("src_bucket", "plat", "plon")
       .parquet(dir)
-    evictServedRead(dir)
+    ServedReads.evict(dir)
     writeMeta(dir, key, "struct", 0, kind = "geo", cellsPerDeg = cpd,
       geo = Some(stats))
   }
@@ -610,7 +599,7 @@ object PayloadIndex {
     val cpd = cellsPerDegOf(dir)
     val lat = col(s"$key.lat").cast("double")
     val lon = col(s"$key.lon").cast("double")
-    servedRead(spark, dir)
+    ServedReads.of(spark, dir)
       .filter(
         col("plat") >= lit(cellOfDeg(brLat, cpd)) &&
           col("plat") <= lit(cellOfDeg(tlLat, cpd)) &&
@@ -676,7 +665,7 @@ object PayloadIndex {
         col("plat") <= lit(cellOfDeg(latHi, cpd))),
       lonPrune)
       .flatten.reduce(_ && _)
-    servedRead(spark, dir)
+    ServedReads.of(spark, dir)
       .filter(prune && graft.operators.PayloadFilter.geoRadiusPred(
         lat, lon, lit(cLat), lit(cLon), lit(radiusM)))
       .drop("plat", "plon", "src_bucket")
@@ -711,7 +700,7 @@ object PayloadIndex {
     val vb = valueBucketsOf(dir)
     val t = keyTypeOf(dir)
     if (stringKeyMismatch(t, value))
-      servedRead(spark, dir).filter(col(key) === lit(value))
+      ServedReads.of(spark, dir).filter(col(key) === lit(value))
         .drop("pbucket", "src_bucket")
     else {
       // cast the literal to the INDEXED type before hashing (still
@@ -721,7 +710,7 @@ object PayloadIndex {
       // double-promoted comparison does), not every key=3 row — the
       // conjunct folds to false and the whole scan prunes away
       val v = lit(value).cast(t)
-      servedRead(spark, dir)
+      ServedReads.of(spark, dir)
         .filter(col("pbucket") === valueBucket(v, vb) && col(key) === v &&
           v === lit(value))
         .drop("pbucket", "src_bucket")
@@ -745,7 +734,7 @@ object PayloadIndex {
     // pruning anyway — serving the entire disjunction with the unindexed
     // coercion semantics keeps the row-identical contract
     if (values.exists(stringKeyMismatch(t, _)))
-      servedRead(spark, dir)
+      ServedReads.of(spark, dir)
         .filter(values.map(raw => col(key) === lit(raw)).reduce(_ || _))
         .drop("pbucket", "src_bucket")
     else {
@@ -756,7 +745,7 @@ object PayloadIndex {
         (col("pbucket") === valueBucket(v, vb)) && col(key) === v &&
           v === lit(raw)
       }
-      servedRead(spark, dir)
+      ServedReads.of(spark, dir)
         .filter(arms.reduce(_ || _))
         .drop("pbucket", "src_bucket")
     }
@@ -776,7 +765,7 @@ object PayloadIndex {
     val partCols =
       if (kind == "geo") Seq("src_bucket", "plat", "plon")
       else Seq("src_bucket", "pbucket")
-    evictServedRead(indexDir) // a memoized listing predates the swap
+    ServedReads.evict(indexDir) // a memoized listing predates the swap
     val cur = Collections.stagedBucketRefresh(spark, collDir, indexDir,
       prev, partCols) { changed =>
       kind match {
@@ -792,7 +781,7 @@ object PayloadIndex {
             valueBucketsOf(indexDir))
       }
     }
-    evictServedRead(indexDir) // and one re-memoized mid-swap is stale too
+    ServedReads.evict(indexDir) // and one re-memoized mid-swap is stale too
     cur
   }
 }

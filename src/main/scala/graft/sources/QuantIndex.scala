@@ -174,8 +174,6 @@ object QuantIndex {
     // without data must never claim a live index)
     writeMeta(dir, m)
     ServedReads.evict(dir)
-    rowCountCache.remove(dir)
-    ()
   }
 
   /** Materialize FROM a collection; returns the manifest cursor for
@@ -549,20 +547,16 @@ object QuantIndex {
     * count). */
   private val FooterWalkFiles = 256L
 
-  /** Driver-side memoized parquet-footer row count of the sidecar
-    * (zero jobs; None = listing past [[FooterWalkFiles]] files). The
-    * count is a pure function of the persisted layout, so the memo is
-    * gate-safe (the corpusEstimate discipline); a [[refresh]]/[[build]]
-    * in the same JVM evicts through [[ServedReads.evict]]-adjacent use
-    * only at fixture scale, where the memo is rebuilt per dir path. */
-  private val rowCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[Long]]()
-
+  /** Driver-side parquet-footer row count of the sidecar (zero jobs;
+    * None = listing past [[FooterWalkFiles]] files), memoized on the
+    * sidecar's top-level listing: [[build]] rewrites every `src_bucket=`
+    * dir and [[refresh]] swaps in new ones, so either changes it. */
   private def collectionRows(spark: SparkSession, dir: String)
       : Option[Long] =
-    rowCountCache.computeIfAbsent(dir, _ =>
+    graft.Memo("quantRows", (), dir) {
       IndexRouter.metadataRowCount(read(spark, dir),
-        maxFiles = FooterWalkFiles))
+        maxFiles = FooterWalkFiles)
+    }
 
   /** Does the filter-scoped exact-bound stage pay for `dir`'s
     * collection? True when the sidecar's zero-job footer count exceeds
@@ -594,12 +588,10 @@ object QuantIndex {
     // layout that produces the mixed schema the candidate verbs can't
     // detect from inference alone; refuse loudly, force a full rebuild
     requireCurrentLayout(indexDir, "a partial bucket swap")
-    val cur = Collections.stagedBucketRefresh(spark, collDir, indexDir,
+    Collections.stagedBucketRefresh(spark, collDir, indexDir,
       prev, Seq("src_bucket")) { changed =>
       codesOf(changed, m).withColumn("src_bucket",
         Collections.bucketOf(m.idCol, Collections.numBuckets(collDir)))
     }
-    rowCountCache.remove(indexDir)
-    cur
   }
 }

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 import graft.functions.{ArgminCellExpr, VectorOps}
 
@@ -113,19 +114,22 @@ object SemanticDedupIndex {
     ()
   }
 
-  /** Driver-side pinned centroids, memoized per layout dir (k·dim
-    * doubles — the same driver bound as kmeansFit's own result table).
-    * Invalidated by [[build]]; [[append]] never changes artifacts. */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, Array[(Long, Seq[Double])]]()
-
+  /** Driver-side pinned centroids (k·dim doubles — the same driver bound
+    * as kmeansFit's own result table), memoized on the listing of
+    * `_centroids/`. */
   private def pinnedCentroidsLocal(spark: SparkSession, dir: String)
       : Array[(Long, Seq[Double])] =
-    centroidCache.computeIfAbsent(dir, _ =>
-      ServedReads.of(spark, dir + "/_centroids")
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
-        .sortBy(_._1))
+    pin(dir)(ServedReads.of(spark, dir + "/_centroids")
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
+      .sortBy(_._1))
+
+  /** The centroid memo, computed by `local`. [[build]], [[retrain]] and
+    * [[compact]] hand the table they just wrote to `_centroids/`:
+    * doubles round-trip parquet exactly, so it equals reading the pinned
+    * copy back, and the next [[append]] needs no job to read it. */
+  private def pin(dir: String)(local: => Array[(Long, Seq[Double])])
+      : Array[(Long, Seq[Double])] =
+    graft.Memo("pinnedCentroids", (), dir + "/_centroids")(local)
 
   /** The pinned centroid table (cid, cv) as a DataFrame. */
   def pinnedCentroids(spark: SparkSession, dir: String): DataFrame = {
@@ -186,7 +190,6 @@ object SemanticDedupIndex {
   def build(spark: SparkSession, points: DataFrame, idCol: String,
             vecCol: String, dir: String, centroids: DataFrame): Unit = {
     ServedReads.evict(dir)
-    centroidCache.remove(dir)
     val local = centroids
       .select(col("cid").cast("long"), col("cv").cast("array<double>"))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
@@ -207,10 +210,8 @@ object SemanticDedupIndex {
     local.toSeq.toDF("cid", "cv").repartition(1).write.mode("overwrite")
       .parquet(dir + "/_centroids")
     writeMeta(dir, Geometry(idCol, local.length, local.head._2.length))
-    // doubles round-trip parquet exactly, so pre-populating the memo
-    // with the collected table equals reading the pinned copy back
-    centroidCache.put(dir, local)
     ServedReads.evict(dir)
+    pin(dir)(local)
   }
 
   /** Incremental maintenance: assign ONLY the new points under the
@@ -243,27 +244,11 @@ object SemanticDedupIndex {
     * `IndexRouter.metadataRowCount` discipline, keyed by the partition
     * value). None when the listing exceeds `maxFiles` (a footer walk
     * that big stops being a metadata read), the scan is not a single
-    * file scan, or the partition column is missing. */
-  /** Footer row counts memoized per (path, mtime, length) — layout
-    * files are immutable once written (append adds files, compact
-    * swaps directories), so a footer read never goes stale; on a
-    * long-gated index (one file per cell per micro-batch) over remote
-    * storage this turns the per-call footer walk into one round-trip
-    * per NEW file instead of thousands per serve. Bounded: one Long
-    * per distinct layout file ever probed in the session. */
-  private val footerRowsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Long]()
-
+    * file scan, or the partition column is missing. Footers are read
+    * through the [[IndexRouter.footerRows]] memo. */
   private def cellFooterRows(df: DataFrame, maxFiles: Long = 4096)
       : Option[Map[Long, Long]] = {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val scans = df.queryExecution.executedPlan.collectLeaves().collect {
-      case f: FileSourceScanExec => f
-    }
-    if (scans.length != 1) return None
-    val scan = scans.head
+    val scan = IndexRouter.singleScan(df).getOrElse(return None)
     val ps = scan.relation.partitionSchema
     val ci = ps.fieldNames.indexOf(Reserved)
     if (ci < 0) return None
@@ -278,15 +263,7 @@ object SemanticDedupIndex {
     listing.filePartitionIterator.foreach { p =>
       val cell =
         if (isLong) p.values.getLong(ci) else p.values.getInt(ci).toLong
-      var rows = 0L
-      p.files.foreach { st =>
-        rows += footerRowsCache.computeIfAbsent(
-          (st.getPath.toString, st.getModificationTime, st.getLen), _ => {
-            val rd = ParquetFileReader.open(
-              HadoopInputFile.fromPath(st.getPath, conf))
-            try rd.getRecordCount finally rd.close()
-          })
-      }
+      val rows = p.files.map(IndexRouter.footerRows(_, conf)).sum
       m.update(cell, m.getOrElse(cell, 0L) + rows)
     }
     Some(m.toMap)
@@ -315,7 +292,8 @@ object SemanticDedupIndex {
     val idx = ServedReads.of(spark, dir)
     val pruned =
       if (cells.length > MaxLiteralCells) idx
-      else idx.filter(col("cluster").isin(cells.map(_._1): _*))
+      else idx.filter(
+        col("cluster").isin(ArraySeq.unsafeWrapArray(cells).map(_._1): _*))
     val delRows =
       if (cells.length > MaxLiteralCells) del.count()
       else cells.map(_._2).sum
@@ -603,7 +581,7 @@ object SemanticDedupIndex {
         finally s.close()
       }
     }
-    centroidCache.put(dir, local)
+    pin(dir)(local)
   }
 
   /** Small-files maintenance for a long-gated index (the
@@ -616,6 +594,7 @@ object SemanticDedupIndex {
     * verb, never a semantic one. */
   def compact(spark: SparkSession, dir: String): Unit = {
     val g = geometry(dir)
+    val local = pinnedCentroidsLocal(spark, dir)
     Drift.stagedRebuild(dir) { staging =>
       ServedReads.of(spark, dir)
         .select(col(g.idCol), col("v"), col("norm"), col("cluster"))
@@ -623,7 +602,8 @@ object SemanticDedupIndex {
         .write.mode("overwrite")
         .partitionBy("cluster")
         .parquet(staging)
-      pinnedCentroids(spark, dir).repartition(1)
+      import spark.implicits._
+      local.toSeq.toDF("cid", "cv").repartition(1)
         .write.mode("overwrite").parquet(staging + "/_centroids")
       writeMeta(staging, g)
       // the replay fence and the drift baseline travel too — rows are
@@ -641,5 +621,6 @@ object SemanticDedupIndex {
         }
       }
     }
+    pin(dir)(local)
   }
 }

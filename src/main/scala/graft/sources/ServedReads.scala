@@ -18,38 +18,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * layout has thousands of `cluster=` dirs and per-query relisting is
   * exactly the geo cliff. The memoized frame is a resolved relation
   * whose file listing is frozen at first use; PartitionFilters still
-  * prune per query — only the listing is shared.
-  *
-  * Soundness: layouts are DERIVED data that mutate only through their
-  * own verbs (build / refresh / retrain / staged swaps), and every such
-  * verb EVICTS the layout root before AND after the mutation (a reader
-  * re-memoizing mid-write sees a listing the post-mutation evict
-  * clears). Eviction is by PATH PREFIX, because some layouts are read
-  * through subdirectories (graph `_seeds/`, round tables) whose memo
-  * keys differ from the root. External mutation of a layout dir is
-  * outside the contract — rebuild instead. */
+  * prune per query — only the listing is shared. Entries are keyed by
+  * dir and dropped by [[evict]] ([[graft.Memo.untilEvicted]] states the
+  * soundness contract). */
 object ServedReads {
 
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+  /** The memoized read of `dir` for this session. */
+  def of(spark: SparkSession, dir: String): DataFrame =
+    graft.Memo.untilEvicted("servedRead", dir, spark)(spark.read.parquet(dir))
 
-  /** The memoized read of `dir` for this session (racing builders both
-    * produce equivalent relations; first wins). */
-  def of(spark: SparkSession, dir: String): DataFrame = {
-    val k = (spark, dir)
-    Option(cache.get(k)).getOrElse {
-      val df = spark.read.parquet(dir)
-      Option(cache.putIfAbsent(k, df)).getOrElse(df)
-    }
-  }
-
-  /** Drop every session's memoized reads of `dir` and everything under
-    * it. Called by every verb that mutates the layout, before and after
-    * the mutation. */
-  def evict(dir: String): Unit = {
-    cache.keySet.removeIf { case (_, d) =>
-      d == dir || d.startsWith(dir + "/")
-    }
-    ()
-  }
+  /** Drop every memoized read of `dir` and everything under it. Called
+    * by every verb that mutates the layout, before and after the
+    * mutation. */
+  def evict(dir: String): Unit = graft.Memo.evict(dir)
 }

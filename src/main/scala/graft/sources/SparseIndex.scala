@@ -94,7 +94,7 @@ object SparseIndex {
       (s"""{"kind": "text", "id_col": "$idCol", """ +
         s""""text_col": "$textCol"}""")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    PayloadIndex.evictServedRead(indexDir)
+    ServedReads.evict(indexDir)
     ()
   }
 
@@ -115,11 +115,11 @@ object SparseIndex {
   def refresh(spark: SparkSession, collDir: String, indexDir: String,
               idCol: String, textCol: String,
               prev: Collections.ManifestView): Collections.ManifestView = {
-    PayloadIndex.evictServedRead(indexDir) // memoized listing predates swap
+    ServedReads.evict(indexDir) // memoized listing predates swap
     val cur = Collections.stagedBucketRefresh(spark, collDir, indexDir,
       prev, Seq("src_bucket", "sgrp"))(
       postings(_, idCol, textCol, Collections.numBuckets(collDir)))
-    PayloadIndex.evictServedRead(indexDir) // re-memoized mid-swap is stale
+    ServedReads.evict(indexDir) // re-memoized mid-swap is stale
     cur
   }
 
@@ -160,7 +160,7 @@ object SparseIndex {
     val buckets = toks
       .map(t => graft.operators.Dedup.h32(t) % Buckets)
       .distinct
-    PayloadIndex.servedRead(spark, indexDir)
+    ServedReads.of(spark, indexDir)
       .filter(col("sgrp").isin(buckets.map(_ % Groups).distinct: _*) &&
         col("sbucket").isin(buckets: _*))
       .groupBy(idCol)
@@ -180,7 +180,7 @@ object SparseIndex {
              queryWeights: Seq[(Long, Long)], k: Int): DataFrame = {
     val qw = broadcast(
       spark.createDataFrame(queryWeights).toDF("sbucket", "w"))
-    PayloadIndex.servedRead(spark, indexDir)
+    ServedReads.of(spark, indexDir)
       .filter(col("sgrp").isin(queryWeights.map(_._1 % Groups).distinct: _*)
         && col("sbucket").isin(queryWeights.map(_._1): _*))
       .join(qw, "sbucket")

@@ -47,4 +47,15 @@ class ProfileSpec extends AnyFunSuite with SparkSpec {
       assert(p.gapMs >= 0)
     }
   }
+
+  test("Profile: a timed iteration of ann_ivf at sf0.01 is served from " +
+       "the memo: no miss and at least one hit") {
+    val dir = "/root/testdata/sf0.01"
+    val fn = SparkEntry.queries("ann_ivf")
+    Local.evaluate(fn(spark, dir)) // trains the centroids, untimed
+    graft.operators.Dedup.releaseCaches()
+    val p = Profile(spark)(Local.evaluate(fn(spark, dir)))
+    assert(p.memoMisses == 0, s"memo misses ${p.memoMisses}")
+    assert(p.memoHits >= 1, s"memo hits ${p.memoHits}")
+  }
 }
