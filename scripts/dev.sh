@@ -7,7 +7,7 @@
 #   scripts/dev.sh scaleprobe <sfDir> [factors] [key...]
 # e.g. scripts/dev.sh prof q1_pricing,v_knn <sfDir> 3
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 sbt -batch compile -error >/dev/null
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \

@@ -5,7 +5,7 @@
 set -e
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
-cd /root/repo
+cd "$(dirname "$0")/.."
 # fixture drift gate: fail BEFORE any query runs if the driver regenerated
 # the parquet with different types (see scripts/schema_fingerprint.py)
 python3 scripts/schema_fingerprint.py "$SF" scripts/fixture_schema.txt

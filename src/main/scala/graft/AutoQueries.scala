@@ -11,7 +11,9 @@ import graft.sources.VectorRouter
   * the server consults its own HNSW/quantization config). Every routed
   * key reuses its serving twin's oracle verbatim, projected to the
   * router's uniform `(vec_id, score_micro)` contract: routing is a plan
-  * decision, never a semantic one.
+  * decision, never a semantic one. The fixture's quant sidecar is under
+  * the router's one size gate at every gate SF, so the quant-declared
+  * keys serve — and are gated as — brute-force exact top-k.
   */
 object AutoQueries {
 
@@ -24,18 +26,54 @@ object AutoQueries {
                     dir: String): Seq[String] =
     Seq(quantIndexDir(s, dir))
 
+  /** Brute-force exact top-10 of query vector 0 over the embeddings
+    * `where` admits — the oracle of every key the router serves on its
+    * exact plan. */
+  private def exactSql(where: String): String = s"""
+      SELECT vec_id,
+             CAST(floor(list_cosine_similarity(CAST(embedding AS DOUBLE[]),
+                 $oracleQ0) * 1000000 + 0.5) AS BIGINT) AS score_micro
+      FROM embeddings
+      $where
+      ORDER BY list_cosine_similarity(CAST(embedding AS DOUBLE[]),
+               $oracleQ0) DESC, vec_id
+      LIMIT 10"""
+
+  /** The batched keys' query vector ids. */
+  private val BatchIds = Seq(0L, 3L)
+
+  /** [[exactSql]] per query of [[BatchIds]], in the router's batched
+    * (query_id, vec_id, score_micro) contract. */
+  private def exactMultiSql(where: String): String = {
+    val legs = BatchIds.map { i => s"""
+      r$i AS (
+        SELECT CAST($i AS BIGINT) AS query_id, vec_id,
+               CAST(floor(list_cosine_similarity(v,
+                 (SELECT v FROM e WHERE vec_id = $i)) * 1000000 + 0.5)
+                 AS BIGINT) AS score_micro
+        FROM e $where
+        ORDER BY list_cosine_similarity(v,
+          (SELECT v FROM e WHERE vec_id = $i)) DESC, vec_id
+        LIMIT 10)""" }
+    s"""
+      WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
+                 FROM embeddings),${legs.mkString(",")}
+      SELECT * FROM ${BatchIds.map(i => s"r$i")
+        .mkString(" UNION ALL SELECT * FROM ")}"""
+  }
+
   /** Routed search, no filter: the router sniffs the declared layout as
-    * `quant` and serves the nested prefetch chain over the codes sidecar
-    * — `v_prefetch_indexed`'s pipeline verbatim (BQ hamming top-100 →
-    * stored-int8 top-30 → exact top-10), so `v_prefetch`'s oracle gates
-    * it, projected to the router's output contract. */
+    * `quant`, and the sidecar's zero-job footer count is under the size
+    * gate ([[graft.sources.QuantIndex.scopedBoundPays]]) at every gate
+    * SF, so the router serves the one-scan exact plan — the same rows as
+    * [[vAutoExact]], gated by the same brute-force oracle. The prefetch
+    * chain a large collection routes to stays oracle-gated through
+    * `v_prefetch_indexed`. */
   val vAutoSearch = Q("v_auto_search",
     (s, dir) =>
       VectorRouter.queryPoints(s, Tables.load(s, dir, "embeddings"),
         "vec_id", "embedding", decls(s, dir), Nil, queryVec(s, dir, 0), 10),
-    Some(s"""
-      SELECT vec_id, score_micro
-      FROM (${VectorQueries.vPrefetch.oracle.get}) t"""))
+    Some(exactSql("")))
 
   /** The public Qdrant `search_params.exact = true` bypass: declarations
     * present but ignored — one scan, bounded heap, full-precision
@@ -45,24 +83,15 @@ object AutoQueries {
       VectorRouter.queryPoints(s, Tables.load(s, dir, "embeddings"),
         "vec_id", "embedding", decls(s, dir), Nil, queryVec(s, dir, 0), 10,
         params = VectorRouter.Params(exact = true)),
-    Some(s"""
-      SELECT vec_id,
-             CAST(floor(list_cosine_similarity(CAST(embedding AS DOUBLE[]),
-                 $oracleQ0) * 1000000 + 0.5) AS BIGINT) AS score_micro
-      FROM embeddings
-      ORDER BY list_cosine_similarity(CAST(embedding AS DOUBLE[]),
-               $oracleQ0) DESC, vec_id
-      LIMIT 10"""))
+    Some(exactSql("")))
 
-  /** Filtered routed search taking the SELECTIVE-FILTER plan (the Qdrant
-    * query-planner cardinality decision): the payload hash index on
-    * `label` estimates the filter's cardinality from its pruned read —
-    * under the threshold at every gate SF — so the router serves exact
-    * top-k over the payload-ROUTED filtered read instead of the vector
-    * index. Oracle: brute-forced filter + exact ranking — the plan
-    * choice must not change a row. (The over-threshold ANN branch is
-    * recall-bounded candidate post-filtering — spec-gated in
-    * OperatorSpec, not oracle-gated.) */
+  /** Filtered routed search taking the exact filtered-scan plan: the
+    * fixture's quant sidecar is under the size gate at every gate SF, so
+    * the router has no route and serves exact top-k over the
+    * payload-ROUTED filtered read (the `label` hash index) without
+    * taking the cardinality estimate. Oracle: brute-forced filter +
+    * exact ranking — the plan choice must not change a row. (Over the
+    * gate, the over-threshold quant branch is [[vAutoFilteredQuant]].) */
   val vAutoFiltered = Q("v_auto_filtered",
     (s, dir) =>
       VectorRouter.queryPoints(s, Tables.load(s, dir, "embeddings"),
@@ -70,15 +99,7 @@ object AutoQueries {
         Seq("label" -> payloadIdxDir(s, dir)), queryVec(s, dir, 0), 10,
         dslJson = Some("""
           {"must": [{"key": "label", "match": {"value": 3}}]}""")),
-    Some(s"""
-      SELECT vec_id,
-             CAST(floor(list_cosine_similarity(CAST(embedding AS DOUBLE[]),
-                 $oracleQ0) * 1000000 + 0.5) AS BIGINT) AS score_micro
-      FROM embeddings
-      WHERE label = 3
-      ORDER BY list_cosine_similarity(CAST(embedding AS DOUBLE[]),
-               $oracleQ0) DESC, vec_id
-      LIMIT 10"""))
+    Some(exactSql("WHERE label = 3")))
 
   /** [[vAutoFiltered]]'s OVER-THRESHOLD quant route, pinned
     * deterministically with the public planner knob (`scanThreshold = 0`
@@ -89,12 +110,12 @@ object AutoQueries {
     * the same oracle as `v_auto_filtered` gates BOTH cardinality plan
     * branches. This closes the r15 verdict's one collection-growth
     * dense path: the only full-vector bytes read are the candidates'.
-    * r17: the collection-size gate
-    * ([[graft.sources.QuantIndex.scopedBoundPays]]) routes the
-    * fixture-sized sidecar to the exact filtered scan (the θ stage's
-    * extra bounded jobs are pure overhead on a small collection); the
-    * scoped-θ branch itself stays row-pinned by the forced-open-gate
-    * spec (OperatorSpec) and serves unchanged at scale. */
+    * The router's one size gate
+    * ([[graft.sources.QuantIndex.scopedBoundPays]]) gives the
+    * fixture-sized sidecar no route, so at every gate SF this key serves
+    * the exact filtered scan before any estimate is taken; the scoped-θ
+    * branch itself stays row-pinned by the forced-open-gate spec
+    * (OperatorSpec) and serves unchanged at scale. */
   val vAutoFilteredQuant = Q("v_auto_filtered_quant",
     (s, dir) =>
       VectorRouter.queryPoints(s, Tables.load(s, dir, "embeddings"),
@@ -119,122 +140,38 @@ object AutoQueries {
       SELECT vec_id, score_micro
       FROM (${GraphAnnQueries.annGraphSearch.oracle.get}) t"""))
 
-  /** One query's routed-quant serving chain as DuckDB CTEs (shared `d` /
-    * `bits` packing CTEs): BQ hamming top-100 → candidate-local int8
-    * de/re-quantize rescore top-30 → exact cosine top-10 — `v_prefetch`'s
-    * oracle parameterized on the query id and projected to the router's
-    * batched (query_id, vec_id, score_micro) contract. */
-  private def prefetchBlock(qid: Long): String = s"""
-      q_$qid AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-                 FROM embeddings WHERE vec_id = $qid),
-      qb_$qid AS (
-        SELECT list_transform(range(2), w ->
-                 CAST(list_sum(list_transform(range(32), j ->
-                   CASE WHEN qv[w*32 + j + 1] > 0
-                        THEN (1::BIGINT << j) ELSE 0::BIGINT END))
-                 AS BIGINT)) AS qw
-        FROM q_$qid),
-      s1_$qid AS (
-        SELECT vec_id, v,
-               CAST(bit_count(xor(words[1], qw[1]))
-                    + bit_count(xor(words[2], qw[2])) AS BIGINT) AS hamming
-        FROM bits, qb_$qid
-        ORDER BY hamming ASC, vec_id LIMIT 100),
-      r_$qid AS (SELECT vec_id, v, list_min(v) AS mn, list_max(v) AS mx
-                 FROM s1_$qid),
-      dq_$qid AS (
-        SELECT vec_id, v,
-               CASE WHEN mx = mn THEN list_transform(v, x -> mn)
-                    ELSE list_transform(v, x ->
-                      mn + CAST(CAST(floor((x - mn) / (mx - mn) * 255 + 0.5)
-                        AS INT) AS DOUBLE) / 255 * (mx - mn))
-               END AS vq
-        FROM r_$qid),
-      s2_$qid AS (
-        SELECT vec_id, v,
-               list_inner_product(vq, (SELECT qv FROM q_$qid))
-               / (sqrt(list_inner_product(vq, vq))
-                  * sqrt(list_inner_product((SELECT qv FROM q_$qid),
-                                            (SELECT qv FROM q_$qid))))
-                 AS score_q
-        FROM dq_$qid
-        ORDER BY score_q DESC, vec_id LIMIT 30),
-      res_$qid AS (
-        SELECT CAST($qid AS BIGINT) AS query_id, vec_id,
-               CAST(floor(list_cosine_similarity(v, (SELECT qv FROM q_$qid))
-                 * 1000000 + 0.5) AS BIGINT) AS score_micro
-        FROM s2_$qid
-        ORDER BY list_cosine_similarity(v, (SELECT qv FROM q_$qid)) DESC,
-                 vec_id
-        LIMIT 10)"""
-
   /** BATCHED routed search (`query_batch_points` through the declared
-    * indexes): two queries, ONE route decision, one codes-table scan for
-    * both stage-1 prefilters and one literal-id probe for both exact
-    * stages ([[VectorRouter.queryPointsMulti]] — job budget independent
-    * of the batch size, spec-gated in OperatorSpec). The oracle replays
-    * BOTH nested-prefetch chains in one statement over shared packing
-    * CTEs, each chain `v_prefetch`'s oracle verbatim — every query's
-    * rows equal its single-query `v_auto_search` serving exactly. */
+    * indexes): two queries, ONE route decision. Under the quant size gate
+    * (every gate SF) the batch is ONE exact pass with per-query map-side
+    * heaps ([[VectorRouter.queryPointsMulti]] — job budget independent
+    * of the batch size, spec-gated in OperatorSpec, as is the batched
+    * prefetch chain of an over-gate collection). The oracle is each
+    * query's brute-force exact top-10 — every query's rows equal its
+    * single-query `v_auto_search` serving exactly. */
   val vAutoSearchMulti = Q("v_auto_search_multi",
     (s, dir) =>
       VectorRouter.queryPointsMulti(s, Tables.load(s, dir, "embeddings"),
         "vec_id", "embedding", decls(s, dir),
-        Seq(0L, 3L).map(i => i -> queryVec(s, dir, i)), 10),
-    Some(s"""
-      WITH d AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      bits AS (
-        SELECT vec_id, v,
-               list_transform(range(2), w ->
-                 CAST(list_sum(list_transform(range(32), j ->
-                   CASE WHEN v[w*32 + j + 1] > 0
-                        THEN (1::BIGINT << j) ELSE 0::BIGINT END))
-                 AS BIGINT)) AS words
-        FROM d),
-      ${prefetchBlock(0)},
-      ${prefetchBlock(3)}
-      SELECT * FROM res_0 UNION ALL SELECT * FROM res_3"""))
+        BatchIds.map(i => i -> queryVec(s, dir, i)), 10),
+    Some(exactMultiSql("")))
 
   /** BATCHED + FILTERED routed search (the shared-filter
     * `query_batch_points` shape): two queries under one selective
-    * `label = 3` filter. The zero-job footer estimate decides the plan
-    * ONCE — under the threshold at every gate SF — so the whole batch
-    * is ONE exact pass over the payload-routed filtered read with
-    * per-query map-side heaps ([[VectorRouter.exactTopKMulti]]). The
-    * oracle replays both filtered exact chains; the over-threshold
-    * batched candidate-post-filter branch is spec-gated in OperatorSpec
-    * (recall-bounded, like the single-query branch). */
+    * `label = 3` filter. The route is decided ONCE — no route under the
+    * size gate at every gate SF — so the whole batch is ONE exact pass
+    * over the payload-routed filtered read with per-query map-side heaps
+    * ([[VectorRouter.exactTopKMulti]]). The oracle replays both filtered
+    * exact chains; the over-gate batched branches are
+    * [[vAutoFilteredQuantMulti]] and the specs in OperatorSpec. */
   val vAutoFilteredMulti = Q("v_auto_filtered_multi",
     (s, dir) =>
       VectorRouter.queryPointsMulti(s, Tables.load(s, dir, "embeddings"),
         "vec_id", "embedding", decls(s, dir),
-        Seq(0L, 3L).map(i => i -> queryVec(s, dir, i)), 10,
+        BatchIds.map(i => i -> queryVec(s, dir, i)), 10,
         dslJson = Some(
           """{"must": [{"key": "label", "match": {"value": 3}}]}"""),
         payloadIndexes = Seq("label" -> payloadIdxDir(s, dir))),
-    Some(s"""
-      WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-                 FROM embeddings),
-      r0 AS (
-        SELECT CAST(0 AS BIGINT) AS query_id, vec_id,
-               CAST(floor(list_cosine_similarity(v,
-                 (SELECT v FROM e WHERE vec_id = 0)) * 1000000 + 0.5)
-                 AS BIGINT) AS score_micro
-        FROM e WHERE label = 3
-        ORDER BY list_cosine_similarity(v,
-          (SELECT v FROM e WHERE vec_id = 0)) DESC, vec_id
-        LIMIT 10),
-      r3 AS (
-        SELECT CAST(3 AS BIGINT) AS query_id, vec_id,
-               CAST(floor(list_cosine_similarity(v,
-                 (SELECT v FROM e WHERE vec_id = 3)) * 1000000 + 0.5)
-                 AS BIGINT) AS score_micro
-        FROM e WHERE label = 3
-        ORDER BY list_cosine_similarity(v,
-          (SELECT v FROM e WHERE vec_id = 3)) DESC, vec_id
-        LIMIT 10)
-      SELECT * FROM r0 UNION ALL SELECT * FROM r3"""))
+    Some(exactMultiSql("WHERE label = 3")))
 
   /** The BATCHED over-threshold quant route (`scanThreshold = 0` on
     * [[vAutoFilteredMulti]]'s requests) — EXACT by the same r16 scoped
@@ -243,14 +180,15 @@ object AutoQueries {
     * ([[graft.sources.QuantIndex.cosineCandidatesMulti]] with scope),
     * one union-pool exact rescore. The UNCHANGED `v_auto_filtered_multi`
     * oracle gates it — the batched filtered quant branch is no longer
-    * spec-only. r17: gated like the single-query route — a small
-    * collection ([[graft.sources.QuantIndex.scopedBoundPays]]) serves
-    * the batched exact filtered scan instead, same rows either way. */
+    * spec-only. Under the router's one size gate
+    * ([[graft.sources.QuantIndex.scopedBoundPays]]) — every gate SF — a
+    * small collection serves the batched exact filtered scan instead,
+    * same rows either way. */
   val vAutoFilteredQuantMulti = Q("v_auto_filtered_quant_multi",
     (s, dir) =>
       VectorRouter.queryPointsMulti(s, Tables.load(s, dir, "embeddings"),
         "vec_id", "embedding", decls(s, dir),
-        Seq(0L, 3L).map(i => i -> queryVec(s, dir, i)), 10,
+        BatchIds.map(i => i -> queryVec(s, dir, i)), 10,
         dslJson = Some(
           """{"must": [{"key": "label", "match": {"value": 3}}]}"""),
         payloadIndexes = Seq("label" -> payloadIdxDir(s, dir)),

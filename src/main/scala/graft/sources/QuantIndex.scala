@@ -524,20 +524,26 @@ object QuantIndex {
       .select(col("query_id"), col(m.idCol), col("lb"), col("ub"))
   }
 
-  /** Rows below which the FILTER-SCOPED exact-bound stage LOSES to a
-    * plain full-precision scan of the scoped rows (r17, verdict #1):
-    * the scoped θ path spends two extra bounded jobs (the θ heap's
-    * 1-row collect + the superset filter) plus a codes-sliver scan
-    * before the caller's rescore — pure constant overhead when the
-    * population is small enough that its full vectors are a few MB
-    * (65 536 rows × 256 B/vector ≈ 16 MB: sub-second single-pass work
-    * on ANY hardware, while two extra job launches never are free).
-    * The bound is on the COLLECTION (a zero-job parquet-footer count of
-    * the sidecar), which upper-bounds every scope — a small collection
-    * can never make the θ stage pay, however unselective the filter.
-    * Overridable per session (`spark.graft.quant.scopedScanRows`) so a
-    * deployment can move the break-even; the default is justified by
-    * the byte math above, not tuned to the local bench. */
+  /** Rows at or below which a quant declaration does not pay for
+    * itself: [[VectorRouter]] gives such a collection NO route, so
+    * knn, batch and filtered reads all take the one-scan exact plan
+    * (Qdrant's `full_scan_threshold` plain search), and
+    * [[graft.VectorQueries]]' phrase-scoped key takes its plain
+    * semi-join. Every indexed plan spends constant extra jobs — the
+    * prefetch chain's driver-pinned candidate collect and id probe, the
+    * scoped bound's θ collect and superset filter — that a small
+    * collection never earns back: 65 536 rows × 256 B/vector ≈ 16 MB
+    * is sub-second single-pass work on any hardware, while extra job
+    * launches never are free. Measured on a 4-core host at 65 536 ×
+    * 384-d doubles (≈ 200 MB of vectors), the exact scan still wins:
+    * knn 388 vs 831 ms, an 8-query batch 1.10 vs 1.98 s (medians of 10,
+    * exact vs prefetch); at 262 144 rows it still does (1.27 vs 2.28 s,
+    * 3.43 vs 4.89 s), so the default is conservative for wide vectors
+    * too. The bound is on the COLLECTION (a zero-job
+    * parquet-footer count of the sidecar), which upper-bounds every
+    * scope. Overridable per session (`spark.graft.quant.scopedScanRows`)
+    * so a deployment can move the break-even; the default is justified
+    * by the byte math above, not tuned to the local bench. */
   def scopedScanRows(spark: SparkSession): Long =
     spark.conf.get("spark.graft.quant.scopedScanRows", "65536").toLong
 
@@ -558,14 +564,14 @@ object QuantIndex {
         maxFiles = FooterWalkFiles)
     }
 
-  /** Does the filter-scoped exact-bound stage pay for `dir`'s
-    * collection? True when the sidecar's zero-job footer count exceeds
-    * [[scopedScanRows]] (or the listing is too big to walk — a big
-    * collection by construction). Callers route small collections to
-    * the plain filtered scan — the same rows either way (both paths are
-    * EXACT; the scoped bound is a superset-then-rescore of the very
-    * scan the small path runs), so this is a plan choice, never a
-    * semantic one. */
+  /** Does the sidecar at `dir` pay for itself? True when its zero-job
+    * footer count exceeds [[scopedScanRows]] (or the listing is too big
+    * to walk — a big collection by construction). The one size gate:
+    * [[VectorRouter]] routes a quant declaration only when it pays, and
+    * serves every read class of a smaller collection by the exact scan.
+    * For the filter-scoped bound this is a plan choice, never a
+    * semantic one (both paths are EXACT); for the unfiltered prefetch
+    * chain the small side is exact where the chain is recall-bounded. */
   def scopedBoundPays(spark: SparkSession, dir: String): Boolean =
     collectionRows(spark, dir).forall(_ > scopedScanRows(spark))
 

@@ -44,6 +44,14 @@ import graft.operators.GraphAnn
   * (Qdrant `quantization.ignore`) skips quant declarations and falls
   * through to the next.
   *
+  * One size gate, decided before any compute: when the winning
+  * declaration is quant and its sidecar's zero-job footer count is at
+  * or under `spark.graft.quant.scopedScanRows`
+  * ([[QuantIndex.scopedBoundPays]]), there is no route — every read
+  * class (knn, batch, filtered) takes the one-scan EXACT plan, the
+  * Qdrant `full_scan_threshold` "plain search" of a small segment.
+  * Exact rows, no driver pin, no cardinality estimate.
+  *
   * == Filtered search: the cardinality plan choice ==
   *
   * With a filter DSL, the router implements the documented Qdrant query
@@ -59,10 +67,11 @@ import graft.operators.GraphAnn
   * unknowable without the very scan the decision is trying to avoid —
   * same ANN plan the old whole-collection count job always chose).
   *
-  *  - estimate ≤ `scanThreshold` (or nothing routable): exact top-k over
-  *    the payload-ROUTED filtered read — row-identical to brute force by
-  *    [[IndexRouter]]'s superset+residual contract (the oracle-gated
-  *    path);
+  *  - no route (nothing declared, `exact`, or a quant declaration
+  *    under the size gate), or estimate ≤ `scanThreshold`: exact top-k
+  *    over the payload-ROUTED filtered read — row-identical to brute
+  *    force by [[IndexRouter]]'s superset+residual contract (the
+  *    oracle-gated path); with no route the estimate is never taken;
   *  - above the threshold, GRAPH declaration: FILTERED TRAVERSAL (r13 —
   *    the filtrable-HNSW shape): the beam routes unfiltered through the
   *    graph while the result pool is every visited node passing the
@@ -71,7 +80,8 @@ import graft.operators.GraphAnn
   *    visited set where post-filtering a k-beam under-returns.
   *    Oracle-gated (`v_auto_filtered_graph` replays the per-round
   *    scored-set union);
-  *  - above the threshold, QUANT declaration: FILTER-SCOPED EXACT-BOUND
+  *  - above the threshold, QUANT declaration over the size gate:
+  *    FILTER-SCOPED EXACT-BOUND
   *    serving (r16 — Qdrant's filtered search with quantization
   *    enabled): the predicate's id population (a pruned payload-column
   *    scan) scopes the codes-sidecar quantization-error bound — θ and
@@ -139,13 +149,16 @@ object VectorRouter {
   def quantDirOf(dirs: Seq[String]): Option[String] =
     dirs.find(d => kindOf(d).contains("quant"))
 
-  /** The first usable declaration under `params`, if any. */
-  private def route(vectorIndexes: Seq[String], params: Params)
-      : Option[(String, String)] =
+  /** The first usable declaration under `params`, if any; a quant one
+    * under the size gate ([[QuantIndex.scopedBoundPays]]) is none. */
+  private def route(spark: SparkSession, vectorIndexes: Seq[String],
+                    params: Params): Option[(String, String)] =
     if (params.exact) None
     else vectorIndexes.iterator
       .flatMap(d => kindOf(d).map((_, d)))
       .find { case (kind, _) => !(params.quantIgnore && kind == "quant") }
+      .filter { case (kind, dir) =>
+        kind != "quant" || QuantIndex.scopedBoundPays(spark, dir) }
 
   /** Serve a top-`k` cosine search through the declared indexes. */
   def queryPoints(spark: SparkSession, points: DataFrame, idCol: String,
@@ -154,7 +167,7 @@ object VectorRouter {
                   query: Seq[Double], k: Int,
                   dslJson: Option[String] = None,
                   params: Params = Params()): DataFrame = {
-    val routed = route(vectorIndexes, params)
+    val routed = route(spark, vectorIndexes, params)
     dslJson match {
       case None => routed match {
         case None => exactTopK(points, idCol, vecCol, query, k)
@@ -178,8 +191,7 @@ object VectorRouter {
             GraphAnn.beamSearchIndexedFiltered(points, idCol, vecCol, dir,
                 query, params.beam, params.rounds, k, pred)
               .select(col("id").as(idCol), col("score_micro"))
-          case Some(("quant", dir)) if estimate > params.scanThreshold &&
-              QuantIndex.scopedBoundPays(spark, dir) =>
+          case Some(("quant", dir)) if estimate > params.scanThreshold =>
             // FILTER-SCOPED EXACT-BOUND serving (r16 — the quant kind's
             // filtered search is EXACT, not candidate post-filtering):
             // the predicate's id population (a pruned payload-column
@@ -190,11 +202,6 @@ object VectorRouter {
             // candidates' full vectors. Row-identical to brute force
             // over the filtered points (oracle-gated:
             // v_auto_filtered_quant), at codes-sliver stage-1 IO.
-            // scopedBoundPays (r17): a SMALL collection (zero-job
-            // footer count) falls through to the exact filtered scan
-            // below — the θ stage's two extra bounded jobs are pure
-            // overhead when every filtered vector is a few MB; same
-            // rows either way (both branches exact).
             val m = QuantIndex.metaOf(dir)
             val scope = points.filter(pred)
               .select(col(idCol).as(m.idCol))
@@ -203,16 +210,6 @@ object VectorRouter {
               .select(col(m.idCol).as(idCol))
             exactTopK(GraphAnn.inIdsFrame(points, idCol, cands), idCol,
               vecCol, query, k)
-          case Some(("quant", _)) if estimate > params.scanThreshold =>
-            // quant declared but the collection is too small for the
-            // scoped bound to pay: the exact filtered-scan plan (NEVER
-            // the ivfpq post-filter branch below — that one is
-            // recall-bounded, this one must stay row-identical to
-            // brute force)
-            exactTopK(
-              IndexRouter.filtered(spark, points, payloadIndexes, dsl,
-                idCol),
-              idCol, vecCol, query, k)
           case Some((kind, dir)) if estimate > params.scanThreshold =>
             // candidate post-filtering (see scaladoc: recall-bounded —
             // the ivfpq kind; quant and graph serve filtered-exact and
@@ -240,10 +237,12 @@ object VectorRouter {
     * [[graft.operators.GraphAnn.beamSearchMultiIndexed]] (lock-step
     * beams) — followed by ONE literal-id probe of the union candidate
     * set for the exact stage, scoring each row against its own query
-    * via the broadcast query frame. Total jobs are independent of the
-    * batch size (spec-gated), and each query's rows equal its
-    * single-query [[queryPoints]] result exactly (oracle-gated:
-    * `v_auto_search_multi` replays N chains in one statement).
+    * via the broadcast query frame. With no route (including a quant
+    * declaration under the size gate) the batch is ONE exact pass
+    * ([[exactTopKMulti]] — per-query map-side heaps; oracle-gated:
+    * `v_auto_search_multi`). Total jobs are independent of the batch
+    * size (spec-gated), and each query's rows equal its single-query
+    * [[queryPoints]] result exactly.
     * Point ids must be integral (the graph/heap stages' long-id
     * contract — same as every materialized vector layout).
     *
@@ -266,7 +265,7 @@ object VectorRouter {
     // reject oversized batches at the public entry (clearest site name);
     // every batched stage-1 repeats the check for its direct callers
     graft.operators.Knn.requireBatch(queries.length, "queryPointsMulti")
-    val routed = route(vectorIndexes, params)
+    val routed = route(spark, vectorIndexes, params)
     dslJson match {
       case None => routed match {
         case None => exactTopKMulti(points, idCol, vecCol, queries, k)
@@ -297,17 +296,13 @@ object VectorRouter {
                 resultPred = Some(pred))
               .select(col("query_id"), col("id").as(idCol),
                 col("score_micro"))
-          case Some(("quant", dir)) if estimate > params.scanThreshold &&
-              QuantIndex.scopedBoundPays(spark, dir) =>
+          case Some(("quant", dir)) if estimate > params.scanThreshold =>
             // batched FILTER-SCOPED EXACT-BOUND serving (r16): one
             // shared scope population (the filter is per batch), all
             // queries through the two scoped codes-only scans
             // ([[QuantIndex.cosineCandidatesMulti]] with scope), one
             // union-pool exact rescore — per query identical to the
             // single-query filtered route (spec-gated).
-            // scopedBoundPays (r17): small collections fall through to
-            // the batched exact filtered scan below (same rows — both
-            // branches exact; the single-query route gates identically)
             val m = QuantIndex.metaOf(dir)
             val scope = points.filter(pred)
               .select(col(idCol).as(m.idCol))
@@ -317,13 +312,6 @@ object VectorRouter {
                   Some(scope))
                 .select(col("query_id"), col(m.idCol).as(idCol)),
               queries, k, byMicro = false)
-          case Some(("quant", _)) if estimate > params.scanThreshold =>
-            // small collection: batched exact filtered scan (never the
-            // recall-bounded post-filter branch below)
-            exactTopKMulti(
-              IndexRouter.filtered(spark, points, payloadIndexes, dsl,
-                idCol),
-              idCol, vecCol, queries, k)
           case Some((kind, dir)) if estimate > params.scanThreshold =>
             // candidate post-filtering (recall-bounded, see scaladoc —
             // the ivfpq kind)

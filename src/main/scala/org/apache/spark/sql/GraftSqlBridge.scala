@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * expose the custom codegen vector expressions
   * (graft.functions.VectorExpressions) as plain `Column` functions — and
   * to the listener bus's `private[spark]` drain, which `graft.Profile`
-  * needs before it detaches its listener.
+  * needs before it detaches its listener (and the specs before they
+  * read a job group's count).
   * Everything else in graft.* uses only public API. */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)

@@ -10,7 +10,7 @@ import graft.sources.Collections.VectorConfig
 class CollectionsSpec extends AnyFunSuite with SparkSpec {
 
   test("create-iff-absent records config; second create is a no-op") {
-    val dir = Files.createTempDirectory("graft-coll").toString + "/c1"
+    val dir = SparkSpec.tempDir("graft-coll").toString + "/c1"
     assert(!Collections.exists(dir))
     Collections.create(dir, VectorConfig(64))
     assert(Collections.exists(dir))
@@ -20,7 +20,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("search: metric dispatch (cosine vs l2), info, DSL filter") {
-    val dir = Files.createTempDirectory("graft-coll").toString + "/c4"
+    val dir = SparkSpec.tempDir("graft-coll").toString + "/c4"
     val emb = Tables.load(spark, sf, "embeddings").withColumn("seq", lit(0))
     new Collections.ParquetCollectionSink(spark, dir, VectorConfig(64),
       "embedding", "vec_id", "seq").write(emb)
@@ -43,7 +43,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
     assert(filtered.collect().forall(r => r.getInt(r.fieldIndex("label")) == 3))
 
     // an l2 collection orders ascending: self-match first with distance 0
-    val dirL2 = Files.createTempDirectory("graft-coll").toString + "/c5"
+    val dirL2 = SparkSpec.tempDir("graft-coll").toString + "/c5"
     new Collections.ParquetCollectionSink(spark, dirL2,
       VectorConfig(64, "l2"), "embedding", "vec_id", "seq").write(emb)
     val l2hits = Collections.search(spark, dirL2, "embedding", "vec_id", q, 3)
@@ -59,7 +59,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
 
   test("legacy crash recovery: interrupted pre-manifest swap restores " +
        "from the .old backup, then migrates to the manifest") {
-    val dir = Files.createTempDirectory("graft-coll").toString + "/c3"
+    val dir = SparkSpec.tempDir("graft-coll").toString + "/c3"
     Collections.create(dir, VectorConfig(64))
     // build the pre-manifest bucketed layout by hand (data/bucket=k, no
     // manifest), then simulate a crash between the two moves of every
@@ -87,7 +87,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
 
   test("manifest commit: a crash between generation write and manifest " +
        "publish leaves readers wholly-old; the publish flips wholly-new") {
-    val dir = Files.createTempDirectory("graft-coll").toString + "/c8"
+    val dir = SparkSpec.tempDir("graft-coll").toString + "/c8"
     val sink = new Collections.ParquetCollectionSink(spark, dir,
       VectorConfig(64), "embedding", "vec_id", "seq")
     val emb = Tables.load(spark, sf, "embeddings").limit(60)
@@ -139,7 +139,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
 
   test("incremental upsert: a one-bucket batch leaves every other " +
        "bucket's files untouched") {
-    val dir = Files.createTempDirectory("graft-coll").toString + "/c6"
+    val dir = SparkSpec.tempDir("graft-coll").toString + "/c6"
     val sink = new Collections.ParquetCollectionSink(spark, dir,
       VectorConfig(64), "embedding", "vec_id", "seq")
     val emb = Tables.load(spark, sf, "embeddings").limit(200)
@@ -183,7 +183,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
 
   test("legacy flat-layout collection migrates losslessly on first " +
        "bucketed upsert") {
-    val dir = Files.createTempDirectory("graft-coll").toString + "/c7"
+    val dir = SparkSpec.tempDir("graft-coll").toString + "/c7"
     Collections.create(dir, VectorConfig(64))
     val emb = Tables.load(spark, sf, "embeddings").limit(40)
       .withColumn("seq", lit(0))
@@ -217,7 +217,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
 
   test("deleteWhere: only match-holding buckets rewritten; an emptied " +
        "bucket drops out of the manifest") {
-    val dir = Files.createTempDirectory("graft-coll").toString + "/c9"
+    val dir = SparkSpec.tempDir("graft-coll").toString + "/c9"
     val sink = new Collections.ParquetCollectionSink(spark, dir,
       VectorConfig(64), "embedding", "vec_id", "seq")
     val emb = Tables.load(spark, sf, "embeddings").limit(200)
@@ -260,7 +260,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
 
   test("snapshot/restore: point-in-time copy survives later writes and " +
        "deletes; torn snapshots are rejected") {
-    val root = Files.createTempDirectory("graft-snap").toString
+    val root = SparkSpec.tempDir("graft-snap").toString
     val dir = s"$root/c11"
     val sink = new Collections.ParquetCollectionSink(spark, dir,
       VectorConfig(64), "embedding", "vec_id", "seq")
@@ -299,7 +299,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("aliases: atomic repointing — the blue/green reindex flow") {
-    val root = Files.createTempDirectory("graft-alias").toString
+    val root = SparkSpec.tempDir("graft-alias").toString
     val emb = Tables.load(spark, sf, "embeddings").limit(30)
       .withColumn("seq", lit(0))
     new Collections.ParquetCollectionSink(spark, s"$root/items_v1",
@@ -328,7 +328,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
 
   test("setPayloadWhere: matching points updated, null clears (the " +
        "delete_payload verb), non-matching rows byte-equal") {
-    val dir = Files.createTempDirectory("graft-coll").toString + "/c10"
+    val dir = SparkSpec.tempDir("graft-coll").toString + "/c10"
     val sink = new Collections.ParquetCollectionSink(spark, dir,
       VectorConfig(64), "embedding", "vec_id", "seq")
     val emb = Tables.load(spark, sf, "embeddings").limit(100)
@@ -366,7 +366,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
   test("clearPayloadWhere nulls every payload column on matches only; " +
        "deleteVectorsWhere nulls named vectors, points survive and the " +
        "null side is skipped by partial scoring") {
-    val dir = Files.createTempDirectory("graft-coll").toString + "/c16"
+    val dir = SparkSpec.tempDir("graft-coll").toString + "/c16"
     val sink = new Collections.ParquetCollectionSink(spark, dir,
       VectorConfig(64), "embedding", "vec_id", "seq")
     val emb = Tables.load(spark, sf, "embeddings").limit(100)
@@ -417,7 +417,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
   test("overwritePayloadWhere replaces the whole payload on matches: " +
        "set keys take the new value, unset keys null, off-filter rows " +
        "and identity/vectors untouched") {
-    val dir = Files.createTempDirectory("graft-coll").toString + "/c17"
+    val dir = SparkSpec.tempDir("graft-coll").toString + "/c17"
     val sink = new Collections.ParquetCollectionSink(spark, dir,
       VectorConfig(64), "embedding", "vec_id", "seq")
     val emb = Tables.load(spark, sf, "embeddings").limit(100)
@@ -449,7 +449,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
 
   test("setVectorWhere: re-embed of a filtered subset touches only " +
        "matching buckets; dim gate fails BEFORE the manifest swap") {
-    val dir = Files.createTempDirectory("graft-coll").toString + "/c12"
+    val dir = SparkSpec.tempDir("graft-coll").toString + "/c12"
     val sink = new Collections.ParquetCollectionSink(spark, dir,
       VectorConfig(64), "embedding", "vec_id", "seq")
     val emb = Tables.load(spark, sf, "embeddings").limit(100)
@@ -509,7 +509,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
        "sequence; untouched bucket dirs are physically untouched") {
     import graft.sources.IvfIndex
     import graft.operators.Ann
-    val root = Files.createTempDirectory("graft-ivf").toString
+    val root = SparkSpec.tempDir("graft-ivf").toString
     val dir = s"$root/c13"
     val sink = new Collections.ParquetCollectionSink(spark, dir,
       VectorConfig(64), "embedding", "vec_id", "seq")
@@ -582,7 +582,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
        "all-or-nothing") {
     import Collections.PointOp._
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-ubatch").toString
+    val root = SparkSpec.tempDir("graft-ubatch").toString
     def mk(name: String): String = {
       val dir = s"$root/$name"
       val sink = new Collections.ParquetCollectionSink(spark, dir,
@@ -655,7 +655,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
        "unindexed filter; refresh over the change feed equals a full " +
        "rebuild; untouched bucket dirs are physically untouched") {
     import graft.sources.PayloadIndex
-    val root = Files.createTempDirectory("graft-pidx").toString
+    val root = SparkSpec.tempDir("graft-pidx").toString
     val dir = s"$root/c16"
     val sink = new Collections.ParquetCollectionSink(spark, dir,
       VectorConfig(64), "embedding", "vec_id", "seq")
@@ -748,7 +748,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
   test("RANGE payload index refresh over the change feed equals a full " +
        "rebuild (pinned origin/width — no boundary drift)") {
     import graft.sources.PayloadIndex
-    val root = Files.createTempDirectory("graft-pridxr").toString
+    val root = SparkSpec.tempDir("graft-pridxr").toString
     val dir = s"$root/coll"
     val sink = new Collections.ParquetCollectionSink(spark, dir,
       VectorConfig(64), "embedding", "vec_id", "seq")
@@ -797,7 +797,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
        "stay row-identical to the unindexed predicates after rows move " +
        "across cells") {
     import graft.sources.PayloadIndex
-    val root = Files.createTempDirectory("graft-pgidx").toString
+    val root = SparkSpec.tempDir("graft-pgidx").toString
     val dir = s"$root/coll"
     val sink = new Collections.ParquetCollectionSink(spark, dir,
       VectorConfig(64), "embedding", "vec_id", "seq")
@@ -860,7 +860,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
   test("quantized-codes sidecar refresh over the change feed equals a " +
        "full rebuild; untouched bucket dirs are physically untouched") {
     import graft.sources.QuantIndex
-    val root = Files.createTempDirectory("graft-qidx").toString
+    val root = SparkSpec.tempDir("graft-qidx").toString
     val dir = s"$root/coll"
     val sink = new Collections.ParquetCollectionSink(spark, dir,
       VectorConfig(64), "embedding", "vec_id", "seq")
@@ -935,7 +935,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
        "equals a rebuild with the same codebooks") {
     import graft.sources.PqIndex
     import graft.operators.Pq
-    val root = Files.createTempDirectory("graft-pqidxr").toString
+    val root = SparkSpec.tempDir("graft-pqidxr").toString
     val dir = s"$root/coll"
     val sink = new Collections.ParquetCollectionSink(spark, dir,
       VectorConfig(64), "embedding", "vec_id", "seq")
@@ -983,7 +983,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
        "to its new cluster partition; refresh equals a rebuild") {
     import graft.sources.IvfPqIndex
     import graft.operators.{Ann, Pq}
-    val root = Files.createTempDirectory("graft-ivfpqr").toString
+    val root = SparkSpec.tempDir("graft-ivfpqr").toString
     val dir = s"$root/coll"
     val sink = new Collections.ParquetCollectionSink(spark, dir,
       VectorConfig(64), "embedding", "vec_id", "seq")
@@ -1052,7 +1052,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
   test("payload field index: a STRING key probed with a numeric literal " +
        "serves via the unindexed coercion fallback — no under-return") {
     import graft.sources.PayloadIndex
-    val root = Files.createTempDirectory("graft-pidxs").toString
+    val root = SparkSpec.tempDir("graft-pidxs").toString
     val dir = s"$root/coll"
     val sink = new Collections.ParquetCollectionSink(spark, dir,
       VectorConfig(64), "embedding", "vec_id", "seq")
@@ -1085,7 +1085,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
   test("sparse index refresh over the change feed equals a full rebuild; " +
        "untouched bucket dirs are physically untouched") {
     import graft.sources.SparseIndex
-    val root = Files.createTempDirectory("graft-sparse").toString
+    val root = SparkSpec.tempDir("graft-sparse").toString
     val dir = s"$root/c15"
     val sink = new Collections.ParquetCollectionSink(spark, dir,
       VectorConfig(2), "vec", "doc_id", "seq")
@@ -1143,7 +1143,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
        "untouched; BM25 served from the refreshed layout equals the " +
        "in-plan operator over the current collection") {
     import graft.sources.LexIndex
-    val root = Files.createTempDirectory("graft-lex").toString
+    val root = SparkSpec.tempDir("graft-lex").toString
     val dir = s"$root/c16"
     val sink = new Collections.ParquetCollectionSink(spark, dir,
       VectorConfig(2), "vec", "doc_id", "seq")
@@ -1214,7 +1214,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
   test("tenant layout refresh over the change feed equals a full rebuild; " +
        "untouched bucket leaves are physically untouched") {
     import graft.sources.Tenancy
-    val root = Files.createTempDirectory("graft-ten").toString
+    val root = SparkSpec.tempDir("graft-ten").toString
     val dir = s"$root/c14"
     val sink = new Collections.ParquetCollectionSink(spark, dir,
       VectorConfig(64), "embedding", "vec_id", "seq")
@@ -1281,7 +1281,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("management surface: list / scroll / delete") {
-    val root = Files.createTempDirectory("graft-mgmt").toString
+    val root = SparkSpec.tempDir("graft-mgmt").toString
     val emb = Tables.load(spark, sf, "embeddings").withColumn("seq", lit(0))
     Seq("alpha", "beta").foreach { name =>
       new Collections.ParquetCollectionSink(spark, s"$root/$name",
@@ -1320,7 +1320,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("upsert: same id overwrites (keep-last by sequence), dims enforced") {
-    val dir = Files.createTempDirectory("graft-coll").toString + "/c2"
+    val dir = SparkSpec.tempDir("graft-coll").toString + "/c2"
     val sink = new Collections.ParquetCollectionSink(spark, dir,
       VectorConfig(64), "embedding", "vec_id", "seq")
     val emb = Tables.load(spark, sf, "embeddings").limit(50)
@@ -1350,7 +1350,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
 
   test("compact folds many generations into one; data byte-identical; " +
        "feed reports every bucket moved") {
-    val dir = Files.createTempDirectory("graft-coll").toString + "/c10"
+    val dir = SparkSpec.tempDir("graft-coll").toString + "/c10"
     val sink = new Collections.ParquetCollectionSink(spark, dir,
       VectorConfig(64), "embedding", "vec_id", "seq")
     val emb = Tables.load(spark, sf, "embeddings").limit(120)
@@ -1388,7 +1388,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
 
   test("change feed: consumers re-read only buckets a write touched; " +
        "idle polls are empty; full-bucket deletes are reported") {
-    val dir = Files.createTempDirectory("graft-coll").toString + "/c9"
+    val dir = SparkSpec.tempDir("graft-coll").toString + "/c9"
     val sink = new Collections.ParquetCollectionSink(spark, dir,
       VectorConfig(64), "embedding", "vec_id", "seq")
     val emb = Tables.load(spark, sf, "embeddings").limit(200)
@@ -1448,7 +1448,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
 
   test("compact migrates a loose-flat-file legacy collection into the " +
        "manifest layout (the small-file case it exists for)") {
-    val dir = Files.createTempDirectory("graft-coll").toString + "/c11"
+    val dir = SparkSpec.tempDir("graft-coll").toString + "/c11"
     Collections.create(dir, VectorConfig(64))
     val emb = Tables.load(spark, sf, "embeddings").limit(40)
       .withColumn("seq", lit(0))
@@ -1473,7 +1473,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
        "is prefix-wide (subdir reads like _codebooks drop too)") {
     import graft.sources.{Drift, PqIndex, QuantIndex, ServedReads}
     import graft.operators.Pq
-    val root = Files.createTempDirectory("graft-memo").toString
+    val root = SparkSpec.tempDir("graft-memo").toString
     val dir = s"$root/coll"
     val sink = new Collections.ParquetCollectionSink(spark, dir,
       VectorConfig(64), "embedding", "vec_id", "seq")
@@ -1522,7 +1522,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
        "before AND after the retrain") {
     import graft.sources.{Drift, IvfIndex}
     import graft.operators.Ann
-    val root = Files.createTempDirectory("graft-drift").toString
+    val root = SparkSpec.tempDir("graft-drift").toString
     val dir = s"$root/coll"
     val sink = new Collections.ParquetCollectionSink(spark, dir,
       VectorConfig(64), "embedding", "vec_id", "seq")
@@ -1630,7 +1630,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
        "build with the same freshly-trained artifacts") {
     import graft.sources.{GraphIndex, IvfPqIndex, PqIndex}
     import graft.operators.{Ann, Pq}
-    val root = Files.createTempDirectory("graft-retrain").toString
+    val root = SparkSpec.tempDir("graft-retrain").toString
     val dir = s"$root/coll"
     val sink = new Collections.ParquetCollectionSink(spark, dir,
       VectorConfig(64), "embedding", "vec_id", "seq")
@@ -1705,7 +1705,7 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
        "recall recovers, and refresh continues from the returned cursor") {
     import graft.sources.{Drift, GraphIndex, IvfIndex, IvfPqIndex, PqIndex}
     import graft.operators.{Ann, Pq}
-    val root = Files.createTempDirectory("graft-maintain").toString
+    val root = SparkSpec.tempDir("graft-maintain").toString
     val dir = s"$root/coll"
     val sink = new Collections.ParquetCollectionSink(spark, dir,
       VectorConfig(64), "embedding", "vec_id", "seq")

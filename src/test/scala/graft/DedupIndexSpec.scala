@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,7 +19,7 @@ class DedupIndexSpec extends AnyFunSuite with SparkSpec {
   }
 
   private def tmp(tag: String): String =
-    Files.createTempDirectory(s"graft_spec_$tag").toString
+    SparkSpec.tempDir(s"graft_spec_$tag").toString
 
   test("minhashLocal is bit-identical to the fused compiled kernel on " +
        "fixture documents (the zero-job probe twin's contract)") {
@@ -297,22 +295,9 @@ class DedupIndexSpec extends AnyFunSuite with SparkSpec {
     // the job budget is independent of batch size (the queryPointsMulti
     // law): a doubled batch runs the SAME jobs — one scan + the fixed
     // AQE/broadcast stages — never per-probe scans
-    val sc = spark.sparkContext
-    def jobsFor(ps: Seq[(Long, String)]): Int = {
-      val group = s"lookupmulti-${ps.length}-${System.nanoTime()}"
-      sc.setJobGroup(group, group)
-      try DedupIndex.lookupMulti(spark, dir, ps)
-        .queryExecution.toRdd.foreach(_ => ())
-      finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 10000000000L
-      var jobs = sc.statusTracker.getJobIdsForGroup(group).length
-      var prev = -1
-      while (jobs != prev && System.nanoTime() < deadline) {
-        prev = jobs; Thread.sleep(200)
-        jobs = sc.statusTracker.getJobIdsForGroup(group).length
-      }
-      jobs
-    }
+    def jobsFor(ps: Seq[(Long, String)]): Int =
+      jobsIn(DedupIndex.lookupMulti(spark, dir, ps)
+        .queryExecution.toRdd.foreach(_ => ()))
     val probes6 = probes.toSeq ++ probes.map { case (pid, t) =>
       (pid + 500000L, t + " more") }
     val (j3, j6) = (jobsFor(probes.toSeq), jobsFor(probes6))

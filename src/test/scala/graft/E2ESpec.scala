@@ -13,7 +13,7 @@ import graft.sources.Collections.VectorConfig
 class E2ESpec extends AnyFunSuite with SparkSpec {
 
   test("embed-message → collection → kNN, end to end") {
-    val dir = Files.createTempDirectory("graft-e2e").toString + "/xfiles"
+    val dir = SparkSpec.tempDir("graft-e2e").toString + "/xfiles"
 
     // 1. the reference README's own example messages (FIXTURES.md)
     import spark.implicits._
@@ -63,7 +63,7 @@ class E2ESpec extends AnyFunSuite with SparkSpec {
 
   test("STREAMING end to end: drop-dir topic → normalize → batch-embed " +
        "→ bucketed collection → search") {
-    val tmp = Files.createTempDirectory("graft-e2e-stream")
+    val tmp = SparkSpec.tempDir("graft-e2e-stream")
     val in = tmp.resolve("in"); Files.createDirectories(in)
     val coll = tmp.resolve("xfiles").toString
     import scala.jdk.CollectionConverters._

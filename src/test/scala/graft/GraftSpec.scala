@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,6 +8,50 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec { self: AnyFunSuite =>
   lazy val spark: SparkSession = SparkTestSession.spark
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Run `body` with the router's quant size gate forced open
+    * (`spark.graft.quant.scopedScanRows = 0`): the fixture sidecar is
+    * under the default, so this is the only way a spec reaches the
+    * prefetch chain and the scoped exact bound. */
+  def quantGateOpen[T](body: => T): T = {
+    spark.conf.set("spark.graft.quant.scopedScanRows", "0")
+    try body finally spark.conf.unset("spark.graft.quant.scopedScanRows")
+  }
+
+  /** Spark jobs `body` ran: a job group around it, then the listener bus
+    * drained, so the status store has seen every job it started — an
+    * exact count, zero included, with no settle-polling. */
+  def jobsIn(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"spec-jobs-${System.nanoTime()}"
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+    org.apache.spark.sql.GraftSqlBridge.waitUntilEmpty(sc)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+}
+
+object SparkSpec {
+  /** The JVM's one spec temp root; a single shutdown hook removes it,
+    * with everything [[tempDir]] made under it. */
+  private lazy val root: Path = {
+    val r = Files.createTempDirectory("graft-spec-")
+    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(r)))
+    r
+  }
+
+  /** A fresh temp dir for one spec, removed when the JVM exits. */
+  def tempDir(prefix: String): Path = Files.createTempDirectory(root, prefix)
+
+  /** Depth-first delete that does not follow symlinks; best effort. */
+  private def deleteTree(p: Path): Unit = {
+    val walk = Files.walk(p)
+    try walk.sorted(java.util.Comparator.reverseOrder[Path]()).forEach { f =>
+      try Files.deleteIfExists(f)
+      catch { case _: java.io.IOException => }
+    }
+    finally walk.close()
+  }
 }
 
 object SparkTestSession {

@@ -83,7 +83,7 @@ class GraphAnnSpec extends AnyFunSuite with SparkSpec {
     // probe a COPY of the fixture: another suite may have persist()ed the
     // fixture table, and CacheManager substitution would hide the file
     // scan this test asserts on (same analyzed plan → InMemoryTableScan)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-gprobe")
+    val tmp = SparkSpec.tempDir("graft-gprobe")
     val path = tmp.resolve("emb.parquet")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/embeddings.parquet"), path)
@@ -148,8 +148,8 @@ class GraphAnnSpec extends AnyFunSuite with SparkSpec {
     // job budget: 1 seed read + ≤ 2 probe jobs/round (+ a few footer /
     // local-materialization jobs) — INDEPENDENT of the 4-query batch;
     // the per-query path would spend ≥ 4·(1 + 2·rounds). The
-    // statusTracker feed is async — give it a beat before judging.
-    Thread.sleep(500)
+    // statusTracker feed is async — drain the listener bus first.
+    org.apache.spark.sql.GraftSqlBridge.waitUntilEmpty(sc)
     val jobs = sc.statusTracker.getJobIdsForGroup("gmulti").length
     val cap = 1 + 2 * 5 + 5
     assert(jobs > 0 && jobs <= cap,

@@ -32,7 +32,7 @@ class GraphIndexSpec extends AnyFunSuite with SparkSpec {
 
   test("graph index refresh == full rebuild (all rounds, order, seeds) " +
        "after mixed mutations; untouched bucket dirs byte-stable") {
-    val root = Files.createTempDirectory("graft-gidx").toString
+    val root = SparkSpec.tempDir("graft-gidx").toString
     val dir = s"$root/coll"
     // 32 id-hash buckets: small enough dirs, enough of them that a local
     // dirty neighborhood cannot touch all of them
@@ -131,7 +131,7 @@ class GraphIndexSpec extends AnyFunSuite with SparkSpec {
 
   test("successive refreshes from a moving cursor track a growing " +
        "collection (the per-micro-batch maintenance loop)") {
-    val root = Files.createTempDirectory("graft-gidx2").toString
+    val root = SparkSpec.tempDir("graft-gidx2").toString
     val dir = s"$root/coll"
     Collections.create(dir, VectorConfig(64), buckets = 16)
     val sink = new Collections.ParquetCollectionSink(spark, dir,
@@ -171,7 +171,7 @@ class GraphIndexSpec extends AnyFunSuite with SparkSpec {
   test("payload-only rewrite: refresh proves V = ∅ by vector diff and " +
        "touches NO graph dir (compact/set-payload must not cost a " +
        "rebuild)") {
-    val root = Files.createTempDirectory("graft-gidx3").toString
+    val root = SparkSpec.tempDir("graft-gidx3").toString
     val dir = s"$root/coll"
     Collections.create(dir, VectorConfig(64), buckets = 16)
     val sink = new Collections.ParquetCollectionSink(spark, dir,
@@ -210,7 +210,7 @@ class GraphIndexSpec extends AnyFunSuite with SparkSpec {
 
   test("a _refresh_in_progress marker at entry (crashed refresh) forces " +
        "a full rebuild instead of trusting torn on-disk state") {
-    val root = Files.createTempDirectory("graft-gidx4").toString
+    val root = SparkSpec.tempDir("graft-gidx4").toString
     val dir = s"$root/coll"
     Collections.create(dir, VectorConfig(64), buckets = 16)
     val sink = new Collections.ParquetCollectionSink(spark, dir,
@@ -256,7 +256,7 @@ class GraphIndexSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("params round-trip through _graph_index.json exactly") {
-    val tmp = Files.createTempDirectory("graft-gmeta").toString
+    val tmp = SparkSpec.tempDir("graft-gmeta").toString
     val dir = s"$tmp/coll"
     Collections.create(dir, VectorConfig(64), buckets = 4)
     val sink = new Collections.ParquetCollectionSink(spark, dir,

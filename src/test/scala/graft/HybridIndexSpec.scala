@@ -109,10 +109,8 @@ class HybridIndexSpec extends AnyFunSuite with SparkSpec {
     // default (65 536): a 500-row fixture sidecar can never pay
     assert(!QuantIndex.scopedBoundPays(spark, quantDir),
       "fixture-sized collection claimed to pay for the scoped bound")
-    spark.conf.set("spark.graft.quant.scopedScanRows", "0")
-    try assert(QuantIndex.scopedBoundPays(spark, quantDir),
+    assert(quantGateOpen(QuantIndex.scopedBoundPays(spark, quantDir)),
       "zero threshold must open the gate")
-    finally spark.conf.unset("spark.graft.quant.scopedScanRows")
     // both branches of the declared query compute the same rows: the
     // scoped bound is a superset-then-exact-rescore of the very scan
     // the small path runs
@@ -121,10 +119,7 @@ class HybridIndexSpec extends AnyFunSuite with SparkSpec {
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
         .toSeq
     val small = phraseRows() // gate closed (default)
-    spark.conf.set("spark.graft.quant.scopedScanRows", "0")
-    val scopedB =
-      try phraseRows() // gate forced open — the scoped-θ serving
-      finally spark.conf.unset("spark.graft.quant.scopedScanRows")
+    val scopedB = quantGateOpen(phraseRows()) // the scoped-θ serving
     assert(small == scopedB,
       "v_knn_phrase_indexed rows differ between the gate's branches")
   }
@@ -334,22 +329,9 @@ class HybridIndexSpec extends AnyFunSuite with SparkSpec {
     }
     // the queryPointsMulti job-budget law: a doubled batch runs the
     // same number of jobs (two shared scans + the θ collect)
-    val sc = spark.sparkContext
-    def jobsFor(qs: Seq[(Long, Seq[Double])]): Int = {
-      val group = s"candmulti-${qs.length}-${System.nanoTime()}"
-      sc.setJobGroup(group, group)
-      try QuantIndex.cosineCandidatesMulti(spark, quantDir, qs, 100)
-        .queryExecution.toRdd.foreach(_ => ())
-      finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 10000000000L
-      var jobs = sc.statusTracker.getJobIdsForGroup(group).length
-      var prev = -1
-      while (jobs != prev && System.nanoTime() < deadline) {
-        prev = jobs; Thread.sleep(200)
-        jobs = sc.statusTracker.getJobIdsForGroup(group).length
-      }
-      jobs
-    }
+    def jobsFor(qs: Seq[(Long, Seq[Double])]): Int =
+      jobsIn(QuantIndex.cosineCandidatesMulti(spark, quantDir, qs, 100)
+        .queryExecution.toRdd.foreach(_ => ()))
     val qs6 = qs3 ++ Seq(1L, 2L, 4L).map(i => i -> qv(i))
     assert(jobsFor(qs3) == jobsFor(qs6),
       "candidate job budget grew with the batch")
@@ -453,23 +435,10 @@ class HybridIndexSpec extends AnyFunSuite with SparkSpec {
     // text-leg job budget: a doubled batch over the SAME layouts runs
     // the same number of jobs (one pruned postings scan + the bounded
     // rank collect + the shared zero-tail head)
-    val sc = spark.sparkContext
-    def jobsFor(qs: Seq[(Long, Seq[String])]): Int = {
-      val group = s"lexmulti-${qs.length}-${System.nanoTime()}"
-      sc.setJobGroup(group, group)
-      try LexIndex.rankedTopNMulti(spark,
+    def jobsFor(qs: Seq[(Long, Seq[String])]): Int =
+      jobsIn(LexIndex.rankedTopNMulti(spark,
         LexIndex.termCountScoresMulti(spark, lexDir, qs),
-        universe, "doc_id", "score_t", 100, "r_t", qs.map(_._1)).count()
-      finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 10000000000L
-      var jobs = sc.statusTracker.getJobIdsForGroup(group).length
-      var prev = -1
-      while (jobs != prev && System.nanoTime() < deadline) {
-        prev = jobs; Thread.sleep(200)
-        jobs = sc.statusTracker.getJobIdsForGroup(group).length
-      }
-      jobs
-    }
+        universe, "doc_id", "score_t", 100, "r_t", qs.map(_._1)).count())
     val batch6 = batch ++ Seq(3L -> Seq("data"), 4L -> Seq("query"),
       5L -> Seq("table", "scan"))
     assert(jobsFor(batch) == jobsFor(batch6),
@@ -543,7 +512,7 @@ class HybridIndexSpec extends AnyFunSuite with SparkSpec {
       s"phrase legs not pruned at file listing:\n$plan")
     // a pre-positions layout (no stamp): loud rebuild-it errors from
     // phrase serving AND refresh (the QuantIndex stamp discipline)
-    val root = java.nio.file.Files.createTempDirectory("graft-oldlex")
+    val root = SparkSpec.tempDir("graft-oldlex")
     val old = root.resolve("old").toString
     spark.read.parquet(lexDir).drop("pos")
       .write.mode("overwrite").partitionBy("src_bucket", "tgrp")
@@ -586,8 +555,7 @@ class HybridIndexSpec extends AnyFunSuite with SparkSpec {
     // stage (mixed/NULL norms drop rows from the guaranteed superset)
     // AND refresh (a partial swap would CREATE the mixed layout a
     // schema sniff cannot detect)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-oldquant")
+    val root = SparkSpec.tempDir("graft-oldquant")
     val full = root.resolve("full").toString
     val old = root.resolve("old").toString
     QuantIndex.build(emb.limit(50), "vec_id", "embedding",

@@ -17,7 +17,7 @@ class MemoSpec extends AnyFunSuite with SparkSpec {
 
   /** A private, writable copy of the sf0.01 fixture. */
   private def fixtureCopy(): Path = {
-    val d = Files.createTempDirectory("memospec")
+    val d = SparkSpec.tempDir("memospec")
     val src = Paths.get("/root/testdata/sf0.01")
     Files.list(src).forEach { f =>
       val t = d.resolve(f.getFileName)
@@ -56,7 +56,7 @@ class MemoSpec extends AnyFunSuite with SparkSpec {
       .withColumn("embedding", transform(col("embedding"), x => -x))
       .unionByName(emb.filter(col("vec_id") === 0)
         .withColumn("vec_id", lit(150000L).cast(emb.schema("vec_id").dataType)))
-    val staged = Files.createTempDirectory("memospec_stage")
+    val staged = SparkSpec.tempDir("memospec_stage")
     changed.coalesce(1).write.mode("overwrite").parquet(staged.toString)
     val part = Files.list(staged).filter(_.toString.endsWith(".parquet"))
       .findFirst().get
@@ -138,7 +138,7 @@ class MemoSpec extends AnyFunSuite with SparkSpec {
 
   test("(e) append after build reads no pinned centroids: no memo miss " +
        "and no more jobs than a second append") {
-    val dir = Files.createTempDirectory("memospec_sem").toString
+    val dir = SparkSpec.tempDir("memospec_sem").toString
     val corpus =
       Tables.load(spark, sf, "embeddings").select("vec_id", "embedding")
     SemanticDedupIndex.build(spark, corpus.filter(col("vec_id") % 2 === 0),

@@ -17,7 +17,7 @@ import graft.sources.{Drift, ModelIndex}
 class ModelIndexSpec extends AnyFunSuite with SparkSpec {
 
   private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft-model-$name").resolve("m").toString
+    SparkSpec.tempDir(s"graft-model-$name").resolve("m").toString
 
   /** (path → (size, mtime)) fingerprint of every file under a dir. */
   private def fileState(dir: String): Map[String, (Long, Long)] = {

@@ -538,7 +538,7 @@ class OperatorSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("materialized IVF index: probe == partition pruning, same top-k") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val dir = SparkSpec.tempDir("graft-ivf").toString
     val emb = Tables.load(spark, sf, "embeddings")
     val cents = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cid"), col("embedding").as("cv"))
@@ -715,7 +715,7 @@ class OperatorSpec extends AnyFunSuite with SparkSpec {
        "the brute-force filter") {
     import spark.implicits._
     import graft.sources.PayloadIndex
-    val root = java.nio.file.Files.createTempDirectory("graft-pridx")
+    val root = SparkSpec.tempDir("graft-pridx")
       .toString
     // values straddling the origin: floor division must round toward -∞
     val rows = Seq(-25L, -10L, -1L, 0L, 1L, 9L, 10L, 11L, 25L, 99L)
@@ -774,26 +774,6 @@ class OperatorSpec extends AnyFunSuite with SparkSpec {
       s"box read scans every file ($pruned of $all) — no pruning")
   }
 
-  /** Run `body` under a job group and return its job count once the
-    * async statusTracker feed has SETTLED — poll until two consecutive
-    * nonzero reads agree (cap 5 s) rather than a fixed sleep that can
-    * undercount on a loaded machine. */
-  private def jobsInGroup(group: String)(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(group, group, false)
-    body
-    sc.clearJobGroup()
-    val deadline = System.nanoTime + 5L * 1000 * 1000 * 1000
-    var prev = -1
-    var cur = sc.statusTracker.getJobIdsForGroup(group).length
-    while ((cur != prev || cur == 0) && System.nanoTime < deadline) {
-      prev = cur
-      Thread.sleep(200)
-      cur = sc.statusTracker.getJobIdsForGroup(group).length
-    }
-    cur
-  }
-
   /** Files the scan actually read (post partition pruning) — the
     * FileSourceScan `numFiles` metric after execution;
     * `DataFrame.inputFiles` would report the UNpruned listing. */
@@ -808,7 +788,7 @@ class OperatorSpec extends AnyFunSuite with SparkSpec {
        "haversine), prunes files, and degenerate shapes stay exact") {
     import spark.implicits._
     import graft.sources.PayloadIndex
-    val root = java.nio.file.Files.createTempDirectory("graft-geoidx")
+    val root = SparkSpec.tempDir("graft-geoidx")
       .toString
     // a global grid plus near-pole points: 5° spacing both axes
     val pts = (for (la <- -85 to 85 by 5; lo <- -175 to 175 by 5)
@@ -878,7 +858,7 @@ class OperatorSpec extends AnyFunSuite with SparkSpec {
     assert(cpd(100, 179.0, 359.0) <= math.pow(2.0, -4))
     // the build pins the chosen grain in metadata (refresh reuses it —
     // auto-sizing never runs twice on drifted data)
-    val root = java.nio.file.Files.createTempDirectory("graft-geoauto")
+    val root = SparkSpec.tempDir("graft-geoauto")
       .toString
     val idx = s"$root/gidx"
     PayloadIndex.buildGeo(frame(1000, 170.0, 350.0), "loc", "id", idx)
@@ -965,8 +945,7 @@ class OperatorSpec extends AnyFunSuite with SparkSpec {
     } finally spark.conf.unset("graft.geo.routeMinRows")
     // a PRE-r13 layout (no pinned stats) routes unconditionally — the
     // pre-decision behavior, so old layouts keep serving
-    val legacyRoot = java.nio.file.Files
-      .createTempDirectory("graft-geolegacy").toString
+    val legacyRoot = SparkSpec.tempDir("graft-geolegacy").toString
     val legacyIdx = s"$legacyRoot/gidx"
     graft.sources.PayloadIndex.buildGeo(
       located.select("vec_id", "location"), "location", "vec_id",
@@ -995,7 +974,7 @@ class OperatorSpec extends AnyFunSuite with SparkSpec {
        "base read from the index (PartitionFilters on pbucket), routes " +
        "nothing without a declaration, and never changes rows") {
     import graft.sources.{IndexRouter, PayloadIndex}
-    val root = java.nio.file.Files.createTempDirectory("graft-router")
+    val root = SparkSpec.tempDir("graft-router")
       .toString
     val emb = Tables.load(spark, sf, "embeddings")
     val hashIdx = s"$root/label_idx"
@@ -1136,7 +1115,7 @@ class OperatorSpec extends AnyFunSuite with SparkSpec {
        "at FILE LISTING, candidates are a superset of phrase matches, " +
        "and the indexed phrase query equals the unindexed filter") {
     import graft.sources.SparseIndex
-    val idx = java.nio.file.Files.createTempDirectory("graft-tidx")
+    val idx = SparkSpec.tempDir("graft-tidx")
       .resolve("postings").toString
     val docs = Tables.load(spark, sf, "documents")
     SparseIndex.buildFrom(docs, "doc_id", "text", idx)
@@ -1182,7 +1161,7 @@ class OperatorSpec extends AnyFunSuite with SparkSpec {
        "and range probes on a hash index fail loudly, never return " +
        "empty") {
     import graft.sources.PayloadIndex
-    val root = java.nio.file.Files.createTempDirectory("graft-kindg")
+    val root = SparkSpec.tempDir("graft-kindg")
       .toString
     val emb = Tables.load(spark, sf, "embeddings")
     val hashIdx = s"$root/h"; val rangeIdx = s"$root/r"
@@ -1248,7 +1227,7 @@ class OperatorSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("bucketed tables co-locate the join: no Exchange on either side") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bucket")
+    val tmp = SparkSpec.tempDir("graft-bucket")
     val cust = Tables.load(spark, sf, "customer")
       .select("c_custkey", "c_name", "c_nationkey")
     val ord = Tables.load(spark, sf, "orders")
@@ -1304,7 +1283,7 @@ class OperatorSpec extends AnyFunSuite with SparkSpec {
     val qv = emb.filter(col("vec_id") === 0)
       .select(col("embedding").cast("array<double>"))
       .head().getSeq[Double](0)
-    val idx = java.nio.file.Files.createTempDirectory("graft-qidx")
+    val idx = SparkSpec.tempDir("graft-qidx")
       .resolve("codes").toString
     QuantIndex.build(emb, "vec_id", "embedding", qv.length, idx)
 
@@ -1385,7 +1364,7 @@ class OperatorSpec extends AnyFunSuite with SparkSpec {
     import graft.operators.Pq
     val emb = Tables.load(spark, sf, "embeddings")
     val cbs = Pq.trainCodebooks(emb, "vec_id", "embedding", 4, 16, 8, 1)
-    val idx = java.nio.file.Files.createTempDirectory("graft-pqidx")
+    val idx = SparkSpec.tempDir("graft-pqidx")
       .resolve("codes").toString
     PqIndex.build(emb, "vec_id", "embedding", cbs, 16, idx)
     val mt = PqIndex.metaOf(idx)
@@ -1439,7 +1418,7 @@ class OperatorSpec extends AnyFunSuite with SparkSpec {
     val emb = Tables.load(spark, sf, "embeddings")
     val cbs = Pq.trainCodebooks(emb, "vec_id", "embedding", 4, 16, 8, 1)
     val centroids = Ann.kmeansFit(emb, "vec_id", "embedding", 8, 2)
-    val idx = java.nio.file.Files.createTempDirectory("graft-ivfpq")
+    val idx = SparkSpec.tempDir("graft-ivfpq")
       .resolve("idx").toString
     IvfPqIndex.build(emb, "vec_id", "embedding", centroids, cbs, 16, idx)
     val mt = IvfPqIndex.metaOf(idx)
@@ -1618,7 +1597,7 @@ class OperatorSpec extends AnyFunSuite with SparkSpec {
        "train returns the partial merge table, encode tokenizes the " +
        "final segmentation (stop-early, not a crash)") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-bpedry")
+    val root = SparkSpec.tempDir("graft-bpedry")
       .toString
     // one distinct word: exactly one merge possible, then dry
     Seq((1L, "ab ab ab", "en", "s", 8L))
@@ -1680,9 +1659,13 @@ class OperatorSpec extends AnyFunSuite with SparkSpec {
       rows(VectorRouter.queryPoints(spark, emb, "vec_id", "embedding",
         decls, pidx, q, 10, dslJson = dsl, params = p))
 
-    // each route serves its oracle-gated twin's pipeline row-for-row
-    assert(auto(Seq(quantDir)) == declared("v_prefetch_indexed"),
-      "quant route != v_prefetch_indexed")
+    // each route serves its oracle-gated twin's pipeline row-for-row;
+    // the quant route with the size gate forced open (the fixture
+    // sidecar is under it: closed, the quant declaration serves exact)
+    assert(quantGateOpen(auto(Seq(quantDir))) ==
+      declared("v_prefetch_indexed"), "quant route != v_prefetch_indexed")
+    assert(auto(Seq(quantDir)) == auto(Seq(quantDir), Params(exact = true)),
+      "closed size gate: quant route != exact")
     assert(auto(Seq(graphDir, quantDir)) == declared("ann_graph_search"),
       "first-declaration preference broken")
     assert(auto(Seq(quantDir, graphDir), Params(quantIgnore = true)) ==
@@ -1713,21 +1696,19 @@ class OperatorSpec extends AnyFunSuite with SparkSpec {
     // FILTER-SCOPED exact bound (θ + superset within the filtered id
     // population), so BOTH cardinality branches are row-identical to
     // brute force over the filtered points: the plan choice is never
-    // a semantic one for the quant kind. scopedScanRows = 0 forces the
-    // r17 collection-size gate open (the fixture sidecar is far below
-    // the production default, which routes it to the scan plan).
-    spark.conf.set("spark.graft.quant.scopedScanRows", "0")
-    val annPlan =
-      try auto(Seq(quantDir), Params(scanThreshold = 0), Some(dsl), pidx)
-      finally spark.conf.unset("spark.graft.quant.scopedScanRows")
+    // a semantic one for the quant kind. The size gate is forced open
+    // (the fixture sidecar is far below the production default, which
+    // gives it no route: the scan plan).
+    val annPlan = quantGateOpen(
+      auto(Seq(quantDir), Params(scanThreshold = 0), Some(dsl), pidx))
     assert(annPlan.nonEmpty)
     assert(annPlan == bruteTopK(emb.filter(col("label") === 3)),
       "scoped-bound filtered search != brute force over the filter")
     assert(annPlan == scanPlan,
       "the two cardinality branches disagree on the quant kind")
-    // the r17 gate CLOSED (production default, fixture-sized sidecar):
-    // the small-collection fallback must serve the identical rows
-    // through the exact filtered scan
+    // the size gate CLOSED (production default, fixture-sized
+    // sidecar): no route, so the identical rows through the exact
+    // filtered scan
     val smallPlan = auto(Seq(quantDir), Params(scanThreshold = 0),
       Some(dsl), pidx)
     assert(smallPlan == annPlan,
@@ -1751,6 +1732,45 @@ class OperatorSpec extends AnyFunSuite with SparkSpec {
         emb.filter(col("label") === 3)
           .filter(col("vec_id").isin(pqCandIds.map(Long.box): _*))),
       "ivfpq ANN-plan filtered search != candidates ∩ filter")
+  }
+
+  test("VectorRouter size gate: a quant declaration over a sub-threshold " +
+       "sidecar serves the exact plan on knn, batch and filtered reads, " +
+       "and the router call runs no job") {
+    import graft.sources.{QuantIndex, VectorRouter}
+    import graft.sources.VectorRouter.Params
+    val emb = Tables.load(spark, sf, "embeddings")
+    val decls = Seq(VectorQueries.quantIndexDir(spark, sf))
+    val qs = Seq(0L, 3L, 7L)
+      .map(i => i -> VectorQueries.queryVec(spark, sf, i))
+    val dsl = """{"must": [{"key": "label", "match": {"value": 3}}]}"""
+    val pidx = Seq("label" -> VectorQueries.payloadIdxDir(spark, sf))
+    assert(!QuantIndex.scopedBoundPays(spark, decls.head),
+      "the fixture sidecar is over the default gate — weak fixture")
+    def knn(p: Params = Params()) =
+      VectorRouter.queryPoints(spark, emb, "vec_id", "embedding", decls,
+        Nil, qs.head._2, 10, params = p)
+    def batch(p: Params = Params()) =
+      VectorRouter.queryPointsMulti(spark, emb, "vec_id", "embedding",
+        decls, qs, 10, params = p)
+    def filtered() =
+      VectorRouter.queryPoints(spark, emb, "vec_id", "embedding", decls,
+        pidx, qs.head._2, 10, dslJson = Some(dsl))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSet
+    assert(rows(knn()) == rows(knn(Params(exact = true))),
+      "single: quant route under the gate != exact")
+    assert(rows(batch()) == rows(batch(Params(exact = true))),
+      "batched: quant route under the gate != exact")
+    // the plan is decided before any compute: building the frame runs
+    // no job (a warm call first primes the memoized footer counts)
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "knn" -> (() => knn()), "batch" -> (() => batch()),
+      "filtered" -> (() => filtered())).foreach { case (cls, call) =>
+      call()
+      val jobs = jobsIn(call())
+      assert(jobs == 0, s"$cls: the router call ran $jobs jobs")
+    }
   }
 
   test("as-of join matches the brute-force model (ties: quote at equal " +
@@ -1805,7 +1825,7 @@ class OperatorSpec extends AnyFunSuite with SparkSpec {
        "(schema-preserving, same rows as parquet)") {
     val d = Tables.load(spark, sf, "documents")
       .select("doc_id", "lang", "n_chars", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-fmt")
+    val tmp = SparkSpec.tempDir("graft-fmt")
     d.write.option("header", "true").option("quoteAll", "true")
       .csv(s"$tmp/csv")
     d.write.orc(s"$tmp/orc")
@@ -2810,7 +2830,7 @@ class OperatorSpec extends AnyFunSuite with SparkSpec {
        "keys, empty past the tail") {
     import spark.implicits._
     import graft.sources.PayloadIndex
-    val root = java.nio.file.Files.createTempDirectory("graft-scroll")
+    val root = SparkSpec.tempDir("graft-scroll")
       .toString
     // 1000 rows, key = id/10 (values 0..99), every 97th key NULL;
     // width 5 → 20 value buckets
@@ -2870,23 +2890,26 @@ class OperatorSpec extends AnyFunSuite with SparkSpec {
     val emb = Tables.load(spark, sf, "embeddings")
     val qs = Seq(0L, 3L, 7L, 11L)
       .map(i => i -> VectorQueries.queryVec(spark, sf, i))
+    // "quant" is the prefetch chain (size gate forced open);
+    // "quant-exact" is the same declaration under the closed gate
+    val quantDecls = Seq(VectorQueries.quantIndexDir(spark, sf))
     val declSets = Seq(
-      ("quant", Seq(VectorQueries.quantIndexDir(spark, sf)),
-        VectorRouter.Params()),
+      ("quant", quantDecls, VectorRouter.Params(), true),
+      ("quant-exact", quantDecls, VectorRouter.Params(), false),
       ("ivfpq", Seq(PqQueries.ivfPqIndexDir(spark, sf)),
-        VectorRouter.Params()),
+        VectorRouter.Params(), false),
       ("graph", Seq(GraphAnnQueries.graphIndexDir(spark, sf)),
-        VectorRouter.Params()),
-      ("exact", Seq(VectorQueries.quantIndexDir(spark, sf)),
-        VectorRouter.Params(exact = true)))
-    for ((tag, decls, params) <- declSets) {
-      val multi = VectorRouter.queryPointsMulti(spark, emb, "vec_id",
-          "embedding", decls, qs, 10, params = params)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        VectorRouter.Params(), false),
+      ("exact", quantDecls, VectorRouter.Params(exact = true), false))
+    for ((tag, decls, params, open) <- declSets) {
+      def serve[T](body: => T): T = if (open) quantGateOpen(body) else body
+      val multi = serve(VectorRouter.queryPointsMulti(spark, emb,
+          "vec_id", "embedding", decls, qs, 10, params = params)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
       qs.foreach { case (qid, q) =>
-        val single = VectorRouter.queryPoints(spark, emb, "vec_id",
+        val single = serve(VectorRouter.queryPoints(spark, emb, "vec_id",
             "embedding", decls, Nil, q, 10, params = params)
-          .collect().map(r => (r.getLong(0), r.getLong(1)))
+          .collect().map(r => (r.getLong(0), r.getLong(1))))
           .sortBy(_._1).toSeq
         val mine = multi.filter(_._1 == qid).map(t => (t._2, t._3))
           .sortBy(_._1).toSeq
@@ -2894,28 +2917,27 @@ class OperatorSpec extends AnyFunSuite with SparkSpec {
         assert(mine.nonEmpty, s"$tag query $qid: empty result")
       }
     }
-    // job budget (quant): the batch shares one codes scan, one sidecar
-    // re-probe and one vector probe — 3 collection points regardless of
-    // batch size. Job COUNT per collection point is AQE stage noise, so
-    // the honest assertion is batch-size INDEPENDENCE: doubling the
-    // batch must not grow the job count (per-query serving doubles it),
-    // and the batch must beat the per-query total at the larger size.
-    val quantDecls = Seq(VectorQueries.quantIndexDir(spark, sf))
+    // job budget (quant, size gate forced open): the batch shares one
+    // codes scan, one sidecar re-probe and one vector probe — 3
+    // collection points regardless of batch size. Job COUNT per
+    // collection point is AQE stage noise, so the honest assertion is
+    // batch-size INDEPENDENCE: doubling the batch must not grow the job
+    // count (per-query serving doubles it), and the batch must beat the
+    // per-query total at the larger size.
     val qs8 = Seq(0L, 3L, 7L, 11L, 13L, 17L, 19L, 23L)
       .map(i => i -> VectorQueries.queryVec(spark, sf, i))
-    def jobsOf(group: String)(body: => Unit): Int =
-      jobsInGroup(group)(body)
-    val single8 = jobsOf("vr-single8") {
+    def jobsOf(body: => Any): Int = quantGateOpen(jobsIn(body))
+    val single8 = jobsOf {
       qs8.foreach { case (_, q) =>
         VectorRouter.queryPoints(spark, emb, "vec_id", "embedding",
           quantDecls, Nil, q, 10).collect()
       }
     }
-    val multi4 = jobsOf("vr-multi4") {
+    val multi4 = jobsOf {
       VectorRouter.queryPointsMulti(spark, emb, "vec_id", "embedding",
         quantDecls, qs, 10).collect()
     }
-    val multi8 = jobsOf("vr-multi8") {
+    val multi8 = jobsOf {
       VectorRouter.queryPointsMulti(spark, emb, "vec_id", "embedding",
         quantDecls, qs8, 10).collect()
     }
@@ -2943,22 +2965,27 @@ class OperatorSpec extends AnyFunSuite with SparkSpec {
     // graph declaration: scan branch + FILTERED-TRAVERSAL ANN branch
     // (r13) — per-query equality with single-query serving on all four
     val graphDecls = Seq(GraphAnnQueries.graphIndexDir(spark, sf))
+    // "ann-scoped" forces the quant size gate open: the batched
+    // filter-scoped exact bound
     val branches = Seq(
-      ("scan", decls, idx, VectorRouter.Params()),
-      ("ann", decls, idx, VectorRouter.Params(scanThreshold = 0)),
-      ("graph-scan", graphDecls, idx, VectorRouter.Params()),
+      ("scan", decls, idx, VectorRouter.Params(), false),
+      ("ann", decls, idx, VectorRouter.Params(scanThreshold = 0), false),
+      ("ann-scoped", decls, idx, VectorRouter.Params(scanThreshold = 0),
+        true),
+      ("graph-scan", graphDecls, idx, VectorRouter.Params(), false),
       ("graph-traversal", graphDecls, idx,
-        VectorRouter.Params(scanThreshold = 0)))
-    for ((tag, ds, pIdx, params) <- branches) {
-      val multi = VectorRouter.queryPointsMulti(spark, emb, "vec_id",
-          "embedding", ds, qs, 10, dslJson = Some(dsl),
+        VectorRouter.Params(scanThreshold = 0), false))
+    for ((tag, ds, pIdx, params, open) <- branches) {
+      def serve[T](body: => T): T = if (open) quantGateOpen(body) else body
+      val multi = serve(VectorRouter.queryPointsMulti(spark, emb,
+          "vec_id", "embedding", ds, qs, 10, dslJson = Some(dsl),
           payloadIndexes = pIdx, params = params)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
       qs.foreach { case (qid, q) =>
-        val single = VectorRouter.queryPoints(spark, emb, "vec_id",
+        val single = serve(VectorRouter.queryPoints(spark, emb, "vec_id",
             "embedding", ds, pIdx, q, 10, dslJson = Some(dsl),
             params = params)
-          .collect().map(r => (r.getLong(0), r.getLong(1)))
+          .collect().map(r => (r.getLong(0), r.getLong(1))))
           .sortBy(_._1).toSeq
         val mine = multi.filter(_._1 == qid).map(t => (t._2, t._3))
           .sortBy(_._1).toSeq
@@ -3016,9 +3043,11 @@ class OperatorSpec extends AnyFunSuite with SparkSpec {
     val emb = Tables.load(spark, sf, "embeddings")
     val q = VectorQueries.queryVec(spark, sf, 0)
     val decls = Seq(VectorQueries.quantIndexDir(spark, sf))
-    def jobsOf(group: String)(body: => Unit): Int =
-      jobsInGroup(group)(body)
-    val j1 = jobsOf("vr-nofilter") {
+    // every count below runs with the size gate forced open: j1 is the
+    // prefetch route these bounds were written against, and j2 must
+    // take the estimate (a closed gate skips it)
+    def jobsOf(body: => Any): Int = quantGateOpen(jobsIn(body))
+    val j1 = jobsOf {
       VectorRouter.queryPoints(spark, emb, "vec_id", "embedding", decls,
         Nil, q, 10).collect()
     }
@@ -3029,7 +3058,7 @@ class OperatorSpec extends AnyFunSuite with SparkSpec {
     // unfiltered serving's job count
     val dslNoIdx =
       """{"must": [{"key": "label", "match": {"value": 3}}]}"""
-    val j2 = jobsOf("vr-filter-noidx") {
+    val j2 = jobsOf {
       VectorRouter.queryPoints(spark, emb, "vec_id", "embedding", decls,
         Nil, q, 10, dslJson = Some(dslNoIdx),
         params = VectorRouter.Params(scanThreshold = Long.MaxValue))
@@ -3043,16 +3072,11 @@ class OperatorSpec extends AnyFunSuite with SparkSpec {
     // replaced — the scoped θ collect, the candidate probe — but the
     // count is a CONSTANT bound (never ∝ collection), and the estimate
     // itself still runs no job
-    // scopedScanRows = 0 forces the r17 collection-size gate open so
-    // the job count below measures the scoped-θ branch, not the
-    // small-collection scan fallback
-    spark.conf.set("spark.graft.quant.scopedScanRows", "0")
-    val j3 =
-      try jobsOf("vr-filter-ann") {
-        VectorRouter.queryPoints(spark, emb, "vec_id", "embedding", decls,
-          Nil, q, 10, dslJson = Some(dslNoIdx),
-          params = VectorRouter.Params(scanThreshold = 0)).collect()
-      } finally spark.conf.unset("spark.graft.quant.scopedScanRows")
+    val j3 = jobsOf {
+      VectorRouter.queryPoints(spark, emb, "vec_id", "embedding", decls,
+        Nil, q, 10, dslJson = Some(dslNoIdx),
+        params = VectorRouter.Params(scanThreshold = 0)).collect()
+    }
     assert(j3 <= j1 + 6,
       s"scoped-bound filtered search spent $j3 jobs vs $j1 unfiltered " +
         "— the exact branch's job budget is no longer a small constant")
@@ -3074,7 +3098,7 @@ class OperatorSpec extends AnyFunSuite with SparkSpec {
        "across >64 tiny files still gets the exact zero-job footer " +
        "count (the old exact scan plan), not a MaxValue pin") {
     import graft.sources.VectorRouter
-    val root = java.nio.file.Files.createTempDirectory("graft-frag")
+    val root = SparkSpec.tempDir("graft-frag")
       .toString
     val dsl = """{"must": [{"key": "label", "match": {"value": 3}}]}"""
     // 200 rows in ~100 files (fragmented) and in 2 files (compact):

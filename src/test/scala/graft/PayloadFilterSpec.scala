@@ -245,7 +245,7 @@ class PayloadFilterSpec extends AnyFunSuite with SparkSpec {
   test("datetime range (RFC 3339 bounds): time-order semantics on a " +
        "timestamp column, and the comparison pushes to the parquet scan") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-dtr").toString
+    val dir = SparkSpec.tempDir("graft-dtr").toString
     Seq(
       (1L, "2024-01-02 23:59:59.999999"),
       (2L, "2024-01-03 00:00:00"),
@@ -401,7 +401,7 @@ class PayloadFilterSpec extends AnyFunSuite with SparkSpec {
        "exactly the points still carrying the named vector") {
     import graft.sources.Collections
     import graft.sources.Collections.VectorConfig
-    val dir = java.nio.file.Files.createTempDirectory("graft-hv")
+    val dir = SparkSpec.tempDir("graft-hv")
       .toString + "/c"
     val sink = new Collections.ParquetCollectionSink(spark, dir,
       VectorConfig(64), "embedding", "vec_id", "seq")

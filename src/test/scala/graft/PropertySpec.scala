@@ -467,8 +467,7 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
       val df = docs.zipWithIndex
         .map { case (ts, i) => (i.toLong, ts.mkString(" ")) }
         .toDF("doc_id", "text")
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft-proplex$ci").resolve("x").toString
+      val dir = SparkSpec.tempDir(s"graft-proplex$ci").resolve("x").toString
       graft.sources.LexIndex.buildFrom(df, "doc_id", "text", dir)
       phrases.foreach { ph =>
         val served = graft.sources.LexIndex

@@ -75,8 +75,7 @@ class RecommendSpec extends AnyFunSuite with SparkSpec {
     // FileScan once another test materialized the cache). Pushdown can
     // only be asserted against a path the cache cannot match — a temp
     // copy of the two columns.
-    val scrollDir = java.nio.file.Files
-      .createTempDirectory("graft-scrollf").resolve("t").toString
+    val scrollDir = SparkSpec.tempDir("graft-scrollf").resolve("t").toString
     Tables.load(spark, sf, "embeddings").select("vec_id", "label")
       .write.parquet(scrollDir)
     val base = spark.read.parquet(scrollDir).filter(f)

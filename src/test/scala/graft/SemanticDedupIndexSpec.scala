@@ -18,7 +18,7 @@ import graft.sources.SemanticDedupIndex
 class SemanticDedupIndexSpec extends AnyFunSuite with SparkSpec {
 
   private def tmp(tag: String): String =
-    Files.createTempDirectory(s"graft_spec_$tag").toString
+    SparkSpec.tempDir(s"graft_spec_$tag").toString
 
   private def corpus: DataFrame = Tables.load(spark, sf, "embeddings")
     .select("vec_id", "embedding")
@@ -302,22 +302,9 @@ class SemanticDedupIndexSpec extends AnyFunSuite with SparkSpec {
     assert(batched.nonEmpty)
     // the queryPointsMulti job-budget law: a doubled batch runs the
     // SAME jobs — one pruned scan + the fixed broadcast stages
-    val sc = spark.sparkContext
-    def jobsFor(ps: Seq[(Long, Seq[Double])]): Int = {
-      val group = s"semlookupmulti-${ps.length}-${System.nanoTime()}"
-      sc.setJobGroup(group, group)
-      try SemanticDedupIndex.lookupMulti(spark, dir, ps, 900000L)
-        .queryExecution.toRdd.foreach(_ => ())
-      finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 10000000000L
-      var jobs = sc.statusTracker.getJobIdsForGroup(group).length
-      var prev = -1
-      while (jobs != prev && System.nanoTime() < deadline) {
-        prev = jobs; Thread.sleep(200)
-        jobs = sc.statusTracker.getJobIdsForGroup(group).length
-      }
-      jobs
-    }
+    def jobsFor(ps: Seq[(Long, Seq[Double])]): Int =
+      jobsIn(SemanticDedupIndex.lookupMulti(spark, dir, ps, 900000L)
+        .queryExecution.toRdd.foreach(_ => ()))
     val probes6 = probes ++ probes.map { case (pid, v) =>
       (pid + 500000L, v.map(-_)) }
     val (j3, j6) = (jobsFor(probes), jobsFor(probes6))

@@ -13,7 +13,7 @@ import graft.streaming.Stream
 class StreamSpec extends AnyFunSuite with SparkSpec {
 
   test("file-stream ingest (normalize→points→upsert) matches batch run") {
-    val tmp = Files.createTempDirectory("graft-stream")
+    val tmp = SparkSpec.tempDir("graft-stream")
     val in = tmp.resolve("in"); Files.createDirectories(in)
     Files.write(in.resolve("batch1.txt"),
       IngestQueries.fixtures.map(_._2).asJava)
@@ -34,7 +34,7 @@ class StreamSpec extends AnyFunSuite with SparkSpec {
 
   test("upsertSink dropOnError=false propagates sink failures " +
        "(at-least-once); default drops and continues") {
-    val tmp = Files.createTempDirectory("graft-stream-err")
+    val tmp = SparkSpec.tempDir("graft-stream-err")
     val in = tmp.resolve("in"); Files.createDirectories(in)
     Files.write(in.resolve("b.txt"), IngestQueries.fixtures.map(_._2).asJava)
 
@@ -59,7 +59,7 @@ class StreamSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("flatMapGroupsWithState sessionization matches the batch twin") {
-    val dir = Files.createTempDirectory("graft-sess")
+    val dir = SparkSpec.tempDir("graft-sess")
     Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -98,7 +98,7 @@ class StreamSpec extends AnyFunSuite with SparkSpec {
 
   test("sessionization with end-of-stream flush equals the batch twin " +
        "EXACTLY (no still-open carve-out)") {
-    val dir = Files.createTempDirectory("graft-sess-flush")
+    val dir = SparkSpec.tempDir("graft-sess-flush")
     // materialize CANONICAL (epoch-ns BIGINT ts) events: writeSessionFlush
     // appends a BIGINT-ts punctuation file to the same drop directory, so
     // the directory's physical ts type must be homogeneous
@@ -138,10 +138,10 @@ class StreamSpec extends AnyFunSuite with SparkSpec {
 
   test("sessionize: cross-batch early late event forms its own session") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-late")
+    val dir = SparkSpec.tempDir("graft-late")
     val gapUs = 1800000000L // 30 min
     def write(name: String, rows: Seq[(Long, Long)]): Unit = {
-      val tmp = Files.createTempDirectory("graft-late-w").resolve("out")
+      val tmp = SparkSpec.tempDir("graft-late-w").resolve("out")
       rows.map { case (id, tsSec) =>
         (id, tsSec * 1000000000L, 1L, "e", 1.0, "{}")
       }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -176,7 +176,7 @@ class StreamSpec extends AnyFunSuite with SparkSpec {
 
   test("streaming hourly event rollup totals match the batch table") {
     // stream from a drop-directory (the realistic shape): copy the fixture in
-    val dir = Files.createTempDirectory("graft-events")
+    val dir = SparkSpec.tempDir("graft-events")
     Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
     val q = Stream.eventsHourlyStream(spark, dir.toString)
@@ -198,7 +198,7 @@ class StreamSpec extends AnyFunSuite with SparkSpec {
 
   test("streaming near-dup (stateful band buckets) matches the batch " +
        "keep-first twin") {
-    val dir = Files.createTempDirectory("graft-neardup")
+    val dir = SparkSpec.tempDir("graft-neardup")
     // id-ordered bounded corpus with planted exact dups (id+1000)
     val d = Tables.load(spark, sf, "documents").select("doc_id", "text")
       .limit(40)
@@ -240,7 +240,7 @@ class StreamSpec extends AnyFunSuite with SparkSpec {
     // SURVEY §3 E1) on the engine: a file stream of embed messages feeds
     // the manifest-committed collection via foreachBatch, and the
     // resulting collection answers a cosine search
-    val tmp = Files.createTempDirectory("graft-e1")
+    val tmp = SparkSpec.tempDir("graft-e1")
     val in = tmp.resolve("in"); Files.createDirectories(in)
     Files.write(in.resolve("batch1.txt"),
       IngestQueries.fixtures.map(_._2).asJava)
@@ -294,7 +294,7 @@ class StreamSpec extends AnyFunSuite with SparkSpec {
        "micro-batch equals a full rebuild at the end") {
     import graft.sources.{Collections, IvfIndex, QuantIndex}
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-sivf")
+    val tmp = SparkSpec.tempDir("graft-sivf")
     val in = tmp.resolve("in"); Files.createDirectories(in)
     // two files + maxFilesPerTrigger=1 → two micro-batches, so the index
     // is refreshed INCREMENTALLY at least twice, never fully rebuilt
@@ -370,7 +370,7 @@ class StreamSpec extends AnyFunSuite with SparkSpec {
     import graft.sources.Collections.VectorConfig
     import graft.operators.{Ann, Pq}
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-slayouts")
+    val tmp = SparkSpec.tempDir("graft-slayouts")
     val in = tmp.resolve("in"); Files.createDirectories(in)
     val emb = Tables.load(spark, sf, "embeddings").limit(60)
       .select(col("vec_id").cast("long").as("id"), col("embedding"))
@@ -484,7 +484,7 @@ class StreamSpec extends AnyFunSuite with SparkSpec {
        "deduplicates against them; final index equals a full rebuild") {
     import graft.sources.DedupIndex
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-sdedup")
+    val tmp = SparkSpec.tempDir("graft-sdedup")
     val in = tmp.resolve("in"); Files.createDirectories(in)
     val idxDir = tmp.resolve("idx").toString
     val outDir = tmp.resolve("kept").toString
@@ -556,7 +556,7 @@ class StreamSpec extends AnyFunSuite with SparkSpec {
        "index equals a full rebuild") {
     import graft.sources.SemanticDedupIndex
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-semgate-stream")
+    val tmp = SparkSpec.tempDir("graft-semgate-stream")
     val in = tmp.resolve("in").toString
     val idxDir = tmp.resolve("idx").toString
     val outDir = tmp.resolve("kept").toString
@@ -628,7 +628,7 @@ class StreamSpec extends AnyFunSuite with SparkSpec {
        "layouts equal full rebuilds over corpus + their survivors") {
     import graft.sources.{DedupIndex, SemanticDedupIndex}
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-curate-stream")
+    val tmp = SparkSpec.tempDir("graft-curate-stream")
     val lexIdx = tmp.resolve("lex").toString
     val semIdx = tmp.resolve("sem").toString
     val outDir = tmp.resolve("curated").toString
@@ -773,13 +773,13 @@ class StreamSpec extends AnyFunSuite with SparkSpec {
   test("nearDupStreamTtl: expired band bucket re-admits content; " +
        "within-TTL duplicate still hits") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-neardup-ttl")
+    val dir = SparkSpec.tempDir("graft-neardup-ttl")
     val textX = "the quick brown fox jumps over the lazy dog again and again"
     val textY = "completely different content about structured streaming state"
     val t0 = 1000000L // epoch seconds
     def write(name: String, rows: Seq[(Long, String, Long)],
               modMs: Long): Unit = {
-      val tmp = Files.createTempDirectory("graft-ttl-w").resolve("out")
+      val tmp = SparkSpec.tempDir("graft-ttl-w").resolve("out")
       rows.toDF("doc_id", "text", "ts_sec")
         .withColumn("ts", timestamp_seconds(col("ts_sec"))).drop("ts_sec")
         .coalesce(1).write.parquet(tmp.toString)
@@ -822,7 +822,7 @@ class StreamSpec extends AnyFunSuite with SparkSpec {
 
   test("stream-static search: streamed query batches get the batch " +
        "operator's exact answers") {
-    val tmp = Files.createTempDirectory("graft-sss")
+    val tmp = SparkSpec.tempDir("graft-sss")
     val in = tmp.resolve("queries"); Files.createDirectories(in)
     val emb = Tables.load(spark, sf, "embeddings")
     // two query files → two micro-batches
@@ -861,7 +861,7 @@ class StreamSpec extends AnyFunSuite with SparkSpec {
        "skipped — manifest generation, fence, and row set all unchanged; " +
        "compaction carries the fence forward") {
     import graft.sources.Collections
-    val tmp = Files.createTempDirectory("graft-fence")
+    val tmp = SparkSpec.tempDir("graft-fence")
     val dir = tmp.resolve("coll").toString
     import spark.implicits._
     Collections.create(dir, Collections.VectorConfig(2))
@@ -926,7 +926,7 @@ class StreamSpec extends AnyFunSuite with SparkSpec {
        "corrected replay of that batchId can still apply, and the " +
        "rejected count is surfaced") {
     import graft.sources.Collections
-    val tmp = Files.createTempDirectory("graft-fence-rej")
+    val tmp = SparkSpec.tempDir("graft-fence-rej")
     val dir = tmp.resolve("coll").toString
     import spark.implicits._
     val sink = new Collections.ParquetCollectionSink(spark, dir,
@@ -964,7 +964,7 @@ class StreamSpec extends AnyFunSuite with SparkSpec {
 
   test("stream-stream interval join (attribution) emits exactly the " +
        "batch twin's pairs") {
-    val dir = Files.createTempDirectory("graft-ssjoin")
+    val dir = SparkSpec.tempDir("graft-ssjoin")
     Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
     Tables.load(spark, sf, "events") // sets the nanosAsLong read conf
