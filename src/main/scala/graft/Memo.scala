@@ -9,8 +9,10 @@ import scala.jdk.CollectionConverters._
 
 /** The one driver-side memo: trained centroids and codebooks, fixture
   * scalars, query vectors, fitted model LUTs, footer row counts, the
-  * memoized temp layouts of [[Tables.memoTempDir]] and the held-open
-  * layout reads of [[graft.sources.ServedReads]].
+  * memoized temp layouts of [[Tables.memoTempDir]], the held-open
+  * layout reads of [[graft.sources.ServedReads]] and the held-open
+  * collection reads of [[graft.sources.Collections.read]] (one per
+  * committed manifest, keyed by its text and the collection dir).
   *
   * Keying. An entry is keyed by (name, params, inputs), and each input
   * path by its [[fingerprint]]: one non-recursive listing giving every
@@ -94,13 +96,18 @@ object Memo {
   /** Drop the entries under `dir` (it included) that may be stale: every
     * entry keyed by such a dir, and every entry whose inputs there no
     * longer list as they did. Called by every verb that mutates a layout,
-    * before and after the mutation. */
+    * before and after the mutation, after every collection commit and on
+    * every collection-read miss. */
   def evict(dir: String): Unit = {
     def under(p: String) = p == dir || p.startsWith(dir + "/")
     cells.keySet.removeIf(k => k.paths.exists(under) &&
       !k.prints.contains(k.paths.map(fingerprint)))
     ()
   }
+
+  /** The input paths of each entry named `name`. */
+  private[graft] def inputsOf(name: String): Seq[Seq[String]] =
+    cells.keySet.asScala.toSeq.collect { case k if k.name == name => k.paths }
 
   private def cell[V](key: Key)(compute: => V): V = {
     val found = cells.get(key)

@@ -5,6 +5,9 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 import graft.functions.VectorOps
 
 /** Collection storage layer — the engine's form of the reference's
@@ -31,7 +34,8 @@ import graft.functions.VectorOps
   * {{{
   * dir/
   *   _collection.json          {dim, metric, buckets}
-  *   _manifest.json            {"gen": N, "buckets": {"3": "g00002/bucket=3", ...}}
+  *   _manifest.json            {"gen": N, "buckets": {"3": "g00002/bucket=3", ...},
+  *                              "schema": {"type": "struct", "fields": [...]}}
   *   data/
   *     g00001/bucket=5/part-….parquet   immutable generation directories
   *     g00002/bucket=3/part-….parquet
@@ -41,7 +45,9 @@ import graft.functions.VectorOps
   * the buckets its rows touch into a NEW generation directory (existing
   * files are never renamed, moved, or rewritten), then publishes a new
   * `_manifest.json` mapping every live bucket to its current directory.
-  * Readers resolve through the manifest, so:
+  * Readers resolve through the manifest — the bucket paths AND the schema
+  * of the rows they hold, so a read lists only the manifest's bucket dirs
+  * and runs no schema-inference job — so:
   *
   *  - a multi-bucket write is ATOMIC: until the manifest swap, readers see
   *    the wholly-old collection; after it, wholly-new — never a mix (the
@@ -76,6 +82,7 @@ object Collections {
   private def metaPath(dir: String) = Paths.get(dir, "_collection.json")
   private def manifestPath(dir: String) = Paths.get(dir, "_manifest.json")
   private def manifestTmp(dir: String) = Paths.get(dir, "_manifest.json.tmp")
+  // written by publishes before the manifest carried the schema
   private def schemaPath(dir: String) = Paths.get(dir, "_schema.json")
   private def migratedMarker(dir: String) = Paths.get(s"$dir/data/_migrated")
 
@@ -176,17 +183,35 @@ object Collections {
   // Manifest
   // ---------------------------------------------------------------------
 
-  /** (generation, bucket → path relative to `data/`), if committed. */
-  private def readManifest(dir: String): Option[(Int, Map[Int, String])] =
+  /** A committed manifest: generation, bucket → path relative to `data/`,
+    * the streaming batch fence (-1: none) and the schema of the rows its
+    * paths hold (None in a manifest written before the schema field).
+    * One parse of one file, so a schema always matches its paths. */
+  private final case class Manifest(gen: Int, buckets: Map[Int, String],
+                                    batch: Long = -1L,
+                                    schema: Option[StructType] = None)
+
+  private def manifestText(dir: String): Option[String] =
     if (!Files.exists(manifestPath(dir))) None
-    else {
-      val txt = new String(Files.readAllBytes(manifestPath(dir)),
-        StandardCharsets.UTF_8)
-      val gen = """"gen":\s*(\d+)""".r.findFirstMatchIn(txt).get.group(1).toInt
-      val entries = """"(\d+)":\s*"([^"]+)"""".r.findAllMatchIn(txt)
-        .map(m => m.group(1).toInt -> m.group(2)).toMap
-      Some((gen, entries))
-    }
+    else Some(new String(Files.readAllBytes(manifestPath(dir)),
+      StandardCharsets.UTF_8))
+
+  private def parseManifest(txt: String): Manifest = {
+    val j = JsonMethods.parse(txt)
+    val JInt(gen) = j \ "gen"
+    val JObject(buckets) = j \ "buckets"
+    Manifest(gen.toInt,
+      buckets.collect { case (k, JString(rel)) => k.toInt -> rel }.toMap,
+      j \ "batch" match { case JInt(b) => b.toLong; case _ => -1L },
+      j \ "schema" match {
+        case JNothing => None
+        case s => Some(DataType.fromJson(JsonMethods.compact(s))
+          .asInstanceOf[StructType])
+      })
+  }
+
+  private def readManifest(dir: String): Option[Manifest] =
+    manifestText(dir).map(parseManifest)
 
   /** The last STREAMING batch id the manifest committed, or -1: the
     * exactly-once fence for foreachBatch replays (Structured Streaming
@@ -194,81 +219,76 @@ object Collections {
     * the checkpoint commit; recording the id IN the manifest makes
     * "applied" and "visible" the same atomic event). */
   def lastAppliedBatch(dir: String): Long =
-    if (!Files.exists(manifestPath(dir))) -1L
-    else """"batch":\s*(-?\d+)""".r
-      .findFirstMatchIn(new String(Files.readAllBytes(manifestPath(dir)),
-        StandardCharsets.UTF_8))
-      .map(_.group(1).toLong).getOrElse(-1L)
+    readManifest(dir).fold(-1L)(_.batch)
 
   /** The commit point: stage the manifest beside its target, then one
     * atomic swap. On an object store this becomes a single conditional
     * PUT of `_manifest.json` — no other step of a write mutates a path a
-    * reader can hold. `batch` (when ≥ 0) records the streaming batch id
+    * reader can hold. `m.batch` (when ≥ 0) records the streaming batch id
     * this commit applied; batch-agnostic writes pass the carried-forward
-    * value so a compaction never un-fences a replay. */
-  private def writeManifest(dir: String, gen: Int,
-                            buckets: Map[Int, String],
-                            batch: Long = -1L): Unit = {
-    val body = buckets.toSeq.sortBy(_._1)
+    * value so a compaction never un-fences a replay. Reads memoized
+    * against a superseded manifest are evicted after the swap. */
+  private def writeManifest(dir: String, m: Manifest): Unit = {
+    val body = m.buckets.toSeq.sortBy(_._1)
       .map { case (k, p) => s""""$k": "$p"""" }.mkString("{", ", ", "}")
-    val batchField = if (batch >= 0) s""", "batch": $batch""" else ""
+    val batchField = if (m.batch >= 0) s""", "batch": ${m.batch}""" else ""
+    val schemaField = m.schema.fold("")(s => s""", "schema": ${s.json}""")
     val tmp = manifestTmp(dir)
     Files.write(tmp,
-      s"""{"gen": $gen$batchField, "buckets": $body}"""
+      s"""{"gen": ${m.gen}$batchField, "buckets": $body$schemaField}"""
         .getBytes(StandardCharsets.UTF_8))
     try Files.move(tmp, manifestPath(dir),
       StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
     catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
       Files.move(tmp, manifestPath(dir), StandardCopyOption.REPLACE_EXISTING)
     }
+    if (m.schema.isDefined) Files.deleteIfExists(schemaPath(dir))
+    graft.Memo.evict(dir)
   }
 
-  /** Current (gen, view): from the manifest, else the legacy bucket
-    * directories as a gen-0 view (their manifest entries keep the legacy
-    * relative path — migration references them in place, no data moves). */
-  private def currentState(dir: String): (Int, Map[Int, String]) =
+  /** Current state: the manifest, else the legacy bucket directories as a
+    * gen-0 view (their manifest entries keep the legacy relative path —
+    * migration references them in place, no data moves). */
+  private def currentState(dir: String): Manifest =
     readManifest(dir).getOrElse {
-      (0, listBuckets(Paths.get(s"$dir/data")).map { case (name, _) =>
+      Manifest(0, listBuckets(Paths.get(s"$dir/data")).map { case (name, _) =>
         name.stripPrefix(s"$BucketCol=").toInt -> name
       })
     }
 
+  /** Parquet rows at `paths`: with the manifest's schema when it has one
+    * (no inference job), else inferred from a footer. */
+  private def readPaths(spark: SparkSession, schema: Option[StructType],
+                        paths: Seq[String]): DataFrame =
+    schema.fold(spark.read)(spark.read.schema).parquet(paths: _*)
+
   /** Write `rows` (carrying [[BucketCol]]) as generation `gen`+1 and
-    * publish the manifest remapping `touched` buckets to it. A touched
-    * bucket with no surviving rows is dropped from the manifest (its
-    * directory is simply never written). Everything before the final
-    * [[writeManifest]] is invisible to readers. */
-  private def publishGeneration(dir: String, gen: Int,
-                                view: Map[Int, String], touched: Set[Int],
-                                rows: DataFrame,
+    * publish the manifest remapping `touched` buckets to it, with the
+    * rows' schema. A touched bucket with no surviving rows is dropped
+    * from the manifest (its directory is simply never written).
+    * Everything before the final [[writeManifest]] is invisible to
+    * readers. */
+  private def publishGeneration(dir: String, prev: Manifest,
+                                touched: Set[Int], rows: DataFrame,
                                 batch: Long = -1L): Unit = {
     // batch-agnostic writes (compact, mutation verbs, plain upserts)
     // carry the recorded streaming fence forward — dropping it would let
     // a later replay of an already-applied batch double-apply
-    val effBatch = if (batch >= 0) batch else lastAppliedBatch(dir)
-    val genName = f"g${gen + 1}%05d"
+    val effBatch = if (batch >= 0) batch else prev.batch
+    val genName = f"g${prev.gen + 1}%05d"
     val genDir = Paths.get(dir, "data", genName)
     rows.write.mode("overwrite").partitionBy(BucketCol)
       .parquet(genDir.toString)
-    // persist the consumer-visible schema BEFORE the manifest swap: a
-    // poll of a later fully-emptied collection still returns a
-    // schema-stable empty frame (unions/selects across polls never
-    // throw). Same tmp + atomic-move discipline as the manifest — the
-    // reader side (changedSince) reads this file directly and must never
-    // observe a torn write
-    val schemaTmp = Paths.get(dir, "_schema.json.tmp")
-    Files.write(schemaTmp,
-      rows.drop(BucketCol).schema.json.getBytes(StandardCharsets.UTF_8))
-    try Files.move(schemaTmp, schemaPath(dir),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-    catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
-      Files.move(schemaTmp, schemaPath(dir), StandardCopyOption.REPLACE_EXISTING)
-    }
     val written = listBuckets(genDir).keySet
       .map(_.stripPrefix(s"$BucketCol=").toInt)
-    writeManifest(dir, gen + 1,
-      (view -- touched) ++ written.map(k => k -> s"$genName/$BucketCol=$k"),
-      effBatch)
+    // the consumer-visible schema commits in the same swap as the paths:
+    // a poll of a later fully-emptied collection still returns a
+    // schema-stable empty frame, and a reader never pairs a new schema
+    // with old files
+    writeManifest(dir, Manifest(prev.gen + 1,
+      (prev.buckets -- touched) ++
+        written.map(k => k -> s"$genName/$BucketCol=$k"),
+      effBatch, Some(rows.drop(BucketCol).schema)))
   }
 
   /** WRITER-side recovery = garbage collection (manifest layout) or
@@ -276,7 +296,7 @@ object Collections {
     * this — destructive cleanup from the read path would race an
     * in-flight write. */
   private def recoverForWrite(dir: String): Unit = readManifest(dir) match {
-    case Some((_, m)) =>
+    case Some(Manifest(_, m, _, _)) =>
       Files.deleteIfExists(manifestTmp(dir))
       // pre-manifest protocol leftovers are dead once a manifest exists
       Seq(s"$dir/.old", s"$dir/.staging").map(Paths.get(_))
@@ -363,7 +383,7 @@ object Collections {
     recoverForWrite(dir)
     val buckets = numBuckets(dir)
     val dataDir = Paths.get(s"$dir/data")
-    val (gen, view) = currentState(dir)
+    val state = currentState(dir)
     val bucketed = batch.withColumn(BucketCol, bucketOf(idCol, buckets))
     // pre-manifest loose files migrate on this write: their rows join the
     // merge, spanning whatever buckets they hash to; the manifest then
@@ -381,22 +401,23 @@ object Collections {
     if (touched.isEmpty) {
       // an EMPTY batch still advances the fence (its delivery must not
       // be replayable as "never applied"): commit a manifest that only
-      // bumps gen + batch, no data movement
-      if (batchId >= 0) writeManifest(dir, gen + 1, view, batchId)
+      // bumps gen + batch, no data movement (the schema carries forward)
+      if (batchId >= 0)
+        writeManifest(dir, state.copy(gen = state.gen + 1, batch = batchId))
       return batchId >= 0
     }
     // files do not store the bucket column (it is the directory name);
     // recompute it on read — same hash, same pinned bucket count
-    val existingDirs = touched.toSeq.sorted.flatMap(view.get)
+    val existingDirs = touched.toSeq.sorted.flatMap(state.buckets.get)
       .map(rel => dataDir.resolve(rel))
       .filter(Files.exists(_)).map(_.toString)
     val merged =
       if (existingDirs.isEmpty) withLegacy
-      else spark.read.parquet(existingDirs: _*)
+      else readPaths(spark, state.schema, existingDirs)
         .withColumn(BucketCol, bucketOf(idCol, buckets))
         .unionByName(withLegacy)
     val compacted = graft.operators.Ingest.upsert(merged, idCol, seqCol)
-    publishGeneration(dir, gen, view, touched, compacted, batchId)
+    publishGeneration(dir, state, touched, compacted, batchId)
     true
   }
 
@@ -412,13 +433,13 @@ object Collections {
   def compact(spark: SparkSession, dir: String, idCol: String): Unit = {
     recoverForWrite(dir)
     val buckets = numBuckets(dir)
-    val (gen, view) = currentState(dir)
+    val state = currentState(dir)
     // pre-manifest collections may hold ONLY loose flat files (no
     // bucket= dirs → empty view) — the small-file case compact exists
     // for; read() includes them, and publishing migrates to the manifest
     val loose = if (readManifest(dir).isDefined) Seq.empty
                 else looseFiles(Paths.get(s"$dir/data"))
-    if (view.isEmpty && loose.isEmpty) return
+    if (state.buckets.isEmpty && loose.isEmpty) return
     val rows = read(spark, dir)
       .withColumn(BucketCol, bucketOf(idCol, buckets))
       // co-locate each bucket before the partitioned write: without this
@@ -426,7 +447,7 @@ object Collections {
       // hold — (splits × buckets) small files, the opposite of
       // compaction. One exchange on the bucket key → one file per bucket.
       .repartition(col(BucketCol))
-    publishGeneration(dir, gen, view, view.keySet, rows)
+    publishGeneration(dir, state, state.buckets.keySet, rows)
   }
 
   /** Shared machinery of the filter-scoped mutation verbs: locate the
@@ -440,7 +461,8 @@ object Collections {
     recoverForWrite(dir)
     val buckets = numBuckets(dir)
     val dataDir = Paths.get(s"$dir/data")
-    val (gen, view) = currentState(dir)
+    val state = currentState(dir)
+    val view = state.buckets
     val matchCond = coalesce(filter, lit(false))
     def withBucket(df: DataFrame) =
       df.withColumn(BucketCol, bucketOf(idCol, buckets))
@@ -454,7 +476,7 @@ object Collections {
       case (None, Seq()) => return 0L
       case (Some(l), Seq()) => l
       case (l, ps) =>
-        val v = withBucket(spark.read.parquet(ps: _*))
+        val v = withBucket(readPaths(spark, state.schema, ps))
         l.map(v.unionByName(_)).getOrElse(v)
     }
     // one job: per-bucket match counts → touched set + matched total
@@ -473,11 +495,10 @@ object Collections {
     val touchedData = (looseDf, touchedDirs) match {
       case (Some(l), Seq()) => l
       case (l, ps) =>
-        val v = withBucket(spark.read.parquet(ps: _*))
+        val v = withBucket(readPaths(spark, state.schema, ps))
         l.map(v.unionByName(_)).getOrElse(v)
     }
-    publishGeneration(dir, gen, view, touched,
-      xform(touchedData, matchCond))
+    publishGeneration(dir, state, touched, xform(touchedData, matchCond))
     perBucket.values.sum
   }
 
@@ -648,7 +669,7 @@ object Collections {
       s"updateBatch needs a migrated collection (unbucketed loose files " +
         s"present) — run one upsert first: $dir")
     val buckets = numBuckets(dir)
-    val (gen, view) = currentState(dir)
+    val state = currentState(dir)
     val keep = (Seq(idCol, seqCol, BucketCol) ++ vecCols).toSet
     val dim = config(dir).dim
     def withBucket(df: DataFrame) =
@@ -714,7 +735,7 @@ object Collections {
     }
     try {
       if (touched.isEmpty) return
-      publishGeneration(dir, gen, view, touched,
+      publishGeneration(dir, state, touched,
         cur.filter(col(BucketCol).isin(touched.toSeq.sorted.map(Int.box): _*)))
     } finally persisted.foreach(_.unpersist(blocking = false))
   }
@@ -724,13 +745,30 @@ object Collections {
     * their de-referencing write by one more write — the grace window for
     * plans bound to the previous manifest). Pre-manifest collections fall
     * back to the legacy union (bucket dirs ∪ crash-backup `.old` buckets
-    * ∪ unmigrated loose files). */
+    * ∪ unmigrated loose files), read fresh: their mutations happen below
+    * the top-level listing.
+    *
+    * HELD OPEN: a committed manifest resolves to one relation per
+    * (session, manifest text, [[graft.Memo.fingerprint]] of `dir`),
+    * memoized through [[graft.Memo]]: the manifest's files are
+    * immutable, so its frozen listing stays exact, and the next read of
+    * an unchanged collection lists nothing and runs no job (a manifest
+    * written before the schema field infers its schema once, on the
+    * miss). The fingerprint changes on every manifest swap (a new
+    * inode), on delete-and-recreate, on [[restore]] and on a manifest
+    * rewritten in place. Every miss evicts the dir's superseded entries,
+    * whoever wrote the manifest, so at most one is held per collection;
+    * [[writeManifest]] evicts them at once. */
   def read(spark: SparkSession, dir: String): DataFrame =
-    readManifest(dir) match {
-      case Some((_, m)) =>
-        val paths = m.values.map(rel => s"$dir/data/$rel").toSeq.sorted
-        if (paths.isEmpty) spark.read.parquet(s"$dir/data") // empty: same
-        else spark.read.parquet(paths: _*)                  //  error shape
+    manifestText(dir) match {
+      case Some(txt) =>
+        val m = parseManifest(txt)
+        val paths = m.buckets.values.map(rel => s"$dir/data/$rel").toSeq.sorted
+        if (paths.isEmpty) spark.read.parquet(s"$dir/data") // legacy error
+        else graft.Memo("collectionRead", (spark, txt), dir) {
+          graft.Memo.evict(dir)
+          readPaths(spark, m.schema, paths)
+        }
       case None =>
         val dataDir = Paths.get(s"$dir/data")
         val dataB = listBuckets(dataDir)
@@ -750,9 +788,18 @@ object Collections {
 
   /** The currently-published view (legacy layouts surface as gen 0). */
   def manifestView(dir: String): ManifestView = {
-    val (gen, m) = currentState(dir)
-    ManifestView(gen, m)
+    val m = currentState(dir)
+    ManifestView(m.gen, m.buckets)
   }
+
+  /** Bucket ids whose mapped path differs between two manifest views —
+    * THE change-feed comparison rule, shared by [[changedSince]] and the
+    * derived-layout refreshers (IvfIndex, Tenancy), so their delete sets
+    * can never diverge from the rows the feed hands them. */
+  def changedBuckets(prev: ManifestView, cur: ManifestView): Set[Int] =
+    cur.buckets.collect {
+      case (b, rel) if !prev.buckets.get(b).contains(rel) => b
+    }.toSet
 
   /** CHANGE FEED — the incremental-consumer API the manifest layout
     * exists for: given the view a consumer last processed, return the
@@ -763,38 +810,30 @@ object Collections {
     * entirely. Cost is O(changed buckets) — a downstream index/reindex
     * job re-reads only what a write touched, never the collection. The
     * consumer's next cursor is the returned view; polling between writes
-    * returns an empty frame (same path map ⇒ nothing to read). */
-  /** Bucket ids whose mapped path differs between two manifest views —
-    * THE change-feed comparison rule, shared by [[changedSince]] and the
-    * derived-layout refreshers (IvfIndex, Tenancy), so their delete sets
-    * can never diverge from the rows the feed hands them. */
-  def changedBuckets(prev: ManifestView, cur: ManifestView): Set[Int] =
-    cur.buckets.collect {
-      case (b, rel) if !prev.buckets.get(b).contains(rel) => b
-    }.toSet
-
+    * returns an empty frame (same path map ⇒ nothing to read). The view
+    * and the schema come from one manifest read. */
   def changedSince(spark: SparkSession, dir: String, prev: ManifestView)
       : (ManifestView, DataFrame, Set[Int]) = {
-    val cur = manifestView(dir)
+    val state = currentState(dir)
+    val cur = ManifestView(state.gen, state.buckets)
     val changed = changedBuckets(prev, cur).toSeq.sorted
       .flatMap(b => cur.buckets.get(b).map(rel => s"$dir/data/$rel"))
     val dropped = prev.buckets.keySet -- cur.buckets.keySet
     val df =
-      if (changed.nonEmpty) spark.read.parquet(changed: _*)
+      if (changed.nonEmpty) readPaths(spark, state.schema, changed)
       else if (cur.buckets.nonEmpty)
         read(spark, dir).limit(0) // empty frame with the live schema
-      else if (Files.exists(schemaPath(dir)))
-        // fully emptied: no live files to take a schema from — use the
-        // schema persisted at the last publish, so the feed's schema is
-        // stable across ALL states (consumers union successive polls)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-          org.apache.spark.sql.types.DataType.fromJson(
-            new String(Files.readAllBytes(schemaPath(dir)),
-              StandardCharsets.UTF_8))
-            .asInstanceOf[org.apache.spark.sql.types.StructType])
       else
-        // never-published collection: nothing to derive a schema from
-        spark.emptyDataFrame
+        // fully emptied: no live files to take a schema from — use the
+        // schema of the last publish, so the feed's schema is stable
+        // across ALL states (consumers union successive polls). A
+        // manifest written before the schema field has it in the schema
+        // file its publish wrote; a never-published collection has none
+        state.schema.orElse(Some(schemaPath(dir)).filter(Files.exists(_))
+            .map(p => DataType.fromJson(new String(Files.readAllBytes(p),
+              StandardCharsets.UTF_8)).asInstanceOf[StructType]))
+          .fold(spark.emptyDataFrame)(s =>
+            spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s))
     (cur, df, dropped)
   }
 
@@ -916,8 +955,10 @@ object Collections {
   }
 
   /** Drop a collection: metadata, manifest, data — everything. */
-  def delete(dir: String): Unit =
+  def delete(dir: String): Unit = {
     if (Files.exists(Paths.get(dir))) deleteRecursively(Paths.get(dir))
+    graft.Memo.evict(dir)
+  }
 
   /** One scroll page (Qdrant `scroll`): points ordered by id, strictly
     * after `afterId`, optionally filtered (the filter DSL composes here
@@ -955,7 +996,7 @@ object Collections {
     * recompute, no shuffle. Pre-manifest collections are migrated views:
     * snapshot reads through [[read]] and rewrites (slower, documented). */
   def snapshot(dir: String, snapDir: String): Unit = {
-    val (gen, view) = currentState(dir)
+    val state = currentState(dir)
     require(readManifest(dir).isDefined ||
         looseFiles(Paths.get(s"$dir/data")).isEmpty,
       s"snapshot needs a migrated collection (unbucketed loose files " +
@@ -963,7 +1004,7 @@ object Collections {
     Files.createDirectories(Paths.get(snapDir))
     Files.copy(metaPath(dir), Paths.get(snapDir, "_collection.json"),
       StandardCopyOption.REPLACE_EXISTING)
-    view.foreach { case (_, rel) =>
+    state.buckets.foreach { case (_, rel) =>
       val src = Paths.get(dir, "data", rel)
       val dst = Paths.get(snapDir, "data", rel)
       Files.createDirectories(dst)
@@ -976,11 +1017,12 @@ object Collections {
     }
     // the manifest is written LAST — a torn snapshot directory (crash
     // mid-copy) has no manifest and is detectably incomplete. The
-    // streaming batch fence travels WITH the snapshot: a restore()d
-    // collection must still skip replays of batches it already applied
-    // (same carry-forward contract as compact), or the exactly-once
-    // guarantee would silently end at the first restore.
-    writeManifest(snapDir, gen, view, lastAppliedBatch(dir))
+    // streaming batch fence and the schema travel WITH the snapshot: a
+    // restore()d collection must still skip replays of batches it already
+    // applied (same carry-forward contract as compact), or the
+    // exactly-once guarantee would silently end at the first restore; and
+    // a restored empty collection still polls with the live schema.
+    writeManifest(snapDir, state)
   }
 
   /** Qdrant `recover_snapshot`: a snapshot directory IS a collection
@@ -995,8 +1037,12 @@ object Collections {
     try walk.iterator().asScala.foreach { p =>
       val dst = Paths.get(dir).resolve(root.relativize(p))
       if (Files.isDirectory(p)) Files.createDirectories(dst)
-      else Files.copy(p, dst, StandardCopyOption.REPLACE_EXISTING)
+      else if (p != manifestPath(snapDir))
+        Files.copy(p, dst, StandardCopyOption.REPLACE_EXISTING)
     } finally walk.close()
+    // the manifest commits LAST, as in snapshot: a read during the copy
+    // finds no manifest, never one whose files are still being copied
+    writeManifest(dir, readManifest(snapDir).get)
   }
 
   /** Collection ALIASES (the Qdrant aliases API): a level of indirection

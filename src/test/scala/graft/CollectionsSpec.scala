@@ -1856,4 +1856,259 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
       "refresh from maintain's cursor diverged from rebuild")
     assert(v0 != null)
   }
+
+  // -------------------------------------------------------------------
+  // Held-open collection reads: one relation per committed manifest
+  // -------------------------------------------------------------------
+
+  private def rowSet(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+    df.collect().map(_.toSeq).toSet
+
+  test("held-open collection read: every commit verb, restore, " +
+       "delete-and-recreate and a manifest rolled back by hand are " +
+       "visible to the next read; an unchanged collection's read is a " +
+       "0-job memo hit equal to an inference read; commits evict") {
+    import java.nio.file.Paths
+    import org.apache.spark.sql.DataFrame
+    import Collections.PointOp
+    val root = SparkSpec.tempDir("graft-held").toString
+    val dir = s"$root/coll"
+    val emb = Tables.load(spark, sf, "embeddings").limit(120)
+      .withColumn("seq", lit(0))
+    def sinkOf(d: String) = new Collections.ParquetCollectionSink(spark, d,
+      VectorConfig(64), "embedding", "vec_id", "seq")
+    val sink = sinkOf(dir)
+    sink.write(emb)
+    def read(d: String = dir) = Collections.read(spark, d)
+    def labels(df: DataFrame): Map[Long, Int] =
+      df.select("vec_id", "label").collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    // the reference: an inference read of the committed paths
+    def inferred(d: String = dir) = spark.read.parquet(
+      Collections.manifestView(d).buckets.values.toSeq.sorted
+        .map(rel => s"$d/data/$rel"): _*)
+
+    // a first read lists the manifest's paths with its schema (no
+    // inference job); the next is the same relation, from the memo
+    assert(jobsIn(read()) == 0, "a committed read ran a schema job")
+    val hits0 = graft.Memo.hits.get
+    var again: DataFrame = null
+    assert(jobsIn { again = read() } == 0, "an unchanged read ran a job")
+    assert(graft.Memo.hits.get == hits0 + 1 && (again eq read()),
+      "the read of an unchanged collection was not a memo hit")
+    assert(again.schema == inferred().schema)
+    assert(again.count() == 120 && rowSet(again) == rowSet(inferred()),
+      "the held-open read differs from an inference read")
+
+    // each mutation is visible to the very next read, which is a miss
+    var expect = labels(inferred())
+    def visible(verb: String)(change: Map[Long, Int] => Map[Long, Int])(
+        mutate: => Any): Unit = {
+      read() // hold the pre-mutation state open
+      mutate
+      expect = change(expect)
+      val misses0 = graft.Memo.misses.get
+      assert(labels(read()) == expect,
+        s"$verb: the next read served a stale collection")
+      assert(graft.Memo.misses.get == misses0 + 1,
+        s"$verb: the next read did not resolve the new manifest")
+    }
+    def relabel(ids: Set[Long], to: Int)(m: Map[Long, Int]) =
+      m.map { case (id, l) => id -> (if (ids(id)) to else l) }
+    visible("upsert")(relabel(Set(1L, 2L), 100)) {
+      sink.write(emb.filter(col("vec_id").isin(1, 2))
+        .withColumn("label", lit(100)).withColumn("seq", lit(1)))
+    }
+    visible("empty upsertBatch (fence bump)")(identity) {
+      assert(Collections.upsertBatch(spark, dir, emb.limit(0), "vec_id",
+        "seq", batchId = 0))
+    }
+    visible("deleteWhere")(_ -- (10L to 14L)) {
+      Collections.deleteWhere(spark, dir,
+        col("vec_id").between(10, 14), "vec_id")
+    }
+    visible("setPayloadWhere")(relabel(Set(20L), 7777)) {
+      Collections.setPayloadWhere(spark, dir, col("vec_id") === 20,
+        "vec_id", Map("label" -> lit(7777)))
+    }
+    visible("updateBatch")(m => relabel(Set(22L), 8888)(m - 21L)) {
+      Collections.updateBatch(spark, dir, Seq(
+        PointOp.Delete(col("vec_id") === 21),
+        PointOp.SetPayload(col("vec_id") === 22, Map("label" -> lit(8888)))),
+        "vec_id", "seq", Seq("embedding"))
+    }
+    visible("compact")(identity)(Collections.compact(spark, dir, "vec_id"))
+    Collections.snapshot(dir, s"$root/snap")
+    val atSnapshot = expect
+    visible("upsert after snapshot")(relabel(Set(30L), 300)) {
+      sink.write(emb.filter(col("vec_id") === 30)
+        .withColumn("label", lit(300)).withColumn("seq", lit(2)))
+    }
+    visible("restore")(_ => atSnapshot) {
+      Collections.restore(s"$root/snap", dir)
+    }
+    val manifest = Paths.get(s"$dir/_manifest.json")
+    val saved = Files.readAllBytes(manifest)
+    val atSaved = expect
+    visible("upsert before a rollback")(relabel(Set(40L), 400)) {
+      sink.write(emb.filter(col("vec_id") === 40)
+        .withColumn("label", lit(400)).withColumn("seq", lit(3)))
+    }
+    visible("manifest rolled back by hand")(_ => atSaved) {
+      Files.write(manifest, saved)
+    }
+    // no commit in this JVM evicted the superseded entry: the miss did
+    val heldAfterRollback = graft.Memo.inputsOf("collectionRead")
+      .count(_ == Seq(dir))
+    assert(heldAfterRollback == 1,
+      s"$heldAfterRollback collectionRead entries after a hand-written manifest")
+
+    // delete, then create and upsert at the same path: the manifest
+    // text is byte-identical, so only the dir's listing tells them apart
+    val d2 = s"$root/c2"
+    sinkOf(d2).write(emb)
+    val before2 = labels(read(d2))
+    val bytes2 = Files.readAllBytes(Paths.get(s"$d2/_manifest.json"))
+    Collections.delete(d2)
+    sinkOf(d2).write(emb.withColumn("label", col("label") + 500))
+    assert(java.util.Arrays.equals(bytes2,
+      Files.readAllBytes(Paths.get(s"$d2/_manifest.json"))),
+      "weak case: the recreated manifest differs from the first")
+    assert(labels(read(d2)) == before2.map { case (id, l) => id -> (l + 500) },
+      "delete + create + upsert: the next read served the old collection")
+
+    // superseded manifests' relations do not pile up
+    (1 to 10).foreach { i =>
+      sink.write(emb.filter(col("vec_id") === 50 + i)
+        .withColumn("seq", lit(10 + i)))
+      read()
+    }
+    val entries = graft.Memo.inputsOf("collectionRead")
+    Seq(dir, d2).foreach { d =>
+      assert(entries.count(_ == Seq(d)) <= 1,
+        s"${entries.count(_ == Seq(d))} collectionRead entries for $d")
+    }
+  }
+
+  test("a restored snapshot of an emptied collection polls the change " +
+       "feed with the live schema") {
+    val root = SparkSpec.tempDir("graft-snapempty").toString
+    val dir = s"$root/coll"
+    new Collections.ParquetCollectionSink(spark, dir, VectorConfig(64),
+      "embedding", "vec_id", "seq")
+      .write(Tables.load(spark, sf, "embeddings").limit(20)
+        .withColumn("seq", lit(0)))
+    val live = Collections.read(spark, dir).columns.toSeq
+    assert(Collections.deleteWhere(spark, dir, lit(true), "vec_id") == 20)
+    Collections.snapshot(dir, s"$root/snap")
+    Collections.restore(s"$root/snap", s"$root/restored")
+    val (cur, df, _) = Collections.changedSince(spark, s"$root/restored",
+      Collections.ManifestView(0, Map.empty))
+    assert(cur.buckets.isEmpty)
+    assert(df.columns.toSeq == live,
+      s"restored empty collection polls as ${df.columns.toSeq}, not $live")
+    assert(df.count() == 0)
+  }
+
+  test("a manifest written before the schema field: the read infers its " +
+       "schema once and is held open; an emptied collection polls with " +
+       "the schema file's schema") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    import java.nio.file.Paths
+    import org.json4s.jackson.JsonMethods
+    val root = SparkSpec.tempDir("graft-noschema").toString
+    val dir = s"$root/coll"
+    new Collections.ParquetCollectionSink(spark, dir, VectorConfig(64),
+      "embedding", "vec_id", "seq")
+      .write(Tables.load(spark, sf, "embeddings").limit(40)
+        .withColumn("seq", lit(0)))
+    val live = Collections.read(spark, dir)
+    val liveRows = rowSet(live)
+    val (manifest, schemaFile) =
+      (Paths.get(s"$dir/_manifest.json"), Paths.get(s"$dir/_schema.json"))
+    // rewrite the committed manifest as an older publish left it: the
+    // schema in `_schema.json`, none in the manifest
+    def asOlderPublish(): Unit = {
+      val j = JsonMethods.parse(new String(Files.readAllBytes(manifest), UTF_8))
+      Files.write(schemaFile,
+        JsonMethods.compact(j \ "schema").getBytes(UTF_8))
+      Files.write(manifest, JsonMethods.compact(
+        j.removeField(_._1 == "schema")).getBytes(UTF_8))
+    }
+    asOlderPublish()
+    assert(!new String(Files.readAllBytes(manifest), UTF_8).contains("schema"))
+    val inferred = Collections.read(spark, dir)
+    assert(inferred.schema == live.schema && rowSet(inferred) == liveRows,
+      "the read of a schema-less manifest differs from the live read")
+    assert(jobsIn(assert(Collections.read(spark, dir) eq inferred)) == 0,
+      "the read of an unchanged schema-less manifest was not held open")
+
+    val before = Collections.manifestView(dir)
+    assert(Collections.deleteWhere(spark, dir, lit(true), "vec_id") == 40)
+    assert(!Files.exists(schemaFile),
+      "a commit with the schema in the manifest kept the schema file")
+    asOlderPublish()
+    val (cur, df, dropped) = Collections.changedSince(spark, dir, before)
+    assert(cur.buckets.isEmpty && dropped == before.buckets.keySet)
+    assert(df.columns.toSeq == live.columns.toSeq,
+      s"an emptied schema-less manifest polls as ${df.columns.toSeq}")
+    assert(df.count() == 0)
+  }
+
+  test("routed read job budget: Collections.read + VectorRouter." +
+       "queryPoints + collect on a quant collection under the size gate " +
+       "runs 1 job for knn and 1 for a filtered read") {
+    import graft.sources.{PayloadIndex, QuantIndex, VectorRouter}
+    val root = SparkSpec.tempDir("graft-budget").toString
+    val dir = s"$root/coll"
+    new Collections.ParquetCollectionSink(spark, dir, VectorConfig(64),
+      "embedding", "vec_id", "seq")
+      .write(Tables.load(spark, sf, "embeddings").withColumn("seq", lit(0)))
+    val (quant, payload) = (s"$root/quant", s"$root/payload")
+    QuantIndex.buildFromCollection(spark, dir, quant, "vec_id",
+      "embedding", 64)
+    PayloadIndex.buildFromCollection(spark, dir, payload, "label", "vec_id")
+    assert(!QuantIndex.scopedBoundPays(spark, quant),
+      "the sidecar is over the default gate — weak fixture")
+    val q = VectorQueries.queryVec(spark, sf, 0)
+    val dsl = """{"must": [{"key": "label", "match": {"value": 3}}]}"""
+    def call(filter: Option[String]) =
+      VectorRouter.queryPoints(spark, Collections.read(spark, dir),
+        "vec_id", "embedding", Seq(quant), Seq("label" -> payload), q, 10,
+        filter).collect()
+    Seq("knn" -> None, "filtered" -> Some(dsl)).foreach { case (cls, f) =>
+      val warm = call(f) // primes the footer-count memos
+      assert(warm.length == 10)
+      val jobs = jobsIn(call(f))
+      assert(jobs == 1, s"$cls: a routed read ran $jobs jobs")
+    }
+  }
+
+  test("commit-side reads take the manifest schema: an upsert and each " +
+       "layout refresh run no schema-inference job") {
+    import graft.sources.{PayloadIndex, QuantIndex}
+    val root = SparkSpec.tempDir("graft-commitjobs").toString
+    val dir = s"$root/coll"
+    val emb = Tables.load(spark, sf, "embeddings").limit(200)
+      .withColumn("seq", lit(0))
+    new Collections.ParquetCollectionSink(spark, dir, VectorConfig(64),
+      "embedding", "vec_id", "seq").write(emb)
+    val (quant, payload) = (s"$root/quant", s"$root/payload")
+    val q0 = QuantIndex.buildFromCollection(spark, dir, quant, "vec_id",
+      "embedding", 64)
+    val p0 = PayloadIndex.buildFromCollection(spark, dir, payload, "label",
+      "vec_id")
+    val batch = emb.filter(col("vec_id") < 20)
+      .withColumn("label", col("label") + 1).withColumn("seq", lit(1))
+    val upsert = jobsIn(Collections.upsert(spark, dir, batch, "vec_id", "seq"))
+    val quantRefresh = jobsIn(QuantIndex.refresh(spark, dir, quant, q0))
+    val payloadRefresh = jobsIn(
+      PayloadIndex.refresh(spark, dir, payload, "vec_id", p0))
+    // the touched buckets' read and each refresh's change-feed read take
+    // the manifest's schema: an inference read adds one job to each
+    // (6, 2 and 2)
+    assert((upsert, quantRefresh, payloadRefresh) == ((5, 1, 1)),
+      s"jobs: upsert $upsert, quant refresh $quantRefresh, " +
+        s"payload refresh $payloadRefresh")
+  }
 }
