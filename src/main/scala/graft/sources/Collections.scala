@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.json4s._
@@ -50,8 +50,7 @@ import graft.functions.VectorOps
   * and runs no schema-inference job — so:
   *
   *  - a multi-bucket write is ATOMIC: until the manifest swap, readers see
-  *    the wholly-old collection; after it, wholly-new — never a mix (the
-  *    pre-manifest per-bucket rename protocol could crash half-swapped);
+  *    the wholly-old collection; after it, wholly-new — never a mix;
   *  - the scheme is OBJECT-STORE-SAFE: data paths are write-once (no
   *    renames of live data), and the commit is one small-file swap —
   *    `Files.move(ATOMIC_MOVE)` on POSIX, a single conditional PUT on an
@@ -60,14 +59,20 @@ import graft.functions.VectorOps
   *    directory not referenced by the manifest is either a crashed write
   *    or a superseded generation — the next write deletes it. Superseded
   *    generations therefore survive exactly one write, a grace period for
-  *    readers whose lazy plans bound to the previous manifest.
+  *    readers whose lazy plans bound to the previous manifest. The
+  *    collector deletes only unreferenced `gNNNNN` directories: any other
+  *    entry under `data/` (files written by hand, a layout this engine
+  *    does not write) makes the write throw, naming it, before anything
+  *    is deleted. A bucket the manifest references but that is missing
+  *    from disk fails the write too, so a write never publishes a bucket
+  *    without its old rows.
   *
-  * Pre-manifest layouts (flat loose files under `data/`, and the
-  * rename-protocol `data/bucket=k` directories with `.old` backups)
-  * remain readable and are migrated by the first manifested write: loose
-  * rows fold into the new generation, untouched legacy bucket directories
-  * are referenced by the manifest in place, and `.old` backups are
-  * restored before the write if a legacy swap had crashed.
+  * The manifest is the ONLY state: no manifest means generation 0 with no
+  * buckets and no schema. A collection whose manifest has a schema but no
+  * buckets (every row deleted) reads as an empty frame with that schema;
+  * one never written (no manifest, or only a streaming fence bump, which
+  * commits neither buckets nor a schema) has no rows to read, and [[read]]
+  * throws.
   *
   * Scale notes: a collection is a standard partitionable parquet dataset
   * (split-friendly, predicate-pushdown-friendly); keep-last compaction is
@@ -82,9 +87,6 @@ object Collections {
   private def metaPath(dir: String) = Paths.get(dir, "_collection.json")
   private def manifestPath(dir: String) = Paths.get(dir, "_manifest.json")
   private def manifestTmp(dir: String) = Paths.get(dir, "_manifest.json.tmp")
-  // written by publishes before the manifest carried the schema
-  private def schemaPath(dir: String) = Paths.get(dir, "_schema.json")
-  private def migratedMarker(dir: String) = Paths.get(s"$dir/data/_migrated")
 
   def exists(dir: String): Boolean = Files.exists(metaPath(dir))
 
@@ -104,22 +106,25 @@ object Collections {
           .getBytes(StandardCharsets.UTF_8))
     }
 
-  def config(dir: String): VectorConfig = {
-    val txt = new String(Files.readAllBytes(metaPath(dir)),
-      StandardCharsets.UTF_8)
-    val dim = """"dim":\s*(\d+)""".r.findFirstMatchIn(txt).get.group(1).toInt
-    val metric = """"metric":\s*"([^"]+)"""".r
-      .findFirstMatchIn(txt).get.group(1)
-    VectorConfig(dim, metric)
+  /** One parse of `_collection.json`: the vector config and the pinned
+    * bucket count, each field required ([[create]] writes all three). */
+  private def meta(dir: String): (VectorConfig, Int) = {
+    val j = JsonMethods.parse(new String(Files.readAllBytes(metaPath(dir)),
+      StandardCharsets.UTF_8))
+    (j \ "dim", j \ "metric", j \ "buckets") match {
+      case (JInt(dim), JString(metric), JInt(buckets)) =>
+        (VectorConfig(dim.toInt, metric), buckets.toInt)
+      case _ => throw new IllegalStateException(
+        s"${metaPath(dir)} lacks one of dim, metric, buckets")
+    }
   }
 
-  /** The collection's pinned bucket count (default for pre-bucket metas). */
+  def config(dir: String): VectorConfig = meta(dir)._1
+
+  /** The collection's pinned bucket count ([[DefaultBuckets]] before
+    * [[create]]). */
   def numBuckets(dir: String): Int =
-    if (!exists(dir)) DefaultBuckets
-    else """"buckets":\s*(\d+)""".r
-      .findFirstMatchIn(new String(Files.readAllBytes(metaPath(dir)),
-        StandardCharsets.UTF_8))
-      .map(_.group(1).toInt).getOrElse(DefaultBuckets)
+    if (!exists(dir)) DefaultBuckets else meta(dir)._2
 
   /** THE validity predicate — one definition shared by [[validate]] and
     * the rejection counting in `writeBatchCounted`, so the two can never
@@ -162,31 +167,15 @@ object Collections {
       finally s.close()
     }
 
-  /** Data files sitting DIRECTLY under `data/` — the pre-manifest flat
-    * layout. Folded into the first manifested write (migration) and
-    * unioned by the legacy read path, so old collections neither lose
-    * rows nor need an offline rewrite. */
-  private def looseFiles(p: java.nio.file.Path): Seq[String] =
-    if (!Files.isDirectory(p)) Seq.empty
-    else {
-      val s = Files.list(p)
-      try s.iterator().asScala
-        .filter(f => Files.isRegularFile(f) && {
-          val n = f.getFileName.toString
-          !n.startsWith("_") && !n.startsWith(".")
-        })
-        .map(_.toString).toSeq.sorted
-      finally s.close()
-    }
-
   // ---------------------------------------------------------------------
   // Manifest
   // ---------------------------------------------------------------------
 
   /** A committed manifest: generation, bucket → path relative to `data/`,
     * the streaming batch fence (-1: none) and the schema of the rows its
-    * paths hold (None in a manifest written before the schema field).
-    * One parse of one file, so a schema always matches its paths. */
+    * paths hold (None until the first publish of rows; never None while
+    * a bucket is mapped). One parse of one file, so a schema always
+    * matches its paths. */
   private final case class Manifest(gen: Int, buckets: Map[Int, String],
                                     batch: Long = -1L,
                                     schema: Option[StructType] = None)
@@ -196,11 +185,11 @@ object Collections {
     else Some(new String(Files.readAllBytes(manifestPath(dir)),
       StandardCharsets.UTF_8))
 
-  private def parseManifest(txt: String): Manifest = {
+  private def parseManifest(dir: String, txt: String): Manifest = {
     val j = JsonMethods.parse(txt)
     val JInt(gen) = j \ "gen"
     val JObject(buckets) = j \ "buckets"
-    Manifest(gen.toInt,
+    val m = Manifest(gen.toInt,
       buckets.collect { case (k, JString(rel)) => k.toInt -> rel }.toMap,
       j \ "batch" match { case JInt(b) => b.toLong; case _ => -1L },
       j \ "schema" match {
@@ -208,10 +197,16 @@ object Collections {
         case s => Some(DataType.fromJson(JsonMethods.compact(s))
           .asInstanceOf[StructType])
       })
+    if (m.buckets.nonEmpty && m.schema.isEmpty)
+      throw new IllegalStateException(
+        s"${manifestPath(dir)} maps buckets but carries no schema: it was " +
+          "written by older code. Rebuild the collection, or re-commit " +
+          "it with a writer that records the schema")
+    m
   }
 
   private def readManifest(dir: String): Option[Manifest] =
-    manifestText(dir).map(parseManifest)
+    manifestText(dir).map(parseManifest(dir, _))
 
   /** The last STREAMING batch id the manifest committed, or -1: the
     * exactly-once fence for foreachBatch replays (Structured Streaming
@@ -242,25 +237,21 @@ object Collections {
     catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
       Files.move(tmp, manifestPath(dir), StandardCopyOption.REPLACE_EXISTING)
     }
-    if (m.schema.isDefined) Files.deleteIfExists(schemaPath(dir))
     graft.Memo.evict(dir)
   }
 
-  /** Current state: the manifest, else the legacy bucket directories as a
-    * gen-0 view (their manifest entries keep the legacy relative path —
-    * migration references them in place, no data moves). */
+  /** Current state: the manifest; none is generation 0, no buckets. */
   private def currentState(dir: String): Manifest =
-    readManifest(dir).getOrElse {
-      Manifest(0, listBuckets(Paths.get(s"$dir/data")).map { case (name, _) =>
-        name.stripPrefix(s"$BucketCol=").toInt -> name
-      })
-    }
+    readManifest(dir).getOrElse(Manifest(0, Map.empty))
 
-  /** Parquet rows at `paths`: with the manifest's schema when it has one
-    * (no inference job), else inferred from a footer. */
-  private def readPaths(spark: SparkSession, schema: Option[StructType],
-                        paths: Seq[String]): DataFrame =
-    schema.fold(spark.read)(spark.read.schema).parquet(paths: _*)
+  /** The rows of `m`'s bucket paths `rels`, read with `m`'s schema (no
+    * inference job); no paths is an empty frame with that schema. `m`
+    * must carry a schema, as every manifest that maps a bucket does. A
+    * path missing from disk fails the read. */
+  private def rowsOf(spark: SparkSession, dir: String, m: Manifest,
+                     rels: Seq[String]): DataFrame =
+    spark.read.schema(m.schema.get)
+      .parquet(rels.map(rel => s"$dir/data/$rel"): _*)
 
   /** Write `rows` (carrying [[BucketCol]]) as generation `gen`+1 and
     * publish the manifest remapping `touched` buckets to it, with the
@@ -291,62 +282,39 @@ object Collections {
       effBatch, Some(rows.drop(BucketCol).schema)))
   }
 
-  /** WRITER-side recovery = garbage collection (manifest layout) or
-    * legacy repair (pre-manifest layout). Only the single writer may call
-    * this — destructive cleanup from the read path would race an
-    * in-flight write. */
-  private def recoverForWrite(dir: String): Unit = readManifest(dir) match {
-    case Some(Manifest(_, m, _, _)) =>
-      Files.deleteIfExists(manifestTmp(dir))
-      // pre-manifest protocol leftovers are dead once a manifest exists
-      Seq(s"$dir/.old", s"$dir/.staging").map(Paths.get(_))
-        .filter(Files.exists(_)).foreach(deleteRecursively)
-      Files.deleteIfExists(migratedMarker(dir))
-      val dataDir = Paths.get(s"$dir/data")
-      if (Files.isDirectory(dataDir)) {
-        // live top-level entries: generation dirs / legacy bucket dirs the
-        // manifest references. Anything else under data/ is a crashed or
-        // superseded write — its grace period (one write) ends now.
-        val liveTop = m.values.map(_.split('/').head).toSet
-        val liveRel = m.values.toSet
-        val s = Files.list(dataDir)
-        try s.iterator().asScala.toList.foreach { child =>
-          val n = child.getFileName.toString
-          if (!liveTop.contains(n)) {
-            if (Files.isDirectory(child)) deleteRecursively(child)
-            else Files.delete(child)
-          } else if (n.startsWith("g")) {
-            // inside a live generation, drop bucket dirs later writes
-            // have superseded (entry-level GC)
-            listBuckets(child).foreach { case (bn, bp) =>
-              if (!liveRel.contains(s"$n/$bn")) deleteRecursively(bp)
-            }
-          }
-        } finally s.close()
-      }
-    case None =>
-      // legacy rename-protocol repair: restore any bucket whose swap died
-      // between its two moves, drop completed backups, clear staging, and
-      // retire loose files a completed migration marked
-      val dataDir = Paths.get(s"$dir/data")
-      if (Files.exists(migratedMarker(dir))) {
-        looseFiles(dataDir).foreach { f =>
-          val p = Paths.get(f)
-          Files.deleteIfExists(p)
-          Files.deleteIfExists(
-            p.getParent.resolve("." + p.getFileName.toString + ".crc"))
+  private val GenerationDir = """g\d+""".r
+
+  /** WRITER-side recovery = garbage collection; returns the current
+    * state. Only the single writer may call this — destructive cleanup
+    * from the read path would race an in-flight write. Deletes the
+    * generation dirs the manifest does not reference (a crashed or
+    * superseded write: its one-write grace ends now) and the superseded
+    * bucket dirs inside live generations. Any other entry under `data/`
+    * was not written by this engine: the write throws, naming it, and
+    * nothing is deleted. */
+  private def recoverForWrite(dir: String): Manifest = {
+    val state = currentState(dir)
+    Files.deleteIfExists(manifestTmp(dir))
+    val dataDir = Paths.get(s"$dir/data")
+    if (Files.isDirectory(dataDir)) {
+      val s = Files.list(dataDir)
+      val children = try s.iterator().asScala.toList finally s.close()
+      children.find(c => !Files.isDirectory(c) ||
+          !GenerationDir.matches(c.getFileName.toString))
+        .foreach(c => throw new IllegalStateException(
+          s"$c is not a generation directory of collection $dir: refusing " +
+            "to write (nothing was deleted)"))
+      val liveRel = state.buckets.values.toSet
+      val liveTop = liveRel.map(_.split('/').head)
+      children.foreach { child =>
+        val n = child.getFileName.toString
+        if (!liveTop.contains(n)) deleteRecursively(child)
+        else listBuckets(child).foreach { case (bn, bp) =>
+          if (!liveRel.contains(s"$n/$bn")) deleteRecursively(bp)
         }
-        Files.deleteIfExists(migratedMarker(dir))
       }
-      val old = Paths.get(s"$dir/.old")
-      listBuckets(old).foreach { case (name, backup) =>
-        val target = dataDir.resolve(name)
-        if (!Files.exists(target)) Files.move(backup, target)
-        else deleteRecursively(backup) // post-swap leftover
-      }
-      if (Files.exists(old)) deleteRecursively(old)
-      val staging = Paths.get(s"$dir/.staging")
-      if (Files.exists(staging)) deleteRecursively(staging)
+    }
+    state
   }
 
   /** O14: append a batch, then compact to keep-last per id (Qdrant upsert
@@ -380,23 +348,10 @@ object Collections {
   private def upsertImpl(spark: SparkSession, dir: String, batch: DataFrame,
                          idCol: String, seqCol: String,
                          batchId: Long): Boolean = {
-    recoverForWrite(dir)
+    val state = recoverForWrite(dir)
     val buckets = numBuckets(dir)
-    val dataDir = Paths.get(s"$dir/data")
-    val state = currentState(dir)
     val bucketed = batch.withColumn(BucketCol, bucketOf(idCol, buckets))
-    // pre-manifest loose files migrate on this write: their rows join the
-    // merge, spanning whatever buckets they hash to; the manifest then
-    // supersedes them and the NEXT write's GC removes the files (the same
-    // one-write grace superseded generations get)
-    val loose = if (readManifest(dir).isDefined) Seq.empty
-                else looseFiles(dataDir)
-    val withLegacy =
-      if (loose.isEmpty) bucketed
-      else spark.read.parquet(loose: _*)
-        .withColumn(BucketCol, bucketOf(idCol, buckets))
-        .unionByName(bucketed)
-    val touched = withLegacy.select(BucketCol).distinct()
+    val touched = bucketed.select(BucketCol).distinct()
       .collect().map(_.getInt(0)).toSet
     if (touched.isEmpty) {
       // an EMPTY batch still advances the fence (its delivery must not
@@ -408,14 +363,12 @@ object Collections {
     }
     // files do not store the bucket column (it is the directory name);
     // recompute it on read — same hash, same pinned bucket count
-    val existingDirs = touched.toSeq.sorted.flatMap(state.buckets.get)
-      .map(rel => dataDir.resolve(rel))
-      .filter(Files.exists(_)).map(_.toString)
+    val existing = touched.toSeq.sorted.flatMap(state.buckets.get)
     val merged =
-      if (existingDirs.isEmpty) withLegacy
-      else readPaths(spark, state.schema, existingDirs)
+      if (existing.isEmpty) bucketed
+      else rowsOf(spark, dir, state, existing)
         .withColumn(BucketCol, bucketOf(idCol, buckets))
-        .unionByName(withLegacy)
+        .unionByName(bucketed)
     val compacted = graft.operators.Ingest.upsert(merged, idCol, seqCol)
     publishGeneration(dir, state, touched, compacted, batchId)
     true
@@ -431,16 +384,10 @@ object Collections {
     * generations get the usual one-write GC grace, so a concurrent
     * reader finishes against the old view. */
   def compact(spark: SparkSession, dir: String, idCol: String): Unit = {
-    recoverForWrite(dir)
+    val state = recoverForWrite(dir)
+    if (state.buckets.isEmpty) return
     val buckets = numBuckets(dir)
-    val state = currentState(dir)
-    // pre-manifest collections may hold ONLY loose flat files (no
-    // bucket= dirs → empty view) — the small-file case compact exists
-    // for; read() includes them, and publishing migrates to the manifest
-    val loose = if (readManifest(dir).isDefined) Seq.empty
-                else looseFiles(Paths.get(s"$dir/data"))
-    if (state.buckets.isEmpty && loose.isEmpty) return
-    val rows = read(spark, dir)
+    val rows = rowsOf(spark, dir, state, state.buckets.values.toSeq.sorted)
       .withColumn(BucketCol, bucketOf(idCol, buckets))
       // co-locate each bucket before the partitioned write: without this
       // every input split writes its own file per bucket it happens to
@@ -458,46 +405,19 @@ object Collections {
   private def rewriteWhere(spark: SparkSession, dir: String, filter: Column,
                            idCol: String)
                           (xform: (DataFrame, Column) => DataFrame): Long = {
-    recoverForWrite(dir)
+    val state = recoverForWrite(dir)
+    if (state.buckets.isEmpty) return 0L
     val buckets = numBuckets(dir)
-    val dataDir = Paths.get(s"$dir/data")
-    val state = currentState(dir)
-    val view = state.buckets
     val matchCond = coalesce(filter, lit(false))
-    def withBucket(df: DataFrame) =
-      df.withColumn(BucketCol, bucketOf(idCol, buckets))
-    val loose = if (readManifest(dir).isDefined) Seq.empty
-                else looseFiles(dataDir)
-    val looseDf = if (loose.isEmpty) None
-                  else Some(withBucket(spark.read.parquet(loose: _*)))
-    val viewPaths = view.values.map(rel => dataDir.resolve(rel))
-      .filter(Files.exists(_)).map(_.toString).toSeq.sorted
-    val stored = (looseDf, viewPaths) match {
-      case (None, Seq()) => return 0L
-      case (Some(l), Seq()) => l
-      case (l, ps) =>
-        val v = withBucket(readPaths(spark, state.schema, ps))
-        l.map(v.unionByName(_)).getOrElse(v)
-    }
+    def stored(rels: Seq[String]) = rowsOf(spark, dir, state, rels)
+      .withColumn(BucketCol, bucketOf(idCol, buckets))
     // one job: per-bucket match counts → touched set + matched total
-    val perBucket = stored.filter(matchCond)
-      .groupBy(BucketCol).count().collect()
+    val perBucket = stored(state.buckets.values.toSeq.sorted)
+      .filter(matchCond).groupBy(BucketCol).count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    // loose rows must fold into buckets even where nothing matched (their
-    // file can't be partially kept) — migration piggybacks on the rewrite
-    val looseBuckets = looseDf.map(_.select(BucketCol).distinct()
-      .collect().map(_.getInt(0)).toSet).getOrElse(Set.empty)
-    val touched = perBucket.keySet ++ looseBuckets
+    val touched = perBucket.keySet
     if (touched.isEmpty) return 0L
-    val touchedDirs = touched.toSeq.sorted.flatMap(view.get)
-      .map(rel => dataDir.resolve(rel))
-      .filter(Files.exists(_)).map(_.toString)
-    val touchedData = (looseDf, touchedDirs) match {
-      case (Some(l), Seq()) => l
-      case (l, ps) =>
-        val v = withBucket(readPaths(spark, state.schema, ps))
-        l.map(v.unionByName(_)).getOrElse(v)
-    }
+    val touchedData = stored(touched.toSeq.sorted.map(state.buckets))
     publishGeneration(dir, state, touched, xform(touchedData, matchCond))
     perBucket.values.sum
   }
@@ -663,13 +583,8 @@ object Collections {
                   idCol: String, seqCol: String,
                   vecCols: Seq[String]): Unit = {
     import PointOp._
-    recoverForWrite(dir)
-    require(readManifest(dir).isDefined ||
-        looseFiles(Paths.get(s"$dir/data")).isEmpty,
-      s"updateBatch needs a migrated collection (unbucketed loose files " +
-        s"present) — run one upsert first: $dir")
+    val state = recoverForWrite(dir)
     val buckets = numBuckets(dir)
-    val state = currentState(dir)
     val keep = (Seq(idCol, seqCol, BucketCol) ++ vecCols).toSet
     val dim = config(dir).dim
     def withBucket(df: DataFrame) =
@@ -743,50 +658,40 @@ object Collections {
   /** Readers resolve through the manifest: the path set is immutable for
     * the life of that manifest generation (superseded generations outlive
     * their de-referencing write by one more write — the grace window for
-    * plans bound to the previous manifest). Pre-manifest collections fall
-    * back to the legacy union (bucket dirs ∪ crash-backup `.old` buckets
-    * ∪ unmigrated loose files), read fresh: their mutations happen below
-    * the top-level listing.
+    * plans bound to the previous manifest), and the rows are read with
+    * the manifest's schema. A manifest whose every bucket was deleted
+    * reads as an empty frame with that schema. A collection never written
+    * (no manifest, or one that commits neither buckets nor a schema: a
+    * first streaming batch that was empty) throws IllegalStateException.
     *
     * HELD OPEN: a committed manifest resolves to one relation per
     * (session, manifest text, [[graft.Memo.fingerprint]] of `dir`),
     * memoized through [[graft.Memo]]: the manifest's files are
     * immutable, so its frozen listing stays exact, and the next read of
-    * an unchanged collection lists nothing and runs no job (a manifest
-    * written before the schema field infers its schema once, on the
-    * miss). The fingerprint changes on every manifest swap (a new
-    * inode), on delete-and-recreate, on [[restore]] and on a manifest
-    * rewritten in place. Every miss evicts the dir's superseded entries,
-    * whoever wrote the manifest, so at most one is held per collection;
+    * an unchanged collection lists nothing and runs no job. The
+    * fingerprint changes on every manifest swap (a new inode), on
+    * delete-and-recreate, on [[restore]] and on a manifest rewritten in
+    * place. Every miss evicts the dir's superseded entries, whoever wrote
+    * the manifest, so at most one is held per collection;
     * [[writeManifest]] evicts them at once. */
-  def read(spark: SparkSession, dir: String): DataFrame =
-    manifestText(dir) match {
-      case Some(txt) =>
-        val m = parseManifest(txt)
-        val paths = m.buckets.values.map(rel => s"$dir/data/$rel").toSeq.sorted
-        if (paths.isEmpty) spark.read.parquet(s"$dir/data") // legacy error
-        else graft.Memo("collectionRead", (spark, txt), dir) {
-          graft.Memo.evict(dir)
-          readPaths(spark, m.schema, paths)
-        }
-      case None =>
-        val dataDir = Paths.get(s"$dir/data")
-        val dataB = listBuckets(dataDir)
-        val oldB = listBuckets(Paths.get(s"$dir/.old"))
-        val loose =
-          if (Files.exists(migratedMarker(dir))) Seq.empty
-          else looseFiles(dataDir)
-        val use = (oldB ++ dataB).values.map(_.toString).toSeq.sorted ++ loose
-        if (use.isEmpty) spark.read.parquet(s"$dir/data")
-        else spark.read.parquet(use: _*)
+  def read(spark: SparkSession, dir: String): DataFrame = {
+    val txt = manifestText(dir)
+    val m = txt.map(parseManifest(dir, _)).filter(_.schema.isDefined)
+      .getOrElse(throw new IllegalStateException(
+        s"collection $dir was never written: no committed rows to read"))
+    graft.Memo("collectionRead", (spark, txt.get), dir) {
+      graft.Memo.evict(dir)
+      rowsOf(spark, dir, m, m.buckets.values.toSeq.sorted)
     }
+  }
 
   /** An immutable published view of a collection: the manifest generation
     * plus its bucket→directory map. Incremental consumers hold one of
     * these as their cursor. */
   final case class ManifestView(gen: Int, buckets: Map[Int, String])
 
-  /** The currently-published view (legacy layouts surface as gen 0). */
+  /** The currently-published view (gen 0 and no buckets before the first
+    * commit). */
   def manifestView(dir: String): ManifestView = {
     val m = currentState(dir)
     ManifestView(m.gen, m.buckets)
@@ -816,24 +721,14 @@ object Collections {
       : (ManifestView, DataFrame, Set[Int]) = {
     val state = currentState(dir)
     val cur = ManifestView(state.gen, state.buckets)
-    val changed = changedBuckets(prev, cur).toSeq.sorted
-      .flatMap(b => cur.buckets.get(b).map(rel => s"$dir/data/$rel"))
+    val changed = changedBuckets(prev, cur).toSeq.sorted.map(cur.buckets)
     val dropped = prev.buckets.keySet -- cur.buckets.keySet
+    // the manifest's schema even with nothing changed or every bucket
+    // dropped, so consumers can union successive polls; a never-written
+    // collection has no schema and polls as a schema-less empty frame
     val df =
-      if (changed.nonEmpty) readPaths(spark, state.schema, changed)
-      else if (cur.buckets.nonEmpty)
-        read(spark, dir).limit(0) // empty frame with the live schema
-      else
-        // fully emptied: no live files to take a schema from — use the
-        // schema of the last publish, so the feed's schema is stable
-        // across ALL states (consumers union successive polls). A
-        // manifest written before the schema field has it in the schema
-        // file its publish wrote; a never-published collection has none
-        state.schema.orElse(Some(schemaPath(dir)).filter(Files.exists(_))
-            .map(p => DataType.fromJson(new String(Files.readAllBytes(p),
-              StandardCharsets.UTF_8)).asInstanceOf[StructType]))
-          .fold(spark.emptyDataFrame)(s =>
-            spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s))
+      if (state.schema.isEmpty) spark.emptyDataFrame
+      else rowsOf(spark, dir, state, changed)
     (cur, df, dropped)
   }
 
@@ -993,14 +888,9 @@ object Collections {
     * copy (they can only be GC'd one write later — so snapshot while no
     * more than one write races, the single-writer contract). At scale
     * this is a metadata operation plus parallel byte copies — no
-    * recompute, no shuffle. Pre-manifest collections are migrated views:
-    * snapshot reads through [[read]] and rewrites (slower, documented). */
+    * recompute, no shuffle. */
   def snapshot(dir: String, snapDir: String): Unit = {
     val state = currentState(dir)
-    require(readManifest(dir).isDefined ||
-        looseFiles(Paths.get(s"$dir/data")).isEmpty,
-      s"snapshot needs a migrated collection (unbucketed loose files " +
-        s"present) — run one upsert first: $dir")
     Files.createDirectories(Paths.get(snapDir))
     Files.copy(metaPath(dir), Paths.get(snapDir, "_collection.json"),
       StandardCopyOption.REPLACE_EXISTING)

@@ -57,34 +57,6 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("legacy crash recovery: interrupted pre-manifest swap restores " +
-       "from the .old backup, then migrates to the manifest") {
-    val dir = SparkSpec.tempDir("graft-coll").toString + "/c3"
-    Collections.create(dir, VectorConfig(64))
-    // build the pre-manifest bucketed layout by hand (data/bucket=k, no
-    // manifest), then simulate a crash between the two moves of every
-    // bucket's swap: data/bucket=k gone, .old/bucket=k holds the backup
-    val emb20 = Tables.load(spark, sf, "embeddings").limit(20)
-      .withColumn("seq", lit(0))
-    emb20.withColumn("bucket",
-        pmod(hash(col("vec_id")), lit(Collections.numBuckets(dir))))
-      .write.partitionBy("bucket").parquet(s"$dir/data")
-    val old = java.nio.file.Paths.get(s"$dir/.old")
-    java.nio.file.Files.createDirectories(old)
-    new java.io.File(s"$dir/data").listFiles().filter(_.isDirectory)
-      .foreach(b => java.nio.file.Files.move(b.toPath,
-        old.resolve(b.getName)))
-    assert(Collections.read(spark, dir).count() == 20) // read recovers
-    // the next write's recovery restores the backups, then the write
-    // itself commits through the manifest (migration)
-    val sink = new Collections.ParquetCollectionSink(spark, dir,
-      VectorConfig(64), "embedding", "vec_id", "seq")
-    sink.write(Tables.load(spark, sf, "embeddings").limit(25)
-      .withColumn("seq", lit(1)))
-    assert(Collections.read(spark, dir).count() == 25)
-    assert(Files.exists(java.nio.file.Paths.get(s"$dir/_manifest.json")))
-  }
-
   test("manifest commit: a crash between generation write and manifest " +
        "publish leaves readers wholly-old; the publish flips wholly-new") {
     val dir = SparkSpec.tempDir("graft-coll").toString + "/c8"
@@ -179,40 +151,6 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
     assert(now.count() == 200)
     assert(now.filter(col("vec_id") === 7).head()
       .getAs[Int]("label") >= 100)
-  }
-
-  test("legacy flat-layout collection migrates losslessly on first " +
-       "bucketed upsert") {
-    val dir = SparkSpec.tempDir("graft-coll").toString + "/c7"
-    Collections.create(dir, VectorConfig(64))
-    val emb = Tables.load(spark, sf, "embeddings").limit(40)
-      .withColumn("seq", lit(0))
-    // simulate the pre-bucket layout: plain parquet directly under data/
-    emb.write.parquet(s"$dir/data")
-    assert(Collections.read(spark, dir).count() == 40)
-
-    val sink = new Collections.ParquetCollectionSink(spark, dir,
-      VectorConfig(64), "embedding", "vec_id", "seq")
-    sink.write(emb.filter(col("vec_id") === 0)
-      .withColumn("vec_id", col("vec_id") + 50000)
-      .withColumn("seq", lit(1)))
-
-    val now = Collections.read(spark, dir)
-    assert(now.count() == 41, "legacy rows lost in migration")
-    assert(now.filter(col("vec_id") === 50000).count() == 1)
-    def looseNow = new java.io.File(s"$dir/data").listFiles()
-      .filter(_.isFile).map(_.getName)
-      .filterNot(n => n.startsWith("_") || n.startsWith("."))
-    // grace period: loose files still on disk for readers bound to them,
-    // but superseded by the manifest (read() must not double-count)
-    assert(Files.exists(java.nio.file.Paths.get(s"$dir/_manifest.json")))
-    assert(looseNow.nonEmpty)
-    // the NEXT write retires them physically
-    sink.write(emb.filter(col("vec_id") === 1)
-      .withColumn("vec_id", col("vec_id") + 60000)
-      .withColumn("seq", lit(2)))
-    assert(looseNow.isEmpty, s"legacy files survived: ${looseNow.toSeq}")
-    assert(Collections.read(spark, dir).count() == 42)
   }
 
   test("deleteWhere: only match-holding buckets rewritten; an emptied " +
@@ -1446,28 +1384,6 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
     assert(none3.schema.fieldNames.toSet == all.schema.fieldNames.toSet)
   }
 
-  test("compact migrates a loose-flat-file legacy collection into the " +
-       "manifest layout (the small-file case it exists for)") {
-    val dir = SparkSpec.tempDir("graft-coll").toString + "/c11"
-    Collections.create(dir, VectorConfig(64))
-    val emb = Tables.load(spark, sf, "embeddings").limit(40)
-      .withColumn("seq", lit(0))
-    emb.write.parquet(s"$dir/data") // pre-bucket layout: loose part files
-    val before = Collections.read(spark, dir)
-      .orderBy("vec_id").collect().toSeq
-
-    Collections.compact(spark, dir, "vec_id")
-
-    assert(Files.exists(java.nio.file.Paths.get(s"$dir/_manifest.json")),
-      "compact must publish a manifest for a legacy collection")
-    val after = Collections.read(spark, dir)
-      .orderBy("vec_id").collect().toSeq
-    assert(after == before, "legacy rows lost or changed by compact")
-    Collections.manifestView(dir).buckets.values.foreach { rel =>
-      assert(rel.startsWith("g"), s"bucket not in a generation dir: $rel")
-    }
-  }
-
   test("serving-read memo: every mutation verb evicts — serving after " +
        "build/refresh/retrain sees the new layout state, and eviction " +
        "is prefix-wide (subdir reads like _codebooks drop too)") {
@@ -1963,6 +1879,30 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
     assert(heldAfterRollback == 1,
       s"$heldAfterRollback collectionRead entries after a hand-written manifest")
 
+    // a deleteWhere that empties the collection: the manifest keeps the
+    // schema and maps no bucket, while the superseded generation is still
+    // on disk in its grace window; nothing of it may be read back
+    val live = read().columns.toSeq
+    val q = emb.filter(col("vec_id") === 0)
+      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
+    def searchAll() = Collections.search(spark, dir, "embedding", "vec_id",
+      q, 5)
+    val searchCols = searchAll().columns.toSeq
+    visible("deleteWhere empties the collection")(_ => Map.empty) {
+      assert(Collections.deleteWhere(spark, dir, lit(true), "vec_id") ==
+        expect.size)
+    }
+    assert(Collections.manifestView(dir).buckets.isEmpty)
+    assert(read().columns.toSeq == live && read().count() == 0,
+      s"the emptied read: ${read().columns.toSeq}")
+    assert(Collections.info(spark, dir).numPoints == 0)
+    val hits = searchAll()
+    assert(hits.columns.toSeq == searchCols && hits.count() == 0,
+      s"the emptied search: ${hits.columns.toSeq}")
+    val (page, next) = Collections.scroll(spark, dir, "vec_id", None, 10)
+    assert(page.columns.toSeq == live && page.count() == 0 && next.isEmpty,
+      s"the emptied scroll: ${page.columns.toSeq}")
+
     // delete, then create and upsert at the same path: the manifest
     // text is byte-identical, so only the dir's listing tells them apart
     val d2 = s"$root/c2"
@@ -2007,51 +1947,6 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
     assert(cur.buckets.isEmpty)
     assert(df.columns.toSeq == live,
       s"restored empty collection polls as ${df.columns.toSeq}, not $live")
-    assert(df.count() == 0)
-  }
-
-  test("a manifest written before the schema field: the read infers its " +
-       "schema once and is held open; an emptied collection polls with " +
-       "the schema file's schema") {
-    import java.nio.charset.StandardCharsets.UTF_8
-    import java.nio.file.Paths
-    import org.json4s.jackson.JsonMethods
-    val root = SparkSpec.tempDir("graft-noschema").toString
-    val dir = s"$root/coll"
-    new Collections.ParquetCollectionSink(spark, dir, VectorConfig(64),
-      "embedding", "vec_id", "seq")
-      .write(Tables.load(spark, sf, "embeddings").limit(40)
-        .withColumn("seq", lit(0)))
-    val live = Collections.read(spark, dir)
-    val liveRows = rowSet(live)
-    val (manifest, schemaFile) =
-      (Paths.get(s"$dir/_manifest.json"), Paths.get(s"$dir/_schema.json"))
-    // rewrite the committed manifest as an older publish left it: the
-    // schema in `_schema.json`, none in the manifest
-    def asOlderPublish(): Unit = {
-      val j = JsonMethods.parse(new String(Files.readAllBytes(manifest), UTF_8))
-      Files.write(schemaFile,
-        JsonMethods.compact(j \ "schema").getBytes(UTF_8))
-      Files.write(manifest, JsonMethods.compact(
-        j.removeField(_._1 == "schema")).getBytes(UTF_8))
-    }
-    asOlderPublish()
-    assert(!new String(Files.readAllBytes(manifest), UTF_8).contains("schema"))
-    val inferred = Collections.read(spark, dir)
-    assert(inferred.schema == live.schema && rowSet(inferred) == liveRows,
-      "the read of a schema-less manifest differs from the live read")
-    assert(jobsIn(assert(Collections.read(spark, dir) eq inferred)) == 0,
-      "the read of an unchanged schema-less manifest was not held open")
-
-    val before = Collections.manifestView(dir)
-    assert(Collections.deleteWhere(spark, dir, lit(true), "vec_id") == 40)
-    assert(!Files.exists(schemaFile),
-      "a commit with the schema in the manifest kept the schema file")
-    asOlderPublish()
-    val (cur, df, dropped) = Collections.changedSince(spark, dir, before)
-    assert(cur.buckets.isEmpty && dropped == before.buckets.keySet)
-    assert(df.columns.toSeq == live.columns.toSeq,
-      s"an emptied schema-less manifest polls as ${df.columns.toSeq}")
     assert(df.count() == 0)
   }
 
@@ -2110,5 +2005,99 @@ class CollectionsSpec extends AnyFunSuite with SparkSpec {
     assert((upsert, quantRefresh, payloadRefresh) == ((5, 1, 1)),
       s"jobs: upsert $upsert, quant refresh $quantRefresh, " +
         s"payload refresh $payloadRefresh")
+  }
+
+  // -------------------------------------------------------------------
+  // One on-disk format: the manifest is the only state
+  // -------------------------------------------------------------------
+
+  test("a never-written collection is gen 0 with no buckets, polls an " +
+       "empty feed and refuses a read, also after an empty streaming " +
+       "batch; its first real upsert reads back with the live schema") {
+    val dir = SparkSpec.tempDir("graft-unwritten").toString + "/coll"
+    Collections.create(dir, VectorConfig(64))
+    val empty = Collections.ManifestView(0, Map.empty)
+    def unreadable(when: String): Unit = {
+      val e = intercept[IllegalStateException](Collections.read(spark, dir))
+      assert(e.getMessage.contains(dir), s"$when: ${e.getMessage}")
+    }
+    assert(Collections.manifestView(dir) == empty)
+    val (cur, df, dropped) = Collections.changedSince(spark, dir, empty)
+    assert(cur == empty && df.count() == 0 && dropped.isEmpty)
+    unreadable("created")
+
+    val emb = Tables.load(spark, sf, "embeddings").limit(40)
+      .withColumn("seq", lit(0))
+    assert(Collections.upsertBatch(spark, dir, emb.limit(0), "vec_id", "seq",
+      batchId = 0))
+    assert(Collections.lastAppliedBatch(dir) == 0)
+    assert(Collections.manifestView(dir).buckets.isEmpty)
+    unreadable("after an empty batch")
+
+    assert(Collections.upsertBatch(spark, dir, emb, "vec_id", "seq",
+      batchId = 1))
+    val back = Collections.read(spark, dir)
+    assert(back.columns.toSeq == emb.columns.toSeq)
+    assert(rowSet(back) == rowSet(emb))
+  }
+
+  /** Every file under `p` with its bytes. */
+  private def fileBytes(p: String): Map[String, Seq[Byte]] = {
+    val walk = Files.walk(java.nio.file.Paths.get(p))
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => f.toString -> Files.readAllBytes(f).toSeq).toMap
+    } finally walk.close()
+  }
+
+  test("the writer refuses an entry under data/ it did not write and " +
+       "deletes nothing") {
+    val dir = SparkSpec.tempDir("graft-foreign").toString + "/coll"
+    Collections.create(dir, VectorConfig(64))
+    val emb = Tables.load(spark, sf, "embeddings").limit(40)
+      .withColumn("seq", lit(0))
+    emb.write.parquet(s"$dir/data") // loose part files, by hand
+    val before = fileBytes(dir)
+    val e = intercept[IllegalStateException] {
+      Collections.upsert(spark, dir, emb, "vec_id", "seq")
+    }
+    assert(e.getMessage.contains(s"$dir/data/"), e.getMessage)
+    assert(fileBytes(dir) == before, "the refused write changed the files")
+  }
+
+  test("a write touching a referenced bucket missing from disk fails and " +
+       "leaves the manifest unchanged") {
+    import java.nio.file.Paths
+    val dir = SparkSpec.tempDir("graft-missing").toString + "/coll"
+    val emb = Tables.load(spark, sf, "embeddings").limit(200)
+      .withColumn("seq", lit(0))
+    Collections.create(dir, VectorConfig(64))
+    Collections.upsert(spark, dir, emb, "vec_id", "seq")
+    val bucket = emb.filter(col("vec_id") === 7)
+      .select(pmod(hash(col("vec_id")), lit(Collections.numBuckets(dir))))
+      .head().getInt(0)
+    val gone = Paths.get(dir, "data",
+      Collections.manifestView(dir).buckets(bucket)).toFile
+    gone.listFiles().foreach(_.delete())
+    assert(gone.delete())
+    val manifest = Paths.get(s"$dir/_manifest.json")
+    val committed = Files.readAllBytes(manifest)
+    val one = emb.filter(col("vec_id") === 7).withColumn("seq", lit(1))
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Collections.upsert(spark, dir, one, "vec_id", "seq")
+    }
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Collections.deleteWhere(spark, dir, col("vec_id") === 7, "vec_id")
+    }
+    assert(java.util.Arrays.equals(committed, Files.readAllBytes(manifest)),
+      "a write over a missing bucket committed")
+  }
+
+  test("a collection record without its bucket count is refused") {
+    val dir = SparkSpec.tempDir("graft-meta").toString
+    Files.write(java.nio.file.Paths.get(dir, "_collection.json"),
+      """{"dim": 64, "metric": "cosine"}""".getBytes("UTF-8"))
+    intercept[IllegalStateException](Collections.numBuckets(dir))
   }
 }
