@@ -294,7 +294,6 @@ object Collections {
     * nothing is deleted. */
   private def recoverForWrite(dir: String): Manifest = {
     val state = currentState(dir)
-    Files.deleteIfExists(manifestTmp(dir))
     val dataDir = Paths.get(s"$dir/data")
     if (Files.isDirectory(dataDir)) {
       val s = Files.list(dataDir)
@@ -314,6 +313,7 @@ object Collections {
         }
       }
     }
+    Files.deleteIfExists(manifestTmp(dir))
     state
   }
 
